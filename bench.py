@@ -45,11 +45,10 @@ def build_queries(spark):
     from pyspark.sql import functions as F
 
     from information_extraction_for_chinese_nlp_spark.operators.dedup import (
+        line_dedup,
         minhash_lsh_pairs,
         ngram_jaccard_pairs,
         simhash,
-    )
-    from information_extraction_for_chinese_nlp_spark.operators.dedup import (
         simhash_near_pairs,
         simhash_near_pairs_wide,
     )
@@ -91,26 +90,28 @@ def build_queries(spark):
         "q2_dedup_minhash": lambda: minhash_lsh_pairs(
             docs, n_bands=2, rows_per_band=2, max_bucket=1000
         ).count(),
-        # the 100 TB signature budget (64 hashes, b=16×r=4) on the
-        # vectorized path: per-partition md5 minima, shuffle input =
-        # n_bands rows/doc instead of tokens×64 exploded rows
+        # the 100 TB signature budget (64 hashes, b=16×r=4): per-partition
+        # md5 minima, shuffle input = n_bands rows/doc instead of
+        # tokens×64 exploded rows
         "q2c_minhash_vec_b16r4": lambda: minhash_lsh_pairs(
-            docs, n_bands=16, rows_per_band=4, max_bucket=1000, vectorized=True
+            docs, n_bands=16, rows_per_band=4, max_bucket=1000
         ).count(),
         # max_df caps hot shingles — the setting the 100 TB run needs
         # (an uncapped hot shingle contributes O(df²) candidate pairs)
         "q3_ngram_jaccard": lambda: ngram_jaccard_pairs(
             docs, n=3, threshold=0.1, max_df=100
         ).count(),
-        "q4_simhash": lambda: simhash(docs).count(),
+        # summed, not count()ed: a count lets a relational fingerprint
+        # plan prune its md5 + vote work, so it would time nothing
+        "q4_simhash": lambda: simhash(docs).agg(F.sum("simhash")).collect(),
         # banded Hamming pairs (pigeonhole recall 1.0 at distance <= 3)
         "q4b_simhash_pairs": lambda: simhash_near_pairs(
             docs, max_hamming=3, max_bucket=1000
         ).count(),
-        # 64-bit fingerprints on the vectorized path (memoized token
-        # bit-votes, no tokens×64 explode through the shuffle)
+        # 64-bit fingerprints (memoized token bit-votes, no tokens×64
+        # explode through the shuffle)
         "q4c_simhash64_vec": lambda: simhash_near_pairs_wide(
-            docs, n_bands=8, max_hamming=7, max_bucket=1000, vectorized=True
+            docs, n_bands=8, max_hamming=7, max_bucket=1000
         ).count(),
         "q5_bruteforce_topk": lambda: brute_force_topk(emb, queries, k=10).count(),
         # exact search, vectorized: per-partition numpy matmul + local
@@ -170,12 +171,12 @@ def build_queries(spark):
         # setup (= the persisted state a real ingest run reads)
         "q10_cc_full": lambda: _cc_full(spark, cc_state).count(),
         "q10b_cc_incremental": lambda: _cc_incremental(cc_state).count(),
-        # corpus line-dedup with a 100k-line hot set: auto dispatches to
-        # the frozenset pandas-UDF leg (O(1) probe per line, zero corpus
-        # shuffle) — the in-row array scan this replaced is O(|hot|) per
-        # LINE and measured ~two orders slower here (BASELINE.md A/B,
-        # `python bench.py --line-dedup-ab`)
-        "q11_line_dedup_hot1e5": lambda: _line_dedup_force(ld_docs),
+        # corpus line-dedup with a 100k-line hot set: far past the in-row
+        # cutoff, so it runs the relational leg (broadcast hash join,
+        # O(1) probe per line) — the in-row array scan is O(|hot|) per
+        # LINE (BASELINE.md A/B, `python bench.py --line-dedup-ab`)
+        "q11_line_dedup_hot1e5": lambda: _line_dedup_force(
+            line_dedup(ld_docs, min_df=3)),
         # iterative graph analytics at corpus-independent scale: 3
         # PageRank rounds over a deterministic 2M-edge graph (200k
         # nodes, 10% of edges funneled into 100 hubs — the skew case).
@@ -349,203 +350,117 @@ def _line_dedup_fixture(spark, n_docs: int, n_hot: int):
     )
 
 
-def _line_dedup_force(docs, **kw) -> int:
-    """Run line_dedup and force FULL evaluation (a bare count() would
-    let column pruning skip the rewritten text entirely)."""
+def _line_dedup_force(out) -> int:
+    """Force FULL evaluation of a line_dedup result (a bare count()
+    would let column pruning skip the rewritten text entirely)."""
     from pyspark.sql import functions as F
 
-    from information_extraction_for_chinese_nlp_spark.operators.dedup import (
-        line_dedup,
-    )
-
-    row = (
-        line_dedup(docs, min_df=3, **kw)
-        .agg(F.sum(F.length("text")), F.sum("n_dropped").alias("nd"))
-        .collect()[0]
-    )
+    row = out.agg(
+        F.sum(F.length("text")), F.sum("n_dropped").alias("nd")
+    ).collect()[0]
     return int(row["nd"])
 
 
+def _line_dedup_legs(docs):
+    """The min_df=3 hot set of ``docs``, materialized once, and the two
+    private line_dedup legs bound to it — so an A/B times only the
+    membership/rewrite stage the hot-set size chooses between."""
+    from information_extraction_for_chinese_nlp_spark.operators.dedup import (
+        _hot_lines,
+        _line_dedup_inrow,
+        _line_dedup_relational,
+        _line_df,
+    )
+
+    hot = _hot_lines(_line_df(docs, "doc_id", "text"), 3)
+    return hot.count(), {
+        "inrow": lambda: _line_dedup_inrow(docs, hot, "doc_id", "text", ()),
+        "relational": lambda: _line_dedup_relational(
+            docs, hot, "doc_id", "text", ()),
+        "relational_no_hint": lambda: _line_dedup_relational(
+            docs, hot, "doc_id", "text", (), broadcast_hot=False),
+    }
+
+
+def _alternating_medians(legs: dict, pairs: int) -> dict:
+    """Median seconds per leg over ``pairs`` rounds, alternating which
+    leg runs first; every leg must drop the same number of lines."""
+    import statistics
+
+    names = list(legs)
+    secs = {n: [] for n in names}
+    drops = set()
+    for i in range(pairs):
+        for n in (names if i % 2 == 0 else names[::-1]):
+            t0 = time.time()
+            drops.add(_line_dedup_force(legs[n]()))
+            secs[n].append(time.time() - t0)
+    assert len(drops) == 1, drops
+    return {n: round(statistics.median(v), 2) for n, v in secs.items()}
+
+
 def run_line_dedup_ab() -> None:
-    """|hot|-scaling A/B (VERDICT r6 task 1 evidence): per-doc cost of
-    the in-row array scan grows linearly with the hot-set size, while
-    the hashset-UDF and relational legs stay flat. Appends the table to
-    BASELINE.md."""
+    """|hot|-scaling A/B behind dedup._INROW_HOT_LIMIT: the in-row
+    array scan pays O(|hot|) per line, the relational leg is flat in
+    |hot| but shuffles the corpus once. Medians of 6 alternating pairs
+    per hot-set size; appends the table to BASELINE.md."""
     from information_extraction_for_chinese_nlp_spark.session import get_spark
 
+    pairs = 6
     spark = get_spark("line-dedup-ab", master=f"local[{CPUS}]",
                       shuffle_partitions=max(CPUS, 8))
-    results: dict[tuple[int, str], float] = {}
-    for n_hot in (10_000, 100_000):
-        docs = _line_dedup_fixture(spark, n_docs=20_000, n_hot=n_hot)
-        for strat in ("inrow", "hashset", "relational"):
-            best = float("inf")
-            iters = 1 if strat == "inrow" else BENCH_ITERS
-            for _ in range(iters):
-                t0 = time.time()
-                _line_dedup_force(docs, strategy=strat)
-                best = min(best, time.time() - t0)
-            results[(n_hot, strat)] = round(best, 2)
-            print(json.dumps({"n_hot": n_hot, "strategy": strat,
-                              "sec": results[(n_hot, strat)]}))
-    spark.stop()
     lines = [
         "",
-        "## line_dedup membership-cost A/B (20k docs x 30 lines; "
-        "hashset/relational min-of-k, inrow single-run)",
+        "## line_dedup leg A/B (20k docs x 30 lines, local[%d], "
+        "median of %d alternating pairs)" % (CPUS, pairs),
         "",
-        "| strategy | hot=10k sec | hot=100k sec | 10x-hot cost ratio |",
-        "| --- | --- | --- | --- |",
+        "| hot lines | in-row sec | relational sec |",
+        "| --- | --- | --- |",
     ]
-    for strat in ("inrow", "hashset", "relational"):
-        a, b = results[(10_000, strat)], results[(100_000, strat)]
-        lines.append(f"| {strat} | {a} | {b} | {b / a:.2f}x |")
-    lines += [
-        "",
-        "The in-row `array_contains` scan pays O(|hot|) per line; the",
-        "frozenset-UDF and broadcast-join legs are O(1) per line and flat",
-        "in |hot| — auto dispatch uses inrow only below "
-        "`inrow_hot_limit` (default 2k).",
-        "",
-    ]
+    for n_hot in (16, 64, 256, 1_000):
+        docs = _line_dedup_fixture(spark, n_docs=20_000, n_hot=n_hot)
+        got, legs = _line_dedup_legs(docs)
+        assert got == n_hot, (got, n_hot)
+        med = _alternating_medians(
+            {k: legs[k] for k in ("inrow", "relational")}, pairs)
+        print(json.dumps({"n_hot": n_hot, **med}))
+        lines.append(f"| {n_hot} | {med['inrow']} | {med['relational']} |")
+    spark.stop()
     with open(os.path.join(os.path.dirname(os.path.abspath(__file__)),
                            "BASELINE.md"), "a") as f:
-        f.write("\n".join(lines))
+        f.write("\n".join(lines) + "\n")
 
 
 def run_line_dedup_oversized() -> None:
-    """Oversized-hot-set A/B (VERDICT r7 task 1 evidence): the
-    relational leg at a hot set of 1M distinct lines — 10x the r6 A/B's
-    100k and at the default broadcast-budget boundary — WITH the
-    F.broadcast hint vs WITHOUT it (broadcast_hot_limit=0, the plan auto
-    takes past the budget). Proves the escape hatch is genuinely
-    unbounded: the unhinted plan completes with identical drop counts,
-    paying one extra line-key exchange. Appends the table to
+    """Oversized-hot-set A/B behind dedup._BROADCAST_HOT_LIMIT: the
+    relational leg at a hot set of 1M distinct lines WITH the
+    F.broadcast hint vs WITHOUT it (the plan past the limit). Same
+    drops either way; the unhinted plan pays one extra line-key
+    exchange. Medians of 3 alternating pairs; appends the table to
     BASELINE.md."""
     from information_extraction_for_chinese_nlp_spark.session import get_spark
 
+    pairs = 3
     spark = get_spark("line-dedup-oversized", master=f"local[{CPUS}]",
                       shuffle_partitions=max(CPUS, 8))
     # 200k docs x 15 hot slots / 1M values = every hot value in exactly
     # 3 distinct docs = min_df boundary; 6M total lines
     docs = _line_dedup_fixture(spark, n_docs=200_000, n_hot=1_000_000)
-    results: dict[str, float] = {}
-    drops: dict[str, int] = {}
-    legs = {"relational_bcast": {}, "relational_shuffle":
-            {"broadcast_hot_limit": 0}}
-    for leg, kw in legs.items():
-        best = float("inf")
-        for _ in range(BENCH_ITERS):
-            t0 = time.time()
-            nd = _line_dedup_force(docs, strategy="relational", **kw)
-            best = min(best, time.time() - t0)
-        results[leg], drops[leg] = round(best, 2), nd
-        print(json.dumps({"leg": leg, "sec": results[leg],
-                          "n_dropped": nd}))
-    assert drops["relational_bcast"] == drops["relational_shuffle"], drops
+    _, legs = _line_dedup_legs(docs)
+    med = _alternating_medians(
+        {k: legs[k] for k in ("relational", "relational_no_hint")}, pairs)
+    print(json.dumps(med))
     spark.stop()
-    a, b = results["relational_bcast"], results["relational_shuffle"]
     lines = [
         "",
         "## line_dedup oversized-hot-set A/B (200k docs x 30 lines, "
-        "|hot|=1M distinct lines; min-of-%d)" % BENCH_ITERS,
+        "|hot|=1M distinct lines, local[%d], median of %d alternating "
+        "pairs)" % (CPUS, pairs),
         "",
-        "| leg | sec | n_dropped |",
-        "| --- | --- | --- |",
-        f"| relational + broadcast hint | {a} | {drops['relational_bcast']} |",
-        f"| relational, no hint (AQE shuffle join) | {b} | "
-        f"{drops['relational_shuffle']} |",
-        "",
-        f"Unhinted/hinted wall ratio {b / a:.2f}x (identical n_dropped).",
-        "Past `broadcast_hot_limit` the leg drops the hint, so the",
-        "escape hatch no longer re-imposes the cap it exists to escape.",
-        "Locally the unhinted plan can WIN (the line-key exchange is an",
-        "intra-box copy; the hinted plan pays a driver-side HashedRelation",
-        "build + broadcast); the 4M-row default stays cluster-sized, where",
-        "re-shuffling the corpus-sized exploded side over the network",
-        "dwarfs a <=~100 MB hot-set broadcast.",
-        "",
-    ]
-    with open(os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                           "BASELINE.md"), "a") as f:
-        f.write("\n".join(lines))
-
-
-def run_ann_ab() -> None:
-    """q5b plan-shape A/B (VERDICT r6 task 4): single-pass ann_topk
-    (vector rides through the bucket projection) vs the two-scan
-    join-back shape (buckets computed narrow, vectors re-attached by an
-    id-keyed join — which re-executes the corpus scan for the second
-    alias AND pays an exchange). Parquet-backed corpora at sf1-scale
-    (20k vectors, 10x the sf0.1 embeddings table) and 10x that, so the
-    scan-count difference is real I/O. Appends the table to BASELINE.md.
-    """
-    import tempfile
-
-    from pyspark.sql import functions as F
-
-    from information_extraction_for_chinese_nlp_spark.operators.similarity import (
-        ann_topk,
-        ann_topk_two_scan,
-    )
-    from information_extraction_for_chinese_nlp_spark.session import get_spark
-
-    spark = get_spark("ann-ab", master=f"local[{CPUS}]",
-                      shuffle_partitions=max(CPUS, 8))
-    results: dict[tuple[int, str], float] = {}
-    rows_check: dict[tuple[int, str], int] = {}
-    with tempfile.TemporaryDirectory() as td:
-        for n_vecs in (20_000, 200_000):
-            path = os.path.join(td, f"emb{n_vecs}")
-            spark.range(n_vecs).select(
-                F.col("id").alias("vec_id"),
-                F.transform(
-                    F.sequence(F.lit(0), F.lit(31)),
-                    lambda d: (
-                        F.pmod(F.xxhash64(F.col("id"), d), 1000) / 1000.0
-                        + (F.pmod(F.col("id"), 16) == F.pmod(d, 16)).cast(
-                            "double"
-                        )
-                        * 2.0
-                    ),
-                ).alias("embedding"),
-            ).write.mode("overwrite").parquet(path)
-            corpus = spark.read.parquet(path)
-            queries = corpus.filter(F.col("vec_id") < 100)
-            for label, fn in (("single_pass", ann_topk),
-                              ("two_scan", ann_topk_two_scan)):
-                best = float("inf")
-                for _ in range(BENCH_ITERS):
-                    t0 = time.time()
-                    n = fn(corpus, queries, k=10, n_planes=6,
-                           max_hamming=1).count()
-                    best = min(best, time.time() - t0)
-                results[(n_vecs, label)] = round(best, 2)
-                rows_check[(n_vecs, label)] = n
-                print(json.dumps({"n_vecs": n_vecs, "shape": label,
-                                  "sec": results[(n_vecs, label)],
-                                  "rows": n}))
-            assert (rows_check[(n_vecs, "single_pass")]
-                    == rows_check[(n_vecs, "two_scan")])
-    spark.stop()
-    lines = [
-        "",
-        "## ann_topk plan-shape A/B: single-pass vs two-scan join-back "
-        "(parquet corpus, min-of-k)",
-        "",
-        "| corpus | single-pass sec | two-scan sec | two-scan / single |",
-        "| --- | --- | --- | --- |",
-    ]
-    for n_vecs in (20_000, 200_000):
-        a = results[(n_vecs, "single_pass")]
-        b = results[(n_vecs, "two_scan")]
-        lines.append(f"| {n_vecs} vecs (sf{n_vecs // 20000}) | {a} | {b} "
-                     f"| {b / a:.2f}x |")
-    lines += [
-        "",
-        "Both shapes return identical rows; the two-scan shape re-reads",
-        "the corpus parquet for the join-back alias and adds an id-keyed",
-        "exchange.",
+        "| relational leg | sec |",
+        "| --- | --- |",
+        f"| broadcast hint | {med['relational']} |",
+        f"| no hint (AQE shuffle join) | {med['relational_no_hint']} |",
         "",
     ]
     with open(os.path.join(os.path.dirname(os.path.abspath(__file__)),
@@ -949,8 +864,7 @@ def run_sf1() -> None:
             "q3_ngram_jaccard": lambda: ngram_jaccard_pairs(
                 docs, n=3, threshold=0.1, max_df=100).count(),
             "q4c_simhash64_vec": lambda: simhash_near_pairs_wide(
-                docs, n_bands=8, max_hamming=7, max_bucket=1000,
-                vectorized=True).count(),
+                docs, n_bands=8, max_hamming=7, max_bucket=1000).count(),
             "q5b_lsh_ann": lambda: ann_topk(
                 emb, queries, k=10, n_planes=6, max_hamming=1).count(),
             "q8_dataprep": lambda: _dataprep_count(spark, docs),
@@ -1003,8 +917,6 @@ if __name__ == "__main__":
         run_line_dedup_ab()
     elif "--line-dedup-oversized" in sys.argv:
         run_line_dedup_oversized()
-    elif "--ann-ab" in sys.argv:
-        run_ann_ab()
     elif "--skew-ab" in sys.argv:
         run_skew_ab()
     elif "--sf1" in sys.argv:

@@ -152,7 +152,7 @@ def build_frames(spark):
             docs, n_bands=2, rows_per_band=2, max_bucket=1000
         ),
         "q2c_minhash_vec_b16r4": lambda: minhash_lsh_pairs(
-            docs, n_bands=16, rows_per_band=4, max_bucket=1000, vectorized=True
+            docs, n_bands=16, rows_per_band=4, max_bucket=1000
         ),
         "q3_ngram_jaccard": lambda: ngram_jaccard_pairs(
             docs, n=3, threshold=0.1, max_df=100
@@ -162,7 +162,7 @@ def build_frames(spark):
             docs, max_hamming=3, max_bucket=1000
         ),
         "q4c_simhash64_vec": lambda: simhash_near_pairs_wide(
-            docs, n_bands=8, max_hamming=7, max_bucket=1000, vectorized=True
+            docs, n_bands=8, max_hamming=7, max_bucket=1000
         ),
         "q5_bruteforce_topk": lambda: brute_force_topk(emb, queries, k=10),
         "q5d_matmul_topk": lambda: matmul_topk(emb, queries, k=10),
@@ -229,6 +229,12 @@ def main() -> None:
         import contextlib
         import io
 
+        if explain_key not in frames:
+            spark.stop()
+            raise SystemExit(
+                f"unknown --explain key {explain_key!r}; valid keys: "
+                + ", ".join(frames)
+            )
         built = frames[explain_key]()
         parts = built if isinstance(built, tuple) else (built,)
         chunks = []
@@ -239,7 +245,8 @@ def main() -> None:
             chunks.append(f"-- output {i}:\n" + buf.getvalue())
         text = "\n\n".join(chunks)
         if out:
-            os.makedirs(os.path.dirname(out), exist_ok=True)
+            if os.path.dirname(out):
+                os.makedirs(os.path.dirname(out), exist_ok=True)
             with open(out, "w") as f:
                 f.write(text)
             print(f"wrote {out}")

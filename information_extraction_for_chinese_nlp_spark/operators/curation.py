@@ -59,7 +59,6 @@ def curate(
     n_bands: int = 4,
     rows_per_band: int = 2,
     max_bucket: int | None = 10_000,
-    vectorized: bool = True,
     observation=None,
 ) -> DataFrame:
     """(line-level boilerplate removal) -> dedup -> (decontaminate) ->
@@ -86,8 +85,7 @@ def curate(
         )
     out = dedup_pipeline(
         docs, n_bands, rows_per_band, id_col, text_col,
-        max_bucket=max_bucket, vectorized=vectorized,
-        observation=observation, checkpoint=True,
+        max_bucket=max_bucket, observation=observation, checkpoint=True,
     )
     if eval_docs is not None:
         # boundary: the dedup result feeds decontaminate's n-gram probe

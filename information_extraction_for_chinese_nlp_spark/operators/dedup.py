@@ -3,25 +3,25 @@
 All four families are expressed as shuffle-lean DataFrame plans:
 
 - exact: hash-groupBy on md5(text) — one shuffle, map-side combine.
-- MinHash + LSH: per-seed minima (Catalyst agg or vectorized
-  per-partition) -> band buckets -> JVM-side pair expansion inside each
-  bucket; candidate generation is output-bound, and there is NO
+- MinHash + LSH: per-seed minima computed per partition in one Arrow
+  ``mapInPandas`` -> band buckets -> JVM-side pair expansion inside
+  each bucket; candidate generation is output-bound, and there is NO
   self-join anywhere (Spark re-executes the upstream pipeline for a
   self-join's second alias — measured).
-- SimHash: per-bit majority vote over token hashes (Catalyst agg or
-  vectorized per-partition), 16/32-bit packed or 64-bit two-word,
+- SimHash: per-bit majority vote over token hashes (one Arrow
+  ``mapInPandas``), 16/32-bit packed or 64-bit two-word,
   pigeonhole-banded near-pairs with exact bit_count verify.
 - n-gram Jaccard: ONE aggregation chain — set sizes ride as a
   projection through the shingle inverted index's bucket structs, so
   |A∩B| and |A|,|B| come out of the same pair expansion.
 
 All hashes are md5-hex (engine-portable: identical in DuckDB, so every
-operator here is oracle-checkable).
+operator here is oracle-checkable). The relational (Catalyst)
+formulations of MinHash and SimHash live in
+``tests/catalyst_reference.py`` as the parity references.
 """
 
 from __future__ import annotations
-
-import warnings
 
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -39,7 +39,6 @@ def dedup_exact(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text")
 def dedup_pipeline(docs: DataFrame, n_bands: int = 4, rows_per_band: int = 2,
                    id_col: str = "doc_id", text_col: str = "text",
                    max_bucket: int | None = 10_000,
-                   vectorized: bool = True,
                    observation=None,
                    checkpoint: bool = False) -> DataFrame:
     """The standard 100 TB dedup recipe as ONE composed plan:
@@ -72,8 +71,7 @@ def dedup_pipeline(docs: DataFrame, n_bands: int = 4, rows_per_band: int = 2,
         canonical = canonical.localCheckpoint(eager=False)
     pairs = minhash_lsh_pairs(
         canonical, n_bands, rows_per_band, id_col, text_col,
-        max_bucket=max_bucket, vectorized=vectorized,
-        observation=observation,
+        max_bucket=max_bucket, observation=observation,
     )
     comp = connected_components(pairs, src="doc_a", dst="doc_b")
     losers = comp.filter(F.col("node") != F.col("component")).select(
@@ -212,34 +210,9 @@ def decontaminate(docs: DataFrame, eval_docs: DataFrame, n: int = 8,
     )
 
 
-def minhash_signatures(docs: DataFrame, n_seeds: int = 4,
-                       id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
-    """-> (doc_id, seed, minhash): per-seed min of md5(token#seed)
-    (Broder '97 min-wise independent permutations; b×r banding per
-    Leskovec/Rajaraman/Ullman, MMDS ch.3).
-
-    String-min over md5 hex is a valid min-wise hash family and is
-    byte-identical across engines.
-    """
-    words = docs.select(
-        F.col(id_col).alias("doc_id"),
-        F.explode(F.array_distinct(tokens(F.col(text_col)))).alias("w"),
-    )
-    seeded = words.select(
-        "doc_id",
-        F.explode(F.sequence(F.lit(0), F.lit(n_seeds - 1))).alias("seed"),
-        "w",
-    )
-    return seeded.groupBy("doc_id", "seed").agg(
-        F.min(F.md5(F.concat_ws("#", "w", "seed"))).alias("minhash")
-    )
-
-
-def _np_minhash_rows(n_seeds: int, id_col: str, text_col: str,
-                     memo_cap: int | None = None):
-    """Per-doc md5 minima computed INSIDE an Arrow batch — the same hash
-    family as ``minhash_signatures`` (min over md5-hex of token#seed),
-    byte-identical output, but nothing explodes through a shuffle.
+def _md5_minima_factory(n_seeds: int, memo_cap: int | None = None):
+    """Per-doc md5 minima computed INSIDE an Arrow batch (min over
+    md5-hex of token#seed), so nothing explodes through a shuffle.
 
     Returns a FACTORY: call it once per partition to get a doc->minima
     function with its own token-digest memo. Corpus vocabulary is
@@ -291,39 +264,58 @@ def _np_minhash_rows(n_seeds: int, id_col: str, text_col: str,
     return make_doc_minima
 
 
-def minhash_signatures_np(docs: DataFrame, n_seeds: int = 4,
-                          id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
-    """Vectorized scale path for ``minhash_signatures``: identical
-    (doc_id, seed, minhash) rows, but signatures are computed
-    per-partition in a single ``mapInPandas`` — the Catalyst version
-    shuffles tokens × n_seeds rows (at the b×r budgets a 100 TB dedup
-    wants, 64-128 hashes, that multiplies shuffle volume accordingly);
-    here the shuffle input is n_seeds rows per document, full stop."""
-    import pandas as pd
-
-    make_doc_minima = _np_minhash_rows(n_seeds, id_col, text_col)
+def _minhash_bands(docs: DataFrame, n_bands: int, rows_per_band: int,
+                   id_col: str, text_col: str) -> DataFrame:
+    """-> (doc_id, band_id, band): each document's n_bands band strings
+    (its rows_per_band consecutive minhashes, '|'-joined) from ONE
+    ``mapInPandas`` — the shuffle input is n_bands rows per document,
+    not the tokens × n_seeds rows a token-explode + per-seed
+    aggregation would shuffle. A NULL text emits no rows (as
+    explode(NULL) would)."""
+    make_doc_minima = _md5_minima_factory(n_bands * rows_per_band)
     id_type = docs.schema[id_col].dataType.simpleString()
 
-    def sig_map(batches):
+    def band_map(batches):
         from ..functions.worker import pin_worker_threads
 
         pin_worker_threads()
         doc_minima = make_doc_minima()
         for pdf in batches:
-            out_id, out_seed, out_min = [], [], []
+            out_id, out_bid, out_band = [], [], []
             for doc_id, text in zip(pdf[id_col], pdf[text_col]):
-                if text is None:  # Catalyst parity: explode(null) drops the doc
+                if text is None:
                     continue
-                for s, mh in enumerate(doc_minima(text)):
+                mins = doc_minima(text)
+                for b in range(n_bands):
                     out_id.append(doc_id)
-                    out_seed.append(s)
-                    out_min.append(mh)
+                    out_bid.append(b)
+                    out_band.append(
+                        "|".join(mins[b * rows_per_band:(b + 1) * rows_per_band])
+                    )
             yield pd.DataFrame(
-                {"doc_id": out_id, "seed": out_seed, "minhash": out_min}
+                {"doc_id": out_id, "band_id": out_bid, "band": out_band}
             )
 
     return docs.select(id_col, text_col).mapInPandas(
-        sig_map, f"doc_id {id_type}, seed int, minhash string"
+        band_map, f"doc_id {id_type}, band_id int, band string"
+    )
+
+
+def minhash_signatures(docs: DataFrame, n_seeds: int = 4,
+                       id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
+    """-> (doc_id, seed, minhash): per-seed min of md5(token#seed)
+    (Broder '97 min-wise independent permutations; b×r banding per
+    Leskovec/Rajaraman/Ullman, MMDS ch.3).
+
+    String-min over md5 hex is a valid min-wise hash family and is
+    byte-identical across engines (the DuckDB oracle computes it as a
+    token explode + per-seed min). A signature is a band of one row,
+    so this is :func:`_minhash_bands` at rows_per_band=1.
+
+    Signatures are per input ROW: a ``doc_id`` that appears twice gets
+    two sets of ``n_seeds`` rows, one per text (NULL texts get none)."""
+    return _minhash_bands(docs, n_seeds, 1, id_col, text_col).toDF(
+        "doc_id", "seed", "minhash"
     )
 
 
@@ -385,7 +377,6 @@ def _bucket_pairs(ids):
 def minhash_lsh_pairs(docs: DataFrame, n_bands: int = 4, rows_per_band: int = 2,
                       id_col: str = "doc_id", text_col: str = "text",
                       max_bucket: int | None = 10_000,
-                      vectorized: bool = True,
                       observation=None) -> DataFrame:
     """-> (doc_a, doc_b) candidate near-dup pairs sharing at least one band.
 
@@ -421,64 +412,14 @@ def minhash_lsh_pairs(docs: DataFrame, n_bands: int = 4, rows_per_band: int = 2,
     the first action. Run ``dedup_pipeline`` (exact pre-pass first)
     rather than raising the cap when exact dups are the cause.
 
-    ``vectorized=True`` (the DEFAULT since r8) computes band strings
-    per document inside ONE ``mapInPandas`` (same md5 family — pair set
-    is identical, parity tested) instead of the token-explode + per-seed
-    aggregation, cutting the plan from two shuffles to one and the
-    shuffle input from tokens × n_seeds rows to n_bands rows per
-    document. Originally the opt-in scale path for large signature
-    budgets (n_seeds ≥ 16); the r8 A/B measured it ahead even at the
-    smallest budget (b=2×r=2 on the sf0.1 corpus: 1.02s vs 1.50s
-    min-of-4), so it is now the default at every budget.
-    ``vectorized=False`` keeps the pure-Catalyst formulation (the
-    DuckDB-oracle twin and the no-Python-workers option).
+    Band strings come from :func:`_minhash_bands` (one ``mapInPandas``),
+    so the plan has exactly two shuffles: the bucket aggregation and
+    the pair distinct. It measured ahead of the Catalyst
+    token-explode + per-seed aggregation (four shuffles) at every
+    signature budget, even the smallest (b=2×r=2 on the sf0.1 corpus:
+    1.02s vs 1.50s min-of-4).
     """
-    if vectorized:
-        import pandas as pd
-
-        make_doc_minima = _np_minhash_rows(n_bands * rows_per_band, id_col,
-                                           text_col)
-        id_type = docs.schema[id_col].dataType.simpleString()
-
-        def band_map(batches):
-            from ..functions.worker import pin_worker_threads
-
-            pin_worker_threads()
-            doc_minima = make_doc_minima()
-            for pdf in batches:
-                out_id, out_bid, out_band = [], [], []
-                for doc_id, text in zip(pdf[id_col], pdf[text_col]):
-                    if text is None:
-                        continue
-                    mins = doc_minima(text)
-                    for b in range(n_bands):
-                        out_id.append(doc_id)
-                        out_bid.append(b)
-                        out_band.append(
-                            "|".join(mins[b * rows_per_band:(b + 1) * rows_per_band])
-                        )
-                yield pd.DataFrame(
-                    {"doc_id": out_id, "band_id": out_bid, "band": out_band}
-                )
-
-        banded = docs.select(id_col, text_col).mapInPandas(
-            band_map, f"doc_id {id_type}, band_id int, band string"
-        )
-    else:
-        sigs = minhash_signatures(docs, n_bands * rows_per_band, id_col, text_col)
-        banded = (
-            sigs.withColumn("band_id", (F.col("seed") / rows_per_band).cast("int"))
-            .groupBy("doc_id", "band_id")
-            .agg(
-                F.array_join(
-                    F.transform(
-                        F.array_sort(F.collect_list(F.struct("seed", "minhash"))),
-                        lambda s: s["minhash"],
-                    ),
-                    "|",
-                ).alias("band")
-            )
-        )
+    banded = _minhash_bands(docs, n_bands, rows_per_band, id_col, text_col)
     buckets = (
         banded.groupBy("band_id", "band")
         .agg(F.array_sort(F.collect_list("doc_id")).alias("ids"))
@@ -492,58 +433,17 @@ def minhash_lsh_pairs(docs: DataFrame, n_bands: int = 4, rows_per_band: int = 2,
     )
 
 
-def simhash(docs: DataFrame, n_bits: int = 16,
-            id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
-    """-> (doc_id, simhash): n_bits-bit majority fingerprint.
-
-    Bit b of a token = parity of hex digit b of md5(token); fingerprint
-    bit b = 1 iff the +1/-1 vote over distinct tokens is positive.
-    """
-    if n_bits > 32:
-        # one hex digit per bit: past 32 the substring is '' and
-        # instr('', ...) silently votes every high bit to 0 — identical
-        # high bands for ALL docs (O(N²) bucket blowup) and understated
-        # Hamming distances. simhash_np already raises; mirror it.
-        raise ValueError("md5 has 32 hex digits; use simhash_wide for n_bits > 32")
-    words = docs.select(
-        F.col(id_col).alias("doc_id"),
-        F.explode(F.array_distinct(tokens(F.col(text_col)))).alias("w"),
-    ).withColumn("h", F.md5("w"))
-    bits = words.select(
-        "doc_id",
-        F.explode(F.sequence(F.lit(0), F.lit(n_bits - 1))).alias("bit"),
-        "h",
-    ).withColumn(
-        "vote",
-        F.when(
-            (F.instr(F.lit("0123456789abcdef"), F.substring("h", F.col("bit") + 1, 1)) - 1)
-            % 2
-            == 1,
-            1,
-        ).otherwise(-1),
-    )
-    votes = bits.groupBy("doc_id", "bit").agg(F.sum("vote").alias("v"))
-    return votes.groupBy("doc_id").agg(
-        F.sum(
-            F.when(F.col("v") > 0, F.pow(F.lit(2.0), F.col("bit"))).otherwise(0.0)
-        )
-        .cast("long")
-        .alias("simhash")
-    )
-
-
-def _np_simhash_words(n_bits: int, memo_cap: int | None = None):
+def _simhash_words_factory(n_bits: int, memo_cap: int | None = None):
     """Factory (one per partition) for doc -> packed fingerprint words.
 
-    Same bit family as the Catalyst ops: bit b of a token = bit (b//32)
-    of md5 hex digit (b%32); fingerprint bit = positive ±1 vote over
-    distinct tokens. Token bit-vectors are memoized (Zipfian vocab) and
-    votes accumulate in one numpy add per token, so the per-doc cost is
-    O(|tokens|) instead of the tokens×n_bits exploded shuffle rows of
-    the Catalyst formulation. Returns the fingerprint as a list of
-    32-bit words, low word first (1 word for n_bits ≤ 32, two for 64).
-    ``memo_cap`` defaults to a ~32 MB per-worker byte budget
-    (entries × n_bits × 8-byte votes)."""
+    Bit b of a token = bit (b//32) of md5 hex digit (b%32); fingerprint
+    bit = positive ±1 vote over distinct tokens. Token bit-vectors are
+    memoized (Zipfian vocab) and votes accumulate in one numpy add per
+    token, so the per-doc cost is O(|tokens|) instead of the
+    tokens×n_bits exploded shuffle rows of a relational formulation.
+    Returns the fingerprint as a list of 32-bit words, low word first
+    (1 word for n_bits ≤ 32, two for 64). ``memo_cap`` defaults to a
+    ~32 MB per-worker byte budget (entries × n_bits × 8-byte votes)."""
     import numpy as np
 
     if memo_cap is None:
@@ -587,67 +487,58 @@ def _np_simhash_words(n_bits: int, memo_cap: int | None = None):
     return make_doc_words
 
 
-def simhash_np(docs: DataFrame, n_bits: int = 16, id_col: str = "doc_id",
-               text_col: str = "text") -> DataFrame:
-    """Vectorized scale path for ``simhash`` (n_bits ≤ 32): identical
-    (doc_id, simhash) output, computed per-partition in one
-    mapInPandas — no tokens×n_bits explode through the shuffle."""
-    import pandas as pd
+def _simhash_fp(docs: DataFrame, n_bits: int, word_cols: tuple,
+                id_col: str, text_col: str) -> DataFrame:
+    """-> (doc_id, *word_cols): fingerprints from ONE ``mapInPandas``,
+    ``word_cols`` naming the 32-bit words low word first. A NULL text
+    emits no row (as explode(NULL) would)."""
+    make_doc_words = _simhash_words_factory(n_bits)
+    id_type = docs.schema[id_col].dataType.simpleString()
 
+    def fp_map(batches):
+        from ..functions.worker import pin_worker_threads
+
+        pin_worker_threads()
+        doc_words = make_doc_words()
+        for pdf in batches:
+            out_id, out_words = [], []
+            for doc_id, text in zip(pdf[id_col], pdf[text_col]):
+                if text is None:
+                    continue
+                out_id.append(doc_id)
+                out_words.append(doc_words(text))
+            yield pd.DataFrame({
+                "doc_id": out_id,
+                **{c: [ws[i] for ws in out_words]
+                   for i, c in enumerate(word_cols)},
+            })
+
+    return docs.select(id_col, text_col).mapInPandas(
+        fp_map,
+        f"doc_id {id_type}, " + ", ".join(f"{c} long" for c in word_cols),
+    )
+
+
+def simhash(docs: DataFrame, n_bits: int = 16,
+            id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
+    """-> (doc_id, simhash): n_bits-bit majority fingerprint (n_bits ≤ 32).
+
+    Bit b of a token = parity of hex digit b of md5(token); fingerprint
+    bit b = 1 iff the +1/-1 vote over distinct tokens is positive.
+    Computed per partition in one ``mapInPandas`` (see
+    :func:`_simhash_words_factory`); the DuckDB oracle's token explode +
+    per-bit vote is byte-identical. ``bench.py`` q4 times this path
+    fully evaluated (BASELINE.md has it against the explode/vote
+    formulation in Catalyst).
+
+    One output row per input row with a non-NULL text: a ``doc_id``
+    that appears twice gets two fingerprints, one per text.
+    """
     if n_bits > 32:
-        raise ValueError("use simhash_wide_np for n_bits > 32")
-    make_doc_words = _np_simhash_words(n_bits)
-    id_type = docs.schema[id_col].dataType.simpleString()
-
-    def fp_map(batches):
-        from ..functions.worker import pin_worker_threads
-
-        pin_worker_threads()
-        doc_words = make_doc_words()
-        for pdf in batches:
-            out_id, out_fp = [], []
-            for doc_id, text in zip(pdf[id_col], pdf[text_col]):
-                if text is None:
-                    continue
-                out_id.append(doc_id)
-                out_fp.append(doc_words(text)[0])
-            yield pd.DataFrame({"doc_id": out_id, "simhash": out_fp})
-
-    return docs.select(id_col, text_col).mapInPandas(
-        fp_map, f"doc_id {id_type}, simhash long"
-    )
-
-
-def simhash_wide_np(docs: DataFrame, id_col: str = "doc_id",
-                    text_col: str = "text") -> DataFrame:
-    """Vectorized scale path for ``simhash_wide``: identical
-    (doc_id, sim_hi, sim_lo) output from one mapInPandas."""
-    import pandas as pd
-
-    make_doc_words = _np_simhash_words(64)
-    id_type = docs.schema[id_col].dataType.simpleString()
-
-    def fp_map(batches):
-        from ..functions.worker import pin_worker_threads
-
-        pin_worker_threads()
-        doc_words = make_doc_words()
-        for pdf in batches:
-            out_id, out_hi, out_lo = [], [], []
-            for doc_id, text in zip(pdf[id_col], pdf[text_col]):
-                if text is None:
-                    continue
-                lo, hi = doc_words(text)
-                out_id.append(doc_id)
-                out_hi.append(hi)
-                out_lo.append(lo)
-            yield pd.DataFrame(
-                {"doc_id": out_id, "sim_hi": out_hi, "sim_lo": out_lo}
-            )
-
-    return docs.select(id_col, text_col).mapInPandas(
-        fp_map, f"doc_id {id_type}, sim_hi long, sim_lo long"
-    )
+        # one hex digit per bit: md5 has 32, and past them the high
+        # bits would all vote 0 — identical high bands for ALL docs
+        raise ValueError("md5 has 32 hex digits; use simhash_wide for n_bits > 32")
+    return _simhash_fp(docs, n_bits, ("simhash",), id_col, text_col)
 
 
 def simhash_wide(docs: DataFrame, id_col: str = "doc_id",
@@ -664,47 +555,24 @@ def simhash_wide(docs: DataFrame, id_col: str = "doc_id",
     arithmetic step inside exact double/BIGINT range on BOTH engines
     (packing bit 63 would overflow a signed long / lose double mantissa
     precision), so the operator stays oracle-checkable.
+
+    One output row per input row with a non-NULL text, as ``simhash``.
     """
-    words = docs.select(
-        F.col(id_col).alias("doc_id"),
-        F.explode(F.array_distinct(tokens(F.col(text_col)))).alias("w"),
-    ).withColumn("h", F.md5("w"))
-    digit = (
-        F.instr(F.lit("0123456789abcdef"), F.substring("h", F.col("bit") % 32 + 1, 1))
-        - 1
-    )
-    bitval = F.when(F.col("bit") < 32, digit % 2).otherwise((digit / 2).cast("int") % 2)
-    bits = words.select(
-        "doc_id",
-        F.explode(F.sequence(F.lit(0), F.lit(63))).alias("bit"),
-        "h",
-    ).withColumn("vote", F.when(bitval == 1, 1).otherwise(-1))
-    votes = bits.groupBy("doc_id", "bit").agg(F.sum("vote").alias("v"))
-    return votes.groupBy("doc_id").agg(
-        F.sum(
-            F.when((F.col("v") > 0) & (F.col("bit") >= 32),
-                   F.pow(F.lit(2.0), F.col("bit") - 32)).otherwise(0.0)
-        ).cast("long").alias("sim_hi"),
-        F.sum(
-            F.when((F.col("v") > 0) & (F.col("bit") < 32),
-                   F.pow(F.lit(2.0), F.col("bit"))).otherwise(0.0)
-        ).cast("long").alias("sim_lo"),
-    )
+    return _simhash_fp(
+        docs, 64, ("sim_lo", "sim_hi"), id_col, text_col
+    ).select("doc_id", "sim_hi", "sim_lo")
 
 
 def simhash_near_pairs_wide(docs: DataFrame, n_bands: int = 8,
                             max_hamming: int = 7, id_col: str = "doc_id",
                             text_col: str = "text",
                             max_bucket: int | None = None,
-                            vectorized: bool = False,
                             observation=None) -> DataFrame:
     """64-bit variant of ``simhash_near_pairs``: pigeonhole banding over
     the (sim_hi, sim_lo) fingerprint (the block-permutation trick of
     Manku/Jain/Sarma, WWW'07), recall 1.0 for Hamming distance ≤
     n_bands-1, exact ``bit_count(xor)`` verify per word. Bands must not
     straddle the word boundary (32 % (64/n_bands) == 0).
-    ``vectorized=True`` computes fingerprints via ``simhash_wide_np``
-    (identical output, no tokens×64 explode).
 
     ``max_bucket`` defaults OFF here, unlike ``minhash_lsh_pairs``: a
     SimHash band has only 2^(64/n_bands) possible values (256 at the
@@ -724,7 +592,7 @@ def simhash_near_pairs_wide(docs: DataFrame, n_bands: int = 8,
             f"max_hamming={max_hamming} exceeds the pigeonhole recall bound "
             f"n_bands-1={n_bands - 1}; raise n_bands or lower max_hamming"
         )
-    fp = (simhash_wide_np if vectorized else simhash_wide)(docs, id_col, text_col)
+    fp = simhash_wide(docs, id_col, text_col)
     mask = (1 << bpb) - 1
     band_vals = F.array(
         *[
@@ -905,13 +773,30 @@ def ngram_jaccard_pairs(docs: DataFrame, n: int = 3, threshold: float = 0.1,
     )
 
 
+# Hot-set size at or below which line_dedup takes the in-row leg: the
+# two legs tie at 64. Medians of 6 alternating pairs per leg at local[4]
+# on bench._line_dedup_fixture (20k docs x 30 lines, hot set prebuilt),
+# in-row vs relational: 0.66s vs 1.10s at 16 hot lines, 0.87s vs 0.86s
+# at 64, 2.34s vs 0.78s at 256, 7.41s vs 0.78s at 1,000 — the in-row
+# scan is O(|hot|) per line, the relational leg flat.
+# Re-measure with `python bench.py --line-dedup-ab`.
+_INROW_HOT_LIMIT = 64
+
+# Hot-set size past which the relational leg drops its broadcast hint
+# (a row-count proxy for ~100 MB of lines). Cluster-sized, not
+# local-tuned: at 1M hot lines (200k docs x 30 lines) the unhinted
+# shuffle join ties or wins locally — 4.45s vs 4.74s hinted at local[4]
+# (median of 3 alternating pairs), 14.3s vs 25.0s at local[32]
+# (BASELINE.md "oversized-hot-set A/B") — because the line-key exchange
+# is an intra-box copy; on a cluster it re-shuffles the corpus-sized
+# exploded side over the network, which dwarfs the broadcast.
+# `python bench.py --line-dedup-oversized` times both plans.
+_BROADCAST_HOT_LIMIT = 4_000_000
+
+
 def line_dedup(docs: DataFrame, min_df: int = 3,
                id_col: str = "doc_id", text_col: str = "text",
-               max_hot_lines: int = 1_000_000,
-               strategy: str = "auto",
-               inrow_hot_limit: int = 2_000,
-               keep: tuple = (),
-               broadcast_hot_limit: int = 4_000_000) -> DataFrame:
+               keep: tuple = ()) -> DataFrame:
     """Corpus-level line deduplication (CCNet/C4-family boilerplate
     removal): any non-empty line whose EXACT text appears in at least
     ``min_df`` DISTINCT documents is removed from EVERY document —
@@ -926,36 +811,23 @@ def line_dedup(docs: DataFrame, min_df: int = 3,
     map-side-combinable count, materialized once (eager
     localCheckpoint, same guard-then-broadcast pattern as
     ``decontaminate``) — its size ``n_hot`` then picks the membership
-    ``strategy`` (results are identical; parity is pytest-pinned):
+    leg (results are identical; parity is pytest-pinned):
 
-    - ``'inrow'``: the hot set rides as ONE broadcast array and each
-      document filters its split-lines array in place. Zero corpus
-      shuffle, pure Catalyst — but membership is ``array_contains``,
-      an O(n_hot) scan PER LINE, so auto only picks it while
-      ``n_hot <= inrow_hot_limit``. (Sublinear in-row membership has
-      no builtin: ``bloom_filter_agg``/``might_contain`` are not in
-      the public FunctionRegistry — verified on this Spark — and
-      Catalyst map lookup is itself a linear probe.)
-    - ``'hashset'``: the hot set ships as a Python frozenset inside an
-      Arrow-batched pandas UDF — O(1) hash probe per line, still zero
-      corpus shuffle. Driver/closure memory is bounded by
-      ``max_hot_lines``; auto picks it for
-      ``inrow_hot_limit < n_hot <= max_hot_lines``.
-    - ``'relational'``: posexplode lines -> hash join against the hot
-      set (O(1) JVM-side probe, no Python) -> order-preserving
-      reassembly. The ONLY strategy that shuffles the corpus (one
-      groupBy by doc id), and the only one with NO bound on the hot
-      set: the join carries an ``F.broadcast`` hint while
-      ``n_hot <= broadcast_hot_limit`` (row-count proxy for the
-      broadcast budget) and plans WITHOUT the hint past it — AQE picks
-      shuffle-hash/sort-merge, costing one extra exchange on the line
-      key but surviving hot sets of any size. Auto falls back to this
-      leg past ``max_hot_lines`` with a ``RuntimeWarning`` (the plan
-      gains a corpus shuffle — loud, not silent), so
-      ``strategy='auto'`` never raises.
-
-    ``max_hot_lines`` raises only when a broadcast-held strategy
-    ('inrow'/'hashset') is EXPLICITLY forced past its budget.
+    - in-row (``n_hot <= _INROW_HOT_LIMIT``): the hot set rides as ONE
+      broadcast array and each document filters its split-lines array
+      in place. Zero corpus shuffle, pure Catalyst — but membership is
+      ``array_contains``, an O(n_hot) scan PER LINE. (Sublinear in-row
+      membership has no builtin: ``bloom_filter_agg``/``might_contain``
+      are not in the public FunctionRegistry — verified on this Spark —
+      and Catalyst map lookup is itself a linear probe.)
+    - relational (larger hot sets): posexplode lines -> hash join
+      against the hot set (O(1) JVM-side probe, no Python) ->
+      order-preserving reassembly. It shuffles the corpus once (one
+      groupBy per document row) and has NO bound on the hot set: the
+      join carries an ``F.broadcast`` hint while
+      ``n_hot <= _BROADCAST_HOT_LIMIT`` and plans WITHOUT it past that
+      — AQE picks shuffle-hash/sort-merge, costing one extra exchange
+      on the line key but surviving hot sets of any size.
 
     ``keep``: passenger columns carried through unchanged (between
     ``doc_id`` and ``text`` in the output) — what lets a composed
@@ -965,17 +837,10 @@ def line_dedup(docs: DataFrame, min_df: int = 3,
     # tuple ONCE before anything consumes it: a one-shot iterable
     # passed as keep= must survive both validation and the legs
     keep = tuple(keep)
-    _validate_line_dedup_args(strategy, keep)
-    hot = (
-        _line_df(docs, id_col, text_col)
-        .filter(F.col("_df") >= min_df)
-        .select("_line")
-        .localCheckpoint(eager=True)
-    )
+    _validate_line_dedup_args(keep)
     return _line_dedup_apply(
-        docs, hot, strategy=strategy, id_col=id_col, text_col=text_col,
-        max_hot_lines=max_hot_lines, inrow_hot_limit=inrow_hot_limit,
-        keep=keep, broadcast_hot_limit=broadcast_hot_limit,
+        docs, _hot_lines(_line_df(docs, id_col, text_col), min_df),
+        id_col=id_col, text_col=text_col, keep=keep,
     )
 
 
@@ -999,9 +864,18 @@ def _line_df(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
     )
 
 
-def _validate_line_dedup_args(strategy: str, keep: tuple) -> None:
-    if strategy not in ("auto", "inrow", "hashset", "relational"):
-        raise ValueError(f"unknown line_dedup strategy {strategy!r}")
+def _hot_lines(line_df: DataFrame, min_df: int) -> DataFrame:
+    """-> (_line): the lines of a (_line, _df) frame with ``_df >=
+    min_df``, materialized once (eager localCheckpoint) so the leg
+    choice and the chosen leg read the same small frame."""
+    return (
+        line_df.filter(F.col("_df") >= min_df)
+        .select("_line")
+        .localCheckpoint(eager=True)
+    )
+
+
+def _validate_line_dedup_args(keep: tuple) -> None:
     reserved = {"doc_id", "text", "n_dropped"}
     if bad := [k for k in keep if k in reserved]:
         raise ValueError(
@@ -1010,99 +884,42 @@ def _validate_line_dedup_args(strategy: str, keep: tuple) -> None:
         )
 
 
-def _line_dedup_apply(docs: DataFrame, hot: DataFrame, *, strategy: str,
-                      id_col: str, text_col: str, max_hot_lines: int,
-                      inrow_hot_limit: int, keep: tuple,
-                      broadcast_hot_limit: int = 4_000_000) -> DataFrame:
+def _line_dedup_apply(docs: DataFrame, hot: DataFrame, *, id_col: str,
+                      text_col: str, keep: tuple) -> DataFrame:
     """Membership/rewrite stage of :func:`line_dedup` against an
     EXTERNALLY supplied hot-line frame (one column ``_line``, already
     materialized small) — shared by the batch operator and
     ``streaming.stream.stream_line_dedup`` so the two faces cannot
-    drift."""
-    _validate_line_dedup_args(strategy, keep)
-    keep = tuple(keep)
-    lines = F.split(F.col(text_col), "\n")
-    # collision-proof working names (same suffix discipline as
-    # similarity.unit_vectors's _nrm): ONE suffix clears EVERY leg's
-    # internal name against the caller's columns — passenger columns
-    # named _line/_s/_pos/... must work on every strategy, not crash
-    # only once auto dispatches off the in-row leg at scale
-    _work = ("_hot", "_s", "_rid", "_pos", "_line", "_lines", "_is_hot")
+    drift. The hot-set size alone picks the leg; callers validate
+    ``keep`` first."""
+    n_hot = hot.count()
+    if n_hot <= _INROW_HOT_LIMIT:
+        return _line_dedup_inrow(docs, hot, id_col, text_col, keep)
+    return _line_dedup_relational(
+        docs, hot, id_col, text_col, keep,
+        broadcast_hot=n_hot <= _BROADCAST_HOT_LIMIT,
+    )
+
+
+def _work_suffix(docs: DataFrame) -> str:
+    """Collision-proof suffix for the legs' working column names (same
+    discipline as similarity.unit_vectors's _nrm): ONE suffix clears
+    EVERY leg's internal name against the caller's columns, so
+    passenger columns named _line/_pos/... work on both legs."""
+    work = ("_hot", "_rid", "_pos", "_line", "_lines", "_is_hot")
     sfx = ""
     cols = set(docs.columns)
-    while any(n + sfx in cols for n in _work):
+    while any(n + sfx in cols for n in work):
         sfx += "_"
-    hot_col = "_hot" + sfx
-    n_hot = hot.count()
-    if strategy == "auto":
-        # inrow must respect BOTH caps: inrow_hot_limit is the
-        # per-line-scan-cost bound, max_hot_lines the caller's
-        # broadcast/driver budget — a max_hot_lines below the inrow
-        # limit must still keep auto off the broadcast-held legs
-        if n_hot <= min(inrow_hot_limit, max_hot_lines):
-            strategy = "inrow"
-        elif n_hot <= max_hot_lines:
-            strategy = "hashset"
-        else:
-            # loud, not silent: callers sized for the zero-shuffle legs
-            # must notice the plan now carries a corpus shuffle instead
-            # of discovering it in runtime cost (ADVICE r6)
-            warnings.warn(
-                f"line_dedup: {n_hot} distinct hot lines exceed "
-                f"max_hot_lines ({max_hot_lines}); auto is dispatching "
-                "to strategy='relational', which shuffles the corpus "
-                "(one groupBy per document) — raise min_df or "
-                "max_hot_lines to stay on a zero-shuffle leg",
-                RuntimeWarning,
-                stacklevel=3,
-            )
-            strategy = "relational"
-    elif strategy != "relational" and n_hot > max_hot_lines:
-        raise ValueError(
-            f"{n_hot} distinct hot lines exceed max_hot_lines "
-            f"({max_hot_lines}) for strategy={strategy!r}, which holds "
-            "the whole hot set in one broadcast/closure — raise "
-            "min_df, raise max_hot_lines explicitly, or use "
-            "strategy='relational' (hash join, no cap)"
-        )
+    return sfx
 
-    if strategy == "relational":
-        return _line_dedup_relational(
-            docs, hot, lines, id_col, keep, sfx,
-            broadcast_hot=n_hot <= broadcast_hot_limit,
-        )
 
-    if strategy == "hashset":
-        hot_set = frozenset(r[0] for r in hot.collect())
-
-        @F.pandas_udf("struct<text:string,n_dropped:bigint>")
-        def drop_hot(texts: pd.Series) -> pd.DataFrame:
-            from ..functions.worker import pin_worker_threads
-
-            pin_worker_threads()
-            out_t, out_n = [], []
-            for t in texts:
-                if t is None:
-                    out_t.append(None)
-                    out_n.append(None)
-                    continue
-                ls = t.split("\n")
-                kept = [x for x in ls if x == "" or x not in hot_set]
-                out_t.append("\n".join(kept))
-                out_n.append(len(ls) - len(kept))
-            return pd.DataFrame({"text": out_t, "n_dropped": out_n})
-
-        struct = drop_hot(F.col(text_col))
-        s_col = "_s" + sfx
-        return docs.select(
-            F.col(id_col).alias("doc_id"), *keep, struct.alias(s_col)
-        ).select(
-            "doc_id",
-            *keep,
-            F.col(s_col + ".text").alias("text"),
-            F.col(s_col + ".n_dropped").alias("n_dropped"),
-        )
-
+def _line_dedup_inrow(docs: DataFrame, hot: DataFrame, id_col: str,
+                      text_col: str, keep: tuple) -> DataFrame:
+    """Small-hot-set leg of :func:`line_dedup`: the hot set rides as one
+    broadcast array and each document filters its own lines in place."""
+    hot_col = "_hot" + _work_suffix(docs)
+    lines = F.split(F.col(text_col), "\n")
     hot_row = hot.agg(
         F.coalesce(
             F.collect_list("_line"), F.array().cast("array<string>")
@@ -1124,8 +941,7 @@ def _line_dedup_apply(docs: DataFrame, hot: DataFrame, *, strategy: str,
 
 
 def line_dedup_rewrite(docs: DataFrame, min_df: int,
-                       id_col: str = "doc_id", text_col: str = "text",
-                       **kw):
+                       id_col: str = "doc_id", text_col: str = "text"):
     """Boilerplate-removal STAGE for composed jobs (curate and the
     run_dataprep CLI share this — one copy of the sequence): returns
     ``(rewritten, ld)`` where ``rewritten`` has the caller's column
@@ -1138,7 +954,7 @@ def line_dedup_rewrite(docs: DataFrame, min_df: int,
     passengers = [c for c in docs.columns if c not in (id_col, text_col)]
     ld = line_dedup(
         docs, min_df=min_df, id_col=id_col, text_col=text_col,
-        keep=tuple(passengers), **kw,
+        keep=tuple(passengers),
     ).localCheckpoint(eager=False)
     # POSITIONAL layout restored too, not just by-name: a source laid
     # out (doc_id, text, lang) must come back (doc_id, text, lang), so
@@ -1152,10 +968,9 @@ def line_dedup_rewrite(docs: DataFrame, min_df: int,
     return rewritten, ld
 
 
-def _line_dedup_relational(docs: DataFrame, hot: DataFrame, lines,
-                           id_col: str, keep: tuple = (),
-                           sfx: str = "", broadcast_hot: bool = True
-                           ) -> DataFrame:
+def _line_dedup_relational(docs: DataFrame, hot: DataFrame, id_col: str,
+                           text_col: str, keep: tuple,
+                           broadcast_hot: bool = True) -> DataFrame:
     """Unbounded-hot-set leg of :func:`line_dedup`: explode -> hash
     join against the hot set (O(1) probe per line) -> order-preserving
     reassembly. posexplode_outer + an aggregation over ALL exploded
@@ -1163,18 +978,13 @@ def _line_dedup_relational(docs: DataFrame, hot: DataFrame, lines,
     including ones whose every line is hot — without a join back to
     the source. Reassembly groups on a per-ROW id, not ``id_col``, so
     duplicate (or NULL) doc ids keep their per-row multiplicity exactly
-    like the in-row legs; a NULL text (NULL split array -> the one
+    like the in-row leg; a NULL text (NULL split array -> the one
     NULL-pos exploded row) round-trips to (NULL, NULL), also matching
-    them.
+    it.
 
-    ``broadcast_hot``: while the hot set fits the broadcast budget the
-    join carries an explicit ``F.broadcast`` hint (zero-shuffle probe).
-    Past ``broadcast_hot_limit`` the caller turns the hint OFF and the
-    join plans without it — AQE picks shuffle-hash/sort-merge, the
-    exploded side pays one extra exchange on the line key on top of the
-    reassembly groupBy it already pays, and the leg is genuinely
-    unbounded in |hot| instead of silently re-imposing the broadcast
-    cap it exists to escape (VERDICT r6).
+    ``broadcast_hot``: hint the hot side as broadcast (zero-shuffle
+    probe); the caller turns it off past ``_BROADCAST_HOT_LIMIT``, where
+    the plans differ as :func:`line_dedup` describes.
 
     Stage-retry caveat: the per-row grouping key is
     ``monotonically_increasing_id``, a nondeterministic stamp. Spark
@@ -1191,13 +1001,14 @@ def _line_dedup_relational(docs: DataFrame, hot: DataFrame, lines,
     # posexplode_outer the nondeterministic id is evaluated per
     # EXPLODED row (one group per line); CollapseProject never merges
     # nondeterministic projections, so this stays an input-row stamp.
+    sfx = _work_suffix(docs)
     rid, pos, line = "_rid" + sfx, "_pos" + sfx, "_line" + sfx
     lines_col, is_hot = "_lines" + sfx, "_is_hot" + sfx
     stamped = docs.select(
         F.monotonically_increasing_id().alias(rid),
         F.col(id_col).alias("doc_id"),
         *keep,
-        lines.alias(lines_col),
+        F.split(F.col(text_col), "\n").alias(lines_col),
     )
     exploded = stamped.select(
         rid,

@@ -570,7 +570,7 @@ def ivf_search(
     # k-means needs)
     c = unit_vectors(c, "nvec")
     q = unit_vectors(q, "qvec")
-    # no (qid, nid) dedup stage, unlike _ann_rank: IVF partitions the
+    # no (qid, nid) dedup stage, unlike ann_topk: IVF partitions the
     # corpus — every row owns exactly ONE cell and a query's n_probe
     # cells are distinct (stable argsort / sorted slice), so the cell
     # join cannot emit the same (qid, nid) twice and the old
@@ -697,18 +697,11 @@ def ann_topk(
             F.explode(_probe_buckets(F.col("bucket"), n_planes, max_hamming)),
         )
     )
-    return _ann_rank(c, q, k)
-
-
-def _ann_rank(c: DataFrame, q: DataFrame, k: int) -> DataFrame:
-    """Shared scoring tail of the ANN shapes: broadcast bucket join ->
-    one `_dot` per pair -> probe-dedup -> per-query rank.
-
-    unit-normalizes AFTER bucketing (hyperplane signs are
-    scale-invariant, so the codes are identical); zero-norm rows drop
-    here — the same rows the old NULL-cosine filter removed — and the
-    per-pair score is ONE _dot, not a twice-evaluated 3-aggregate
-    cosine (see unit_vectors)."""
+    # unit-normalize AFTER bucketing (hyperplane signs are
+    # scale-invariant, so the codes are identical); zero-norm rows drop
+    # here — the same rows the old NULL-cosine filter removed — and the
+    # per-pair score is ONE _dot, not a twice-evaluated 3-aggregate
+    # cosine (see unit_vectors)
     c = unit_vectors(c, "nvec")
     q = unit_vectors(q, "qvec")
     scored = (
@@ -721,46 +714,3 @@ def _ann_rank(c: DataFrame, q: DataFrame, k: int) -> DataFrame:
     )
     w = Window.partitionBy("qid").orderBy(F.desc("sim"), F.asc("nid"))
     return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
-
-
-def ann_topk_two_scan(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 3,
-    n_planes: int = 6,
-    max_hamming: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """A/B twin of :func:`ann_topk` kept ONLY as the measured
-    alternative plan shape (``python bench.py --ann-ab``): buckets are
-    computed on a NARROW projection and the vectors re-attached by an
-    id-keyed join back to the corpus. Identical results; different
-    physical plan — the join-back re-executes the corpus scan for the
-    second alias (Spark does not reuse exchanges across self-join
-    aliases — measured, see dedup module docstring) and adds an
-    id-keyed exchange. ann_topk's single-pass shape won both A/B
-    fixtures (BASELINE.md); use ann_topk."""
-    b = hyperplane_lsh_buckets(corpus, n_planes, id_col=id_col, vec_col=vec_col)
-    c = (
-        b.select(F.col("vec_id").alias("nid"), "bucket")
-        .join(
-            corpus.select(
-                F.col(id_col).alias("nid"), F.col(vec_col).alias("nvec")
-            ),
-            on="nid",
-        )
-    )
-    q = (
-        hyperplane_lsh_buckets(
-            queries, n_planes, id_col=id_col, vec_col=vec_col, keep=(vec_col,)
-        )
-        .select(
-            F.col("vec_id").alias("qid"), F.col(vec_col).alias("qvec"), "bucket"
-        )
-        .withColumn(
-            "bucket",
-            F.explode(_probe_buckets(F.col("bucket"), n_planes, max_hamming)),
-        )
-    )
-    return _ann_rank(c, q, k)

@@ -103,14 +103,13 @@ def minhash_lsh_pairs_q(spark, sf_dir):
     f"WITH {_minhash_band_ctes(8)}{_MINHASH_PAIRS_SELECT}",
 )
 def minhash_vectorized_pairs_q(spark, sf_dir):
-    """The mapInPandas signature path (scale budget b=4×r=2) against the
-    same inverted-index oracle — proves the vectorized md5 family is
-    byte-identical to the Catalyst one end-to-end."""
+    """The b=4×r=2 signature budget (twice the ``minhash_lsh_pairs``
+    gate's hashes) against the same inverted-index oracle."""
     from ..operators.dedup import minhash_lsh_pairs
 
     return minhash_lsh_pairs(
         load(spark, sf_dir, "documents"), n_bands=4, rows_per_band=2,
-        vectorized=True, max_bucket=None,
+        max_bucket=None,
     )
 
 
@@ -216,19 +215,6 @@ def simhash_q(spark, sf_dir):
     from ..operators.dedup import simhash
 
     return simhash(load(spark, sf_dir, "documents"), n_bits=16)
-
-
-@register_extra(
-    "simhash_vectorized",
-    f"WITH {_simhash16_fp_sql()}{_SIMHASH16_SELECT}",
-)
-def simhash_vectorized_q(spark, sf_dir):
-    """The mapInPandas fingerprint path against the SAME oracle as the
-    Catalyst `simhash` — proves the vectorized bit-vote family is
-    byte-identical end-to-end."""
-    from ..operators.dedup import simhash_np
-
-    return simhash_np(load(spark, sf_dir, "documents"), n_bits=16)
 
 
 @register_extra(
@@ -1064,15 +1050,13 @@ def _line_dedup_values() -> str:
 def line_dedup_q(spark, sf_dir):
     """Boilerplate lines (>= min_df distinct docs) removed from every
     document, empty lines preserved as structure — CCNet's shard-hash
-    paragraph dedup / C4's line rules, one distinct+count pass then an
-    O(1)-per-line membership filter. The gate forces the HASHSET leg
-    (the at-scale auto default: Arrow frozenset probe, zero corpus
-    shuffle) against the oracle; the in-row leg holds the r5 green rows
-    and all three legs are parity-pinned in test_dedup_pipeline."""
+    paragraph dedup / C4's line rules, one distinct+count pass then a
+    membership filter. Two hot lines put the gate on the in-row leg;
+    both legs are parity-pinned in test_dedup_pipeline."""
     from ..operators.dedup import line_dedup
 
     docs = spark.createDataFrame(
         [(i, "\n".join(ls)) for i, ls in _LINE_DEDUP_ROWS],
         "doc_id long, text string",
     )
-    return line_dedup(docs, min_df=3, strategy="hashset")
+    return line_dedup(docs, min_df=3)

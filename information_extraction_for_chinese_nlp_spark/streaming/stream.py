@@ -258,10 +258,6 @@ def stream_line_dedup(
     text_col: str = "text",
     available_now: bool = True,
     compact_every: int | None = 10,
-    strategy: str = "auto",
-    max_hot_lines: int = 1_000_000,
-    inrow_hot_limit: int = 2_000,
-    broadcast_hot_limit: int = 4_000_000,
 ):
     """Streaming face of ``operators.dedup.line_dedup`` — CCNet/C4
     hot-line (boilerplate) removal over a continuously-arriving corpus
@@ -302,10 +298,10 @@ def stream_line_dedup(
     if compact_every is not None and compact_every < 1:
         raise ValueError("compact_every must be >= 1 (or None to disable)")
     # fail BEFORE the stream starts (mirrors the compact_every
-    # pre-check): a bad strategy or a passenger column colliding with
-    # the fixed output names (doc_id/text/n_dropped) would otherwise
-    # surface only inside foreachBatch, killing the query at its first
-    # micro-batch after checkpoint state already exists
+    # pre-check): a passenger column colliding with the fixed output
+    # names (doc_id/text/n_dropped) would otherwise surface only inside
+    # foreachBatch, killing the query at its first micro-batch after
+    # checkpoint state already exists
     for col in (id_col, text_col):
         if col not in docs_stream.columns:
             raise ValueError(
@@ -315,7 +311,7 @@ def stream_line_dedup(
     passengers = tuple(
         c for c in docs_stream.columns if c not in (id_col, text_col)
     )
-    _validate_line_dedup_args(strategy, passengers)
+    _validate_line_dedup_args(passengers)
     # decided BEFORE the stream starts, like the checks above: whether
     # every non-id column is orderable (max(struct) legal) or the
     # in-batch dedup must order on a JSON serialization instead
@@ -326,7 +322,7 @@ def stream_line_dedup(
     )
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        from ..operators.dedup import _line_df
+        from ..operators.dedup import _hot_lines, _line_df
 
         spark = batch_df.sparkSession
         # in-batch redelivery collapse. DETERMINISTIC tie (max over the
@@ -400,19 +396,9 @@ def stream_line_dedup(
         # only the SMALL hot subset materializes per batch; the full
         # cumulative table is evaluated again only on the 1-in-
         # compact_every batches that snapshot it
-        hot = (
-            cum.filter(F.col("_df") >= min_df)
-            .select("_line")
-            .localCheckpoint(eager=True)
-        )
         out = _line_dedup_apply(
-            batch_df, hot, strategy=strategy, id_col=id_col,
-            text_col=text_col, max_hot_lines=max_hot_lines,
-            inrow_hot_limit=inrow_hot_limit,
-            broadcast_hot_limit=broadcast_hot_limit,
-            keep=tuple(
-                c for c in batch_df.columns if c not in (id_col, text_col)
-            ),
+            batch_df, _hot_lines(cum, min_df), id_col=id_col,
+            text_col=text_col, keep=passengers,
         )
         out.write.mode("overwrite").parquet(
             f"{output_path}/batch_id={batch_id}"

@@ -79,8 +79,10 @@ cluster size.
 from information_extraction_for_chinese_nlp_spark.operators.dedup import minhash_lsh_pairs
 q = minhash_lsh_pairs(docs, n_bands=2, rows_per_band=2)
 sections.append(("minhash_lsh_pairs (b×r banding)", plan_of(q), """
-What to read: ONE linear aggregation chain and NO self-join — the
-signature pipeline (the dominant cost) runs exactly once; pairs expand
+What to read: ONE MapInPandas computes every document's band strings,
+then ONE linear aggregation chain with exactly two Exchanges (bucket
+aggregate, pair distinct) and NO self-join — the signature pipeline
+(the dominant cost) runs exactly once; pairs expand
 JVM-side inside each (band_id, band) bucket via Generate, and the final
 HashAggregate pair collapses cross-band duplicates. A self-join
 formulation re-executes the whole signature subtree for its second
@@ -102,28 +104,37 @@ query side explodes to its Hamming-radius probe codes and broadcasts
 candidate generation; only the per-query top-k window runs on the
 (output-bound) candidate set.
 
-Round-6 A/B closed the r5 watch on this shape: `ann_topk_two_scan`
-(narrow bucketing + id-keyed join-back, identical rows) was benched
-against it on parquet corpora at 20k and 200k vectors
-(`python bench.py --ann-ab`, table in BASELINE.md). At 20k the shapes
-tie within the noise band (two-scan ~5% ahead); at 200k the sign flips
-to single-pass in the quieter run. The two-scan cost (second corpus
-read + exchange) scales with corpus bytes while the single-pass cost
-(vector through the bucket projection) is flat per row — single-pass
-stays the shipped shape.
+The two-scan join-back alternative (narrow bucketing + id-keyed join
+back to the corpus, identical rows) lost the round-6 A/B at 200k
+vectors and was removed; BASELINE.md keeps the table.
 """))
 
 from information_extraction_for_chinese_nlp_spark.operators.dedup import line_dedup
-ld_docs = docs.limit(2000)
-q = line_dedup(ld_docs, min_df=3, strategy="hashset")
-sections.append(("line_dedup (hashset leg, the at-scale auto default)", plan_of(q), """
-What to read: the corpus side is Scan -> ArrowEvalPython -> Project —
-NO Exchange anywhere (the hot-line set ships inside the UDF closure as
-a frozenset; membership is O(1) per line). The hot-set discovery pass
-ran at plan-construction time into an eager localCheckpoint and does
-not appear here. The relational leg (unbounded hot sets) trades this
-shuffle-free shape for one groupBy reassembly; the A/B table in
-BASELINE.md prices all three legs.
+ld_docs = docs.filter(F.col("doc_id") % 5 == 0)
+q = line_dedup(ld_docs, min_df=3)
+sections.append(("line_dedup (in-row leg, hot sets up to 64 lines)", plan_of(q), """
+What to read: the corpus side is Scan -> BroadcastNestedLoopJoin (the
+hot set as ONE single-row array) -> Project, with NO corpus Exchange;
+each document filters its own split lines with array_contains. The
+hot-set discovery pass ran at plan-construction time into an eager
+localCheckpoint and appears only as the broadcast side, whose one
+Exchange gathers the hot lines into that single row.
+"""))
+
+hot_docs = spark.range(300).select(
+    F.col("id").alias("doc_id"),
+    F.concat_ws("\n", *[F.format_string("BP%d", (F.col("id") * 15 + j) % 100)
+                          for j in range(15)],
+                F.format_string("U%d", F.col("id"))).alias("text"),
+)
+q = line_dedup(hot_docs, min_df=3)
+sections.append(("line_dedup (relational leg, larger hot sets)", plan_of(q), """
+What to read: Generate (posexplode_outer of the lines) ->
+BroadcastHashJoin against the hot set (O(1) probe per line) -> ONE
+Exchange for the per-row reassembly aggregate. This is the only leg
+that shuffles the corpus, and the only one with no bound on the hot
+set: past 4M hot lines the broadcast hint goes and AQE plans a shuffle
+join instead. `python bench.py --line-dedup-ab` prices both legs.
 """))
 
 from information_extraction_for_chinese_nlp_spark.operators.similarity import matmul_topk
@@ -137,15 +148,15 @@ set. Exact results at BLAS speed; 10× the Catalyst expression baseline
 on the benchmark set.
 """))
 
-q = minhash_lsh_pairs(docs, n_bands=16, rows_per_band=4, vectorized=True,
-                      max_bucket=1000)
-sections.append(("minhash_lsh_pairs vectorized (b=16×r=4)", plan_of(q), """
-What to read: the signature stage is ONE MapInPandas over the scan —
-64 md5 minima per document computed in-batch, so the only Exchange
-moves n_bands rows per document (the Catalyst path shuffles
-tokens×n_seeds exploded rows; at a 100 TB signature budget that
-multiplies shuffle volume ~tokens×). Pair expansion stays JVM-side in
-the bucket aggregate, identical to the Catalyst formulation.
+q = minhash_lsh_pairs(docs, n_bands=16, rows_per_band=4, max_bucket=1000)
+sections.append(("minhash_lsh_pairs at the 100 TB budget (b=16×r=4)", plan_of(q), """
+What to read: the same two-Exchange shape as b=2×r=2 — the signature
+stage is ONE MapInPandas over the scan, 64 md5 minima per document
+computed in-batch, so the bucket Exchange moves n_bands rows per
+document (a token-explode formulation would shuffle tokens×n_seeds
+exploded rows; at a 100 TB signature budget that multiplies shuffle
+volume ~tokens×). Pair expansion stays JVM-side in the bucket
+aggregate.
 """))
 
 from information_extraction_for_chinese_nlp_spark.plans.graph import (

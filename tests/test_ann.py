@@ -123,23 +123,6 @@ def test_multiprobe_lsh_recall_on_near_dups(spark):
     assert r2 >= r0
 
 
-def test_ann_two_scan_shape_parity(spark, sf_dir):
-    """The A/B twin (narrow bucketing + id-keyed join-back) must return
-    exactly the single-pass shape's rows — it exists only so the bench
-    can price the two physical plans against each other."""
-    from information_extraction_for_chinese_nlp_spark.operators.similarity import (
-        ann_topk_two_scan,
-    )
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    queries = emb.filter(F.col("vec_id") < 10)
-    a = sorted(map(tuple, ann_topk(
-        emb, queries, k=3, n_planes=6, max_hamming=1).collect()))
-    b = sorted(map(tuple, ann_topk_two_scan(
-        emb, queries, k=3, n_planes=6, max_hamming=1).collect()))
-    assert a == b and a
-
-
 def test_lsh_buckets_deterministic(spark, sf_dir):
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     a = hyperplane_lsh_buckets(emb, n_planes=6).toPandas().set_index("vec_id")

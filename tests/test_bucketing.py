@@ -42,48 +42,65 @@ def test_bucketed_join_has_no_exchange(spark):
         spark.sql("DROP TABLE IF EXISTS t_bucket_right")
 
 
+def _bucket_pairs_py(rows):
+    """Reference pair expansion: every (a < b) id pair sharing a key."""
+    from collections import defaultdict
+    from itertools import combinations
+
+    buckets = defaultdict(set)
+    for doc_id, key in rows:
+        buckets[key].add(doc_id)
+    return {p for ids in buckets.values() for p in combinations(sorted(ids), 2)}
+
+
 def test_vectorized_minhash_matches_catalyst(spark, sf_dir):
-    """minhash_signatures_np and the vectorized band path must be
-    byte-identical to the Catalyst explode/aggregate formulation."""
+    """The Arrow signature path (minhash_signatures, and the band strings
+    minhash_lsh_pairs buckets on) must be byte-identical to the Catalyst
+    explode/aggregate reference, and its pair set must equal the
+    reference bands' bucket expansion."""
+    import catalyst_reference as ref
+
     from information_extraction_for_chinese_nlp_spark.operators.dedup import (
         minhash_lsh_pairs,
         minhash_signatures,
-        minhash_signatures_np,
     )
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet").cache()
-    cat = {tuple(r) for r in minhash_signatures(docs, n_seeds=8).collect()}
-    vec = {tuple(r) for r in minhash_signatures_np(docs, n_seeds=8).collect()}
+    vec = {tuple(r) for r in minhash_signatures(docs, n_seeds=8).collect()}
+    cat = {tuple(r) for r in ref.minhash_signatures(docs, n_seeds=8).collect()}
     assert cat == vec and len(cat) > 0
 
-    p_cat = {tuple(r) for r in
-             minhash_lsh_pairs(docs, n_bands=4, rows_per_band=2).collect()}
+    bands = ref.minhash_bands(docs, n_bands=4, rows_per_band=2).collect()
+    p_ref = _bucket_pairs_py((r.doc_id, (r.band_id, r.band)) for r in bands)
     p_vec = {tuple(r) for r in
              minhash_lsh_pairs(docs, n_bands=4, rows_per_band=2,
-                               vectorized=True).collect()}
-    assert p_cat == p_vec
+                               max_bucket=None).collect()}
+    assert p_ref == p_vec
 
 
 def test_vectorized_simhash_matches_catalyst(spark, sf_dir):
-    """simhash_np / simhash_wide_np must be byte-identical to the
-    Catalyst explode/vote formulations, and the vectorized near-pairs
-    path must return the same pair set."""
+    """simhash / simhash_wide (Arrow) must be byte-identical to the
+    Catalyst explode/vote references, and simhash_near_pairs_wide must
+    return exactly the reference fingerprints' pairs within the
+    Hamming bound (pigeonhole recall 1.0)."""
+    from itertools import combinations
+
+    import catalyst_reference as ref
+
     from information_extraction_for_chinese_nlp_spark.operators.dedup import (
         simhash,
         simhash_near_pairs_wide,
-        simhash_np,
         simhash_wide,
-        simhash_wide_np,
     )
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet").cache()
     for bits in (16, 32):
-        cat = {tuple(r) for r in simhash(docs, n_bits=bits).collect()}
-        vec = {tuple(r) for r in simhash_np(docs, n_bits=bits).collect()}
+        cat = {tuple(r) for r in ref.simhash(docs, n_bits=bits).collect()}
+        vec = {tuple(r) for r in simhash(docs, n_bits=bits).collect()}
         assert cat == vec and len(cat) > 0, bits
 
-    cat_w = {tuple(r) for r in simhash_wide(docs).collect()}
-    vec_w = {tuple(r) for r in simhash_wide_np(docs).collect()}
+    cat_w = {tuple(r) for r in ref.simhash_wide(docs).collect()}
+    vec_w = {tuple(r) for r in simhash_wide(docs).collect()}
     assert cat_w == vec_w
 
     from information_extraction_for_chinese_nlp_spark.plans.queries_dataprep import (
@@ -91,25 +108,33 @@ def test_vectorized_simhash_matches_catalyst(spark, sf_dir):
     )
 
     fixture = _simhash64_df(spark)
-    p_cat = {tuple(r) for r in
-             simhash_near_pairs_wide(fixture, n_bands=8, max_hamming=7).collect()}
+    fps = sorted(tuple(r) for r in ref.simhash_wide(fixture).collect())
+    p_ref = set()
+    for (a, a_hi, a_lo), (b, b_hi, b_lo) in combinations(fps, 2):
+        ham = bin(a_hi ^ b_hi).count("1") + bin(a_lo ^ b_lo).count("1")
+        if ham <= 7:
+            p_ref.add((a, b, ham))
     p_vec = {tuple(r) for r in
-             simhash_near_pairs_wide(fixture, n_bands=8, max_hamming=7,
-                                     vectorized=True).collect()}
-    assert p_cat == p_vec and len(p_cat) > 0
+             simhash_near_pairs_wide(fixture, n_bands=8, max_hamming=7).collect()}
+    assert p_ref == p_vec and len(p_ref) > 0
 
 
 def test_vectorized_paths_parity_property(spark):
     """Property: on adversarial texts (CJK, repeated/leading/trailing
-    spaces -> empty tokens, scrub targets, long runs) the vectorized
-    minhash/simhash paths equal the Catalyst formulations exactly."""
+    spaces -> empty tokens, scrub targets, long runs) the Arrow
+    minhash/simhash paths equal the Catalyst references exactly.
+
+    The last text repeats doc_id 0: production output is per input
+    row (two signatures for id 0), where the references group by id
+    and would merge the two texts. So the references see that row
+    under a fresh id, mapped back to 0 before comparing multisets."""
     from hypothesis import given, settings
     from hypothesis import strategies as st
 
+    import catalyst_reference as ref
+
     from information_extraction_for_chinese_nlp_spark.operators.dedup import (
         minhash_signatures,
-        minhash_signatures_np,
-        simhash_np,
         simhash,
     )
 
@@ -121,15 +146,25 @@ def test_vectorized_paths_parity_property(spark):
     @settings(max_examples=5, deadline=None)
     @given(st.lists(doc, min_size=1, max_size=6))
     def check(texts):
+        dup = len(texts)
+        rows = [(i, t) for i, t in enumerate(texts)] + [(dup, texts[-1])]
+        unique = spark.createDataFrame(rows, "doc_id long, text string")
         docs = spark.createDataFrame(
-            [(i, t) for i, t in enumerate(texts)], "doc_id long, text string"
+            [(0 if i == dup else i, t) for i, t in rows],
+            "doc_id long, text string",
         )
-        cat = {tuple(r) for r in minhash_signatures(docs, n_seeds=3).collect()}
-        vec = {tuple(r) for r in minhash_signatures_np(docs, n_seeds=3).collect()}
-        assert cat == vec
-        cs = {tuple(r) for r in simhash(docs, n_bits=16).collect()}
-        vs = {tuple(r) for r in simhash_np(docs, n_bits=16).collect()}
-        assert cs == vs
+
+        def as_ref(frame):
+            return sorted(
+                (0 if r[0] == dup else r[0], *r[1:]) for r in frame.collect()
+            )
+
+        cat = as_ref(ref.minhash_signatures(unique, n_seeds=3))
+        vec = sorted(tuple(r) for r in minhash_signatures(docs, n_seeds=3).collect())
+        assert cat == vec and len(vec) == 3 * len(rows)
+        cs = as_ref(ref.simhash(unique, n_bits=16))
+        vs = sorted(tuple(r) for r in simhash(docs, n_bits=16).collect())
+        assert cs == vs and len(vs) == len(rows)
 
     check()
 

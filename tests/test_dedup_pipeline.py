@@ -4,11 +4,24 @@ exact→LSH→CC→anti-join dedup pipeline."""
 import pytest
 from pyspark.sql import Observation
 
+from information_extraction_for_chinese_nlp_spark.operators import dedup as dedup_mod
 from information_extraction_for_chinese_nlp_spark.operators.dedup import (
     dedup_pipeline,
     minhash_lsh_pairs,
     ngram_jaccard_pairs,
 )
+
+# line_dedup picks its leg from the hot-set size alone (in-row while
+# n_hot <= _INROW_HOT_LIMIT); these cutoffs put ANY hot set on one leg
+LINE_DEDUP_LEGS = {"inrow": 1 << 62, "relational": -1}
+
+
+def _on_leg(monkeypatch, leg):
+    monkeypatch.setattr(dedup_mod, "_INROW_HOT_LIMIT", LINE_DEDUP_LEGS[leg])
+
+
+def _plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
 
 # 30 identical docs (an exact-dup cluster: identical signatures -> one
 # O(n²) bucket) + a near-dup pair + a loner.
@@ -125,8 +138,8 @@ def test_dedup_pipeline_no_near_dups_keeps_all_canonicals(spark):
 
 def test_simhash_rejects_over_32_bits(spark):
     """md5 has 32 hex digits: n_bits > 32 would silently vote every high
-    bit to 0 (identical high bands for ALL docs) — must raise like
-    simhash_np does."""
+    bit to 0 (identical high bands for ALL docs) — must raise and point
+    at simhash_wide."""
     import pytest
 
     from information_extraction_for_chinese_nlp_spark.operators.dedup import simhash
@@ -174,12 +187,10 @@ def test_simhash_bucket_distribution_observed(spark):
     assert 0 < m["p99_bucket_size"] <= m["max_bucket_size"]
 
 
-def test_line_dedup_boilerplate_removal(spark):
+def test_line_dedup_boilerplate_removal(spark, monkeypatch):
     """Hot lines (>= min_df distinct docs) vanish from every document;
     empty lines survive as structure; per-doc drop counts are exact;
-    the max_hot_lines guard fails fast."""
-    import pytest
-
+    both legs agree when every line is hot."""
     from information_extraction_for_chinese_nlp_spark.operators.dedup import (
         line_dedup,
     )
@@ -200,48 +211,45 @@ def test_line_dedup_boilerplate_removal(spark):
     )
     r = line_dedup(solo, min_df=3).collect()[0]
     assert r.text == "x\nx\nx" and r.n_dropped == 0  # df counts DISTINCT docs
-    # the broadcast-held strategies fail fast past max_hot_lines ...
-    for forced in ("inrow", "hashset"):
-        with pytest.raises(ValueError, match="max_hot_lines"):
-            line_dedup(docs, min_df=1, max_hot_lines=2,
-                       strategy=forced).collect()
-    # ... auto instead falls back to the uncapped relational leg: at
-    # min_df=1 every distinct non-empty line is hot (n_hot=10 > the
-    # max_hot_lines=2 budget, which auto respects even below
-    # inrow_hot_limit), so every doc collapses to its empty lines and
-    # NOTHING raises
-    auto = {r.doc_id: r for r in
-            line_dedup(docs, min_df=1, max_hot_lines=2).collect()}
-    assert len(auto) == 4
-    assert auto[1].text == "" and auto[1].n_dropped == 3  # empty line kept
-    assert auto[3].text == "" and auto[3].n_dropped == 1
-    # and auto honors max_hot_lines as the broadcast budget even when
-    # n_hot is under inrow_hot_limit: results match the forced
-    # relational leg exactly
-    assert sorted(auto.values()) == sorted(
-        line_dedup(docs, min_df=1, strategy="relational").collect()
+    # at min_df=1 every distinct non-empty line is hot (n_hot=10), so
+    # every doc collapses to its empty lines — identically on both legs
+    legs = {}
+    for leg in LINE_DEDUP_LEGS:
+        _on_leg(monkeypatch, leg)
+        legs[leg] = sorted(line_dedup(docs, min_df=1).collect())
+    assert legs["inrow"] == legs["relational"]
+    every = {r.doc_id: r for r in legs["relational"]}
+    assert len(every) == 4
+    assert every[1].text == "" and every[1].n_dropped == 3  # empty line kept
+    assert every[3].text == "" and every[3].n_dropped == 1
+
+
+def test_line_dedup_leg_cutoff(spark):
+    """The shipped cutoff: a hot set of exactly _INROW_HOT_LIMIT lines
+    takes the in-row leg (no corpus explode in the plan), one more line
+    takes the relational leg — with identical drops either side."""
+    from information_extraction_for_chinese_nlp_spark.operators.dedup import (
+        line_dedup,
     )
-    with pytest.raises(ValueError, match="strategy"):
-        line_dedup(docs, strategy="bogus")
-    # auto's middle band: n_hot above inrow_hot_limit but inside the
-    # broadcast budget dispatches to the hashset leg — identical rows
-    base = sorted(line_dedup(docs, min_df=3).collect())
-    assert sorted(
-        line_dedup(docs, min_df=3, inrow_hot_limit=0).collect()
-    ) == base
-    # ... and a budget below the hot-set size pushes auto to relational
-    assert sorted(
-        line_dedup(docs, min_df=3, inrow_hot_limit=0,
-                   max_hot_lines=1).collect()
-    ) == base
+
+    limit = dedup_mod._INROW_HOT_LIMIT
+    for n_hot, relational in ((limit, False), (limit + 1, True)):
+        docs = spark.createDataFrame(
+            [(d, "\n".join([f"H{j}" for j in range(n_hot)] + [f"body {d}"]))
+             for d in range(3)],
+            "doc_id long, text string",
+        )
+        out = line_dedup(docs, min_df=3)
+        assert ("Generate" in _plan(out)) == relational, (n_hot, _plan(out))
+        assert sorted((r.text, r.n_dropped) for r in out.collect()) == [
+            (f"body {d}", n_hot) for d in range(3)]
 
 
-def test_line_dedup_strategy_parity(spark):
-    """All three membership strategies (in-row array scan, pandas
-    frozenset probe, relational broadcast anti-join + reassembly)
-    return IDENTICAL rows — including hot-only docs (text collapses to
-    ''), empty-line structure, and docs whose id column is not named
-    doc_id; and a caller column literally named `_hot` survives the
+def test_line_dedup_strategy_parity(spark, monkeypatch):
+    """Both membership legs (in-row array scan, relational broadcast
+    join + reassembly) return IDENTICAL rows — including hot-only docs
+    (text collapses to ''), empty-line structure, and docs whose id
+    column is not named doc_id; and a caller column literally named `_hot` survives the
     in-row crossJoin (collision suffix loop)."""
     from pyspark.sql import functions as F
 
@@ -263,14 +271,13 @@ def test_line_dedup_strategy_parity(spark):
     def key(r):
         return (r.doc_id, r.text or "", r.n_dropped if r.n_dropped is not None else -1)
 
-    outs = {
-        s: sorted(
-            line_dedup(docs, min_df=3, id_col="id", strategy=s).collect(),
-            key=key,
+    outs = {}
+    for leg in LINE_DEDUP_LEGS:
+        _on_leg(monkeypatch, leg)
+        outs[leg] = sorted(
+            line_dedup(docs, min_df=3, id_col="id").collect(), key=key
         )
-        for s in ("inrow", "hashset", "relational")
-    }
-    assert outs["inrow"] == outs["hashset"] == outs["relational"]
+    assert outs["inrow"] == outs["relational"]
     by_id = {r.doc_id: r for r in outs["inrow"]}
     assert by_id[2].text == "" and by_id[2].n_dropped == 2
     assert by_id[1].text == "\nkeep one" and by_id[1].n_dropped == 2
@@ -281,11 +288,11 @@ def test_line_dedup_strategy_parity(spark):
     # relational reassembly groups on a per-row key, not the doc id)
     dupes = sorted(r.text for r in outs["relational"] if r.doc_id == 6)
     assert dupes == ["dupe id a", "dupe id b"]
-    # auto dispatch: tiny hot set -> inrow; forced thresholds exercise
-    # the other two legs above, and a 0-hot corpus is identity on every leg
+    # a 0-hot corpus is identity on every leg
     clean = docs.select("id", F.concat(F.lit("u"), F.col("id")).alias("text"))
-    for s in ("inrow", "hashset", "relational"):
-        rows = line_dedup(clean, min_df=2, id_col="id", strategy=s).collect()
+    for leg in LINE_DEDUP_LEGS:
+        _on_leg(monkeypatch, leg)
+        rows = line_dedup(clean, min_df=2, id_col="id").collect()
         assert all(r.n_dropped == 0 for r in rows)
         # u6 rides twice (duplicate id 6) but only ONE distinct doc ->
         # df=1, below min_df, so it survives on every leg
@@ -311,8 +318,8 @@ def test_line_dedup_clean_corpus_is_identity(spark, sf_dir):
     assert joined.filter(F.col("orig") != F.col("text")).count() == 0
 
 
-def test_line_dedup_keep_columns(spark):
-    """keep= carries passenger columns through ALL THREE strategies
+def test_line_dedup_keep_columns(spark, monkeypatch):
+    """keep= carries passenger columns through BOTH legs
     unchanged — including passengers named after the legs' INTERNAL
     working columns (_line/_s/_pos...), which the shared suffix
     discipline must clear on every leg, not just in-row; reserved
@@ -331,13 +338,13 @@ def test_line_dedup_keep_columns(spark):
         "_line string, _s string, _pos string",
     )
     passengers = ("lang", "extra", "_line", "_s", "_pos")
-    outs = {
-        s: sorted(
-            line_dedup(docs, min_df=3, strategy=s, keep=passengers).collect()
+    outs = {}
+    for leg in LINE_DEDUP_LEGS:
+        _on_leg(monkeypatch, leg)
+        outs[leg] = sorted(
+            line_dedup(docs, min_df=3, keep=passengers).collect()
         )
-        for s in ("inrow", "hashset", "relational")
-    }
-    assert outs["inrow"] == outs["hashset"] == outs["relational"]
+    assert outs["inrow"] == outs["relational"]
     r0 = {r.doc_id: r for r in outs["inrow"]}
     assert r0[0].lang == "en" and r0[0].extra == 7 and r0[0].text == "a zero"
     assert r0[1].lang == "zh" and r0[1].n_dropped == 1
@@ -368,9 +375,9 @@ def test_line_dedup_rewrite_helper(spark):
 
 
 @pytest.mark.slow
-def test_line_dedup_randomized_three_way_oracle(spark):
+def test_line_dedup_randomized_three_way_oracle(spark, monkeypatch):
     """Seeded random corpora (empty lines, repeated lines, singleton
-    docs, varying min_df) through ALL THREE membership strategies must
+    docs, varying min_df) through BOTH membership legs must
     match an independent pure-Python reference implementation exactly.
     Slow-ish sweep; the deterministic seeds make failures replayable."""
     import random
@@ -404,21 +411,20 @@ def test_line_dedup_randomized_three_way_oracle(spark):
         ]
         want = py_oracle(rows, min_df)
         docs = spark.createDataFrame(rows, "doc_id long, text string")
-        for strat in ("inrow", "hashset", "relational"):
+        for leg in LINE_DEDUP_LEGS:
+            _on_leg(monkeypatch, leg)
             got = sorted(
                 (r.doc_id, r.text, r.n_dropped)
-                for r in line_dedup(docs, min_df=min_df,
-                                    strategy=strat).collect()
+                for r in line_dedup(docs, min_df=min_df).collect()
             )
-            assert got == want, (seed, min_df, strat)
+            assert got == want, (seed, min_df, leg)
 
 
-def test_line_dedup_relational_unbounded_hot_set(spark):
-    """The relational leg must be GENUINELY unbounded in |hot|
-    (VERDICT r6): past broadcast_hot_limit the hot-side join plans
+def test_line_dedup_relational_unbounded_hot_set(spark, monkeypatch):
+    """The relational leg must be GENUINELY unbounded in |hot|: past
+    _BROADCAST_HOT_LIMIT the hot-side join plans
     WITHOUT the F.broadcast hint (AQE picks a shuffle join), with rows
-    identical to the broadcast-hinted plan; and auto's fallback to the
-    shuffle-bearing leg warns instead of silently changing plan shape."""
+    identical to the broadcast-hinted plan."""
     from information_extraction_for_chinese_nlp_spark.operators.dedup import (
         line_dedup,
     )
@@ -432,27 +438,20 @@ def test_line_dedup_relational_unbounded_hot_set(spark):
         "doc_id long, text string",
     )
 
-    def plan(df) -> str:
-        return df._jdf.queryExecution().executedPlan().toString()
-
-    hinted = line_dedup(docs, min_df=3, strategy="relational")
-    unhinted = line_dedup(docs, min_df=3, strategy="relational",
-                          broadcast_hot_limit=0)
+    _on_leg(monkeypatch, "relational")
+    hinted = line_dedup(docs, min_df=3)
+    monkeypatch.setattr(dedup_mod, "_BROADCAST_HOT_LIMIT", 0)
+    unhinted = line_dedup(docs, min_df=3)
     # plan shape: the hint is present under the limit, absent past it
-    assert "BroadcastHashJoin" in plan(hinted), plan(hinted)
-    assert "BroadcastHashJoin" not in plan(unhinted), plan(unhinted)
+    assert "BroadcastHashJoin" in _plan(hinted), _plan(hinted)
+    assert "BroadcastHashJoin" not in _plan(unhinted), _plan(unhinted)
     # row parity between the two relational plans (and the nullable-text
     # row round-trips on both)
     def key(r):
         return (r.doc_id, r.text or "", -1 if r.n_dropped is None else r.n_dropped)
     assert sorted(hinted.collect(), key=key) == sorted(
         unhinted.collect(), key=key)
-    # auto past max_hot_lines now dispatches LOUDLY (ADVICE r6): the
-    # corpus gains a shuffle, so callers get a RuntimeWarning, not a
-    # silent performance cliff
-    with pytest.warns(RuntimeWarning, match="relational"):
-        rows = line_dedup(docs, min_df=1, max_hot_lines=2).collect()
-    assert len(rows) == 5
+    assert len(hinted.collect()) == 5
 
 
 def test_line_dedup_rewrite_positional_layout(spark):

@@ -149,26 +149,21 @@ def test_aqe_splits_skewed_join(spark):
 
 
 def test_vectorized_minhash_cuts_shuffles(spark, sf_dir):
-    """Scale shape: the vectorized signature path must plan strictly
-    fewer Exchanges than the Catalyst formulation (one MapInPandas
-    replaces the token-explode + two per-doc aggregations) and exactly
-    one Python stage."""
+    """Scale shape: minhash_lsh_pairs plans exactly two Exchanges (the
+    bucket aggregation and the pair distinct) around ONE Python stage —
+    the Catalyst token-explode + per-seed aggregation it replaced
+    planned four — and no join."""
     from information_extraction_for_chinese_nlp_spark.operators.dedup import (
         minhash_lsh_pairs,
     )
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-
-    def plan(vectorized):
-        df = minhash_lsh_pairs(docs, n_bands=4, rows_per_band=2,
-                               vectorized=vectorized)
-        return df._jdf.queryExecution().executedPlan().toString()
-
-    vec, cat = plan(True), plan(False)
-    assert vec.count("Exchange") < cat.count("Exchange"), (
-        vec.count("Exchange"), cat.count("Exchange"))
-    assert vec.count("MapInPandas") == 1
-    assert "Join" not in vec and "Join" not in cat
+    plan = minhash_lsh_pairs(
+        docs, n_bands=4, rows_per_band=2
+    )._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("Exchange") == 2, plan
+    assert plan.count("MapInPandas") == 1
+    assert "Join" not in plan
 
 
 def test_aqe_floor_keeps_cpu_stage_wide(spark):

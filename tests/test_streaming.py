@@ -493,10 +493,6 @@ def test_stream_line_dedup_prevalidates_and_dedups_deterministically(
     ).coalesce(1).write.parquet(src)
     stream = spark.readStream.schema(schema).parquet(src)
 
-    # strategy typo: before start, no checkpoint dir
-    with pytest.raises(ValueError, match="strategy"):
-        stream_line_dedup(stream, str(tmp_path / "o1"),
-                          str(tmp_path / "c1"), strategy="bogus")
     # passenger column colliding with a fixed output name: before start
     bad = StructType(schema.fields + [StructField("n_dropped", LongType())])
     with pytest.raises(ValueError, match="n_dropped"):
@@ -507,7 +503,6 @@ def test_stream_line_dedup_prevalidates_and_dedups_deterministically(
     with pytest.raises(ValueError, match="'uid'"):
         stream_line_dedup(stream, str(tmp_path / "o3"),
                           str(tmp_path / "c3"), id_col="uid")
-    assert not (tmp_path / "c1").exists()
     assert not (tmp_path / "c2").exists()
     assert not (tmp_path / "c3").exists()
 
