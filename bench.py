@@ -577,6 +577,16 @@ def run_skew_ab() -> None:
         f.write("\n".join(lines))
 
 
+def _cc_chains(spark, n_nodes: int):
+    """The q10 graph shape: ``n_nodes`` ids in chains of 8 (7 edges
+    each, 7/4 symmetric rows per node)."""
+    from pyspark.sql import functions as F
+
+    return spark.range(n_nodes).filter((F.col("id") % 8) != 7).select(
+        F.col("id").alias("src"), (F.col("id") + 1).alias("dst")
+    )
+
+
 def _cc_setup(spark, n_nodes: int | None = None):
     """Build the accumulated-graph state ONCE (outside the timed
     queries): base edges, converged labels (what a real ingest run reads
@@ -588,10 +598,7 @@ def _cc_setup(spark, n_nodes: int | None = None):
     )
 
     n_nodes = n_nodes or CC_NODES
-    ids = spark.range(n_nodes)
-    base = ids.filter((F.col("id") % 8) != 7).select(
-        F.col("id").alias("src"), (F.col("id") + 1).alias("dst")
-    )
+    base = _cc_chains(spark, n_nodes)
     batch = spark.range(n_nodes // 100).select(
         (F.col("id") * 16).alias("src"),
         (F.col("id") * 16 + 8).alias("dst"),
@@ -611,6 +618,61 @@ def _cc_full(spark, state):
     return connected_components(
         state["base"].union(state["batch"]), pointer_jump=True
     )
+
+
+def run_cc_legs() -> None:
+    """Driver-leg vs distributed-leg A/B behind
+    components._LOCAL_CC_LIMIT: connected_components(pointer_jump=True)
+    over q10-shaped chain graphs at three sizes, each leg forced by
+    patching the limit, same node count and component checksum on both.
+    Medians of 4 alternating pairs per size; appends the table to
+    BASELINE.md."""
+    import statistics
+
+    from pyspark.sql import functions as F
+
+    from information_extraction_for_chinese_nlp_spark.operators import components
+    from information_extraction_for_chinese_nlp_spark.session import get_spark
+
+    pairs = 4
+    legs = {"driver": 1 << 30, "distributed": -1}
+    shipped = components._LOCAL_CC_LIMIT
+    spark = get_spark("cc-legs", master=f"local[{CPUS}]",
+                      shuffle_partitions=max(CPUS, 8))
+    lines = [
+        "",
+        "## connected_components leg A/B (chains of 8, pointer_jump=True, "
+        "local[%d], median of %d alternating pairs)" % (CPUS, pairs),
+        "",
+        "| nodes | symmetric edge rows | driver leg sec | distributed leg sec |",
+        "| --- | --- | --- | --- |",
+    ]
+    for n_nodes in (20_000, 100_000, 400_000):
+        edges = _cc_chains(spark, n_nodes).localCheckpoint(eager=True)
+        n_sym = 2 * edges.count()
+        secs = {leg: [] for leg in legs}
+        results = set()
+        try:
+            for i in range(pairs):
+                for leg in (list(legs) if i % 2 == 0 else list(legs)[::-1]):
+                    components._LOCAL_CC_LIMIT = legs[leg]
+                    t0 = time.time()
+                    row = components.connected_components(
+                        edges, pointer_jump=True
+                    ).agg(F.count("*"), F.sum("component")).first()
+                    secs[leg].append(time.time() - t0)
+                    results.add(tuple(row))
+        finally:
+            components._LOCAL_CC_LIMIT = shipped
+        assert len(results) == 1, results
+        med = {leg: round(statistics.median(v), 2) for leg, v in secs.items()}
+        print(json.dumps({"nodes": n_nodes, "sym_rows": n_sym, **med}))
+        lines.append(f"| {n_nodes:,} | {n_sym:,} | {med['driver']} "
+                     f"| {med['distributed']} |")
+    spark.stop()
+    with open(os.path.join(os.path.dirname(os.path.abspath(__file__)),
+                           "BASELINE.md"), "a") as f:
+        f.write("\n".join(lines) + "\n")
 
 
 def _cc_incremental(state):
@@ -917,6 +979,8 @@ if __name__ == "__main__":
         run_line_dedup_ab()
     elif "--line-dedup-oversized" in sys.argv:
         run_line_dedup_oversized()
+    elif "--cc-legs" in sys.argv:
+        run_cc_legs()
     elif "--skew-ab" in sys.argv:
         run_skew_ab()
     elif "--sf1" in sys.argv:

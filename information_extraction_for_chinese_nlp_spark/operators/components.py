@@ -1,13 +1,28 @@
 """Connected components — canonicalization over the entity match graph.
 
-Pure-DataFrame iterative min-label propagation (no GraphFrames):
-each round every node adopts the minimum component id in its closed
-neighborhood; convergence in O(graph diameter) rounds. Lineage is
-truncated each round so the plan doesn't grow unboundedly
-(SURVEY.md §4 item 3) — ``localCheckpoint`` by default, reliable
-``checkpoint()`` with ``durable=True`` for fault-tolerant cluster runs. Entity-match graphs are unions of
-small cliques (diameter ≲ 2-3), so this beats the large-star/small-star
-constant factor while having the same shuffle profile per round.
+Every call first builds the symmetric edge table from ONE read of its
+input (each row exploded into both directions, self-loops and NULL
+endpoints dropped, deduplicated) and materializes it, observing its
+row count on that same job. The count picks one of two legs:
+
+- driver leg (at most ``_LOCAL_CC_LIMIT`` symmetric rows): the
+  undirected half is collected once and labeled by a union-find on the
+  driver (:func:`_local_components`) — exact, no loop, no per-round
+  jobs. The graphs this module's callers build are almost all here:
+  entity-match cliques, dedup near-dup clusters (the ``corpus_curate``
+  graph is ~15k symmetric rows, yet its long near-dup runs needed 16
+  propagation rounds) and ``merge_components``' contraction folds.
+- distributed leg (above the limit): pure-DataFrame iterative
+  min-label propagation (no GraphFrames) — each round every node adopts
+  the minimum component id in its closed neighborhood, so it converges
+  in O(graph diameter) rounds (O(log diameter) with ``pointer_jump``).
+  Lineage is truncated each round so the plan doesn't grow unboundedly
+  (SURVEY.md §4 item 3) — ``localCheckpoint`` by default, reliable
+  ``checkpoint()`` with ``durable=True`` for fault-tolerant cluster
+  runs.
+
+Both legs label a component by its minimum node id and emit the same
+``(node, component)`` rows.
 """
 
 from __future__ import annotations
@@ -15,12 +30,25 @@ from __future__ import annotations
 import contextlib
 import shutil
 import tempfile
+import warnings
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..session import scoped_conf
+
+# Symmetric edge rows (twice the undirected edges) at or under which a
+# graph is labeled on the driver; merge_components' contraction probe
+# collects up to this many edge rows too. It is a driver-memory budget,
+# not a speed crossover: the driver leg won at every size measured
+# (`bench.py --cc-legs`, chains of 8, local[4]: 1.24 vs 3.69 s at 35k
+# rows, 1.96 vs 4.35 s at 175k, 5.22 vs 8.7 s at 700k). At the limit
+# the driver holds 100k collected Rows, a 200k-entry union-find dict
+# and the 200k label tuples it hands back — a few tens of MB of Python
+# objects — and the 500k-node q10_cc_full chain graph (~885k rows)
+# stays distributed.
+_LOCAL_CC_LIMIT = 200_000
 
 
 def connected_components(
@@ -35,7 +63,17 @@ def connected_components(
     broadcast_label_limit: int = 100_000,
 ) -> DataFrame:
     """edges(src, dst) undirected -> (node, component) with component =
-    min node id of the component (lexicographic for strings).
+    min node id of the component (lexicographic for strings). Rows with
+    a NULL endpoint and self-loops carry no connectivity: their nodes
+    appear only through other edges.
+
+    The symmetric edge count picks the leg (module docstring): at or
+    under ``_LOCAL_CC_LIMIT`` rows the driver leg labels the graph
+    exactly and every option below except ``durable`` is moot. The
+    remaining options shape only the distributed leg. ``max_iter``
+    bounds its rounds; if they run out while labels still change, the
+    unconverged labels are returned with a ``RuntimeWarning`` naming
+    the rounds run and the last round's changed count.
 
     ``durable=False`` truncates lineage with ``localCheckpoint`` —
     fastest, but the blocks live on executors and die with them.
@@ -117,7 +155,7 @@ def connected_components(
             # runs must not accumulate unbounded checkpoint RDD files in
             # /tmp. setCheckpointDir is global SparkContext state — we
             # only overwrite it when unset or when it points at a dir WE
-            # created, and we delete our own subdir after convergence
+            # created, and we delete our own subdir after labeling
             # (see finally below).
             cleanup_dir = tempfile.mkdtemp(prefix="spark-cc-checkpoint-")
             sc.setCheckpointDir(cleanup_dir)
@@ -127,33 +165,53 @@ def connected_components(
         return df.checkpoint() if durable else df.localCheckpoint()
 
     spark = edges.sparkSession
-    # ExitStack (closed in the finally) keeps the loop body at its
-    # original indentation; both conf scopes restore on every path
+    # ExitStack (closed in the finally): the distributed leg's conf
+    # scopes restore on every path
     scope = contextlib.ExitStack()
-    if aqe_min_partition_size is not None:
-        scope.enter_context(scoped_conf(spark, {
-            "spark.sql.adaptive.coalescePartitions.minPartitionSize":
-                aqe_min_partition_size,
-        }))
     try:
-        from pyspark.sql import Observation
-
-        # row counts for the partition derivation and the broadcast
-        # decision ride the cut jobs as Observation metrics — zero
-        # extra actions (a separate count per decision measurably taxed
-        # tiny-graph callers like build_graph's entity CC, r8)
+        # row counts for the leg choice, the partition derivation and
+        # the broadcast decision ride the cut jobs as Observation
+        # metrics — zero extra actions (a separate count per decision
+        # measurably taxed tiny-graph callers like build_graph's entity
+        # CC, r8)
         sym_obs = Observation()
-        sym = edges.select(
-            F.col(src).alias("a"), F.col(dst).alias("b")
-        ).union(edges.select(F.col(dst).alias("a"), F.col(src).alias("b")))
+        # one read of `edges`: every row emits both directions, so the
+        # upstream pair pipeline (MinHash buckets in dedup_pipeline, the
+        # banded linker in build_graph) runs once — a union of two
+        # selects plans that whole subtree twice
+        both = F.explode(F.array(
+            F.struct(F.col(src).alias("a"), F.col(dst).alias("b")),
+            F.struct(F.col(dst).alias("a"), F.col(src).alias("b")),
+        ))
         sym = cut(
-            sym.filter(F.col("a") != F.col("b"))
+            edges.select(both.alias("_e"))
+            .select("_e.a", "_e.b")
+            .filter(F.col("a") != F.col("b"))
             .distinct()
             .observe(sym_obs, F.count(F.lit(1)).alias("n"))
         )
+        n_sym = sym_obs.get["n"]
 
+        if n_sym <= _LOCAL_CC_LIMIT:
+            # driver leg: the a < b half of the symmetric table is the
+            # undirected edge set; one collect off the checkpoint blocks
+            # and a union-find replace every per-round job
+            labels = _driver_labels(
+                spark,
+                sym.filter(F.col("a") < F.col("b")).collect(),
+                sym.schema["a"].dataType,
+            )
+            if cleanup_dir is not None:
+                # the driver-built frame never reads the checkpoint files
+                shutil.rmtree(cleanup_dir, ignore_errors=True)
+            return labels
+
+        if aqe_min_partition_size is not None:
+            scope.enter_context(scoped_conf(spark, {
+                "spark.sql.adaptive.coalescePartitions.minPartitionSize":
+                    aqe_min_partition_size,
+            }))
         if loop_rows_per_partition is not None:
-            n_sym = sym_obs.get["n"]
             session_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
             loop_parts = max(
                 1,
@@ -178,6 +236,7 @@ def connected_components(
         def hint(df: DataFrame) -> DataFrame:
             return F.broadcast(df) if bcast_labels else df
 
+        changed = 0
         for _round in range(max_iter):
             # neighbor labels: for edge (a,b), b hears a's component
             msgs = sym.join(hint(labels), sym["a"] == labels["node"]).select(
@@ -206,15 +265,13 @@ def connected_components(
             # whose own label may be smaller — follow one hop
             # (label-of-label), so labels travel ~2^k hops after k
             # rounds instead of k, turning O(diameter) rounds into
-            # O(log diameter) on DEEP graphs (chains, long near-dup
-            # runs; measured ~20% wall win on the 500k-node chain bench
-            # fixture, q10_cc_full). Default OFF because this module's
-            # common callers (entity-match cliques, dedup near-dup
-            # clusters, merge_components' contraction folds) are
-            # diameter ≲ 2-3 and converge in 2-3 rounds either way —
-            # for them the extra full-label-set join per round is
-            # overhead, not acceleration. Turn it on when the edge set
-            # can chain (path-shaped graphs, transitive near-dup runs).
+            # O(log diameter) on DEEP graphs (measured ~20% wall win on
+            # the 500k-node chain bench fixture, q10_cc_full). Default
+            # OFF: graphs that reach this leg are past _LOCAL_CC_LIMIT,
+            # and for a shallow one (entity-match cliques) the extra
+            # full-label-set join per round is overhead. Turn it on
+            # when the edge set can chain (path-shaped graphs,
+            # transitive near-dup runs).
             if pointer_jump:
                 hop = propagated.select(
                     F.col("node").alias("_c"), F.col("component").alias("_cc")
@@ -230,8 +287,6 @@ def connected_components(
             # that materializes the round's checkpoint — the pre-r8
             # shape paid a separate (cheap but scheduler-round-trip)
             # count job per round over the materialized blocks
-            from pyspark.sql import Observation
-
             obs = Observation()
             new_labels = cut(
                 propagated.observe(
@@ -245,6 +300,14 @@ def connected_components(
             labels = new_labels.drop("_prev")
             if changed == 0:
                 break
+        if changed:
+            warnings.warn(
+                f"connected_components: {max_iter} rounds ran and {changed} "
+                "labels still changed in the last one; the labels are not "
+                "converged (raise max_iter or set pointer_jump=True)",
+                RuntimeWarning,
+                stacklevel=2,
+            )
         if cleanup_dir is not None:
             # detach the result from the reliable checkpoint files (the
             # localCheckpoint materializes its blocks executor-side) so
@@ -262,14 +325,16 @@ def connected_components(
 
 
 def _local_components(edge_rows) -> list:
-    """Driver-side union-find over a SMALL edge list (the contraction
-    graph of a merge fold), components labeled by min member id —
-    byte-for-byte the labeling :func:`connected_components` produces on
-    the same edges. Invariant: a tree's root is always the minimum
-    element of its component (union parents the smaller root), so
-    ``find(n)`` is the min member. Self-loop rows are skipped entirely,
-    and loop-only nodes are never emitted — matching the distributed
-    operator's ``a != b`` edge filter. Python's ``<`` on str compares
+    """Driver-side union-find over an edge list of at most
+    ``_LOCAL_CC_LIMIT`` rows (the driver leg of
+    :func:`connected_components`, a small merge fold), components
+    labeled by min member id — byte-for-byte the labeling the
+    distributed leg produces on the same edges. Invariant: a tree's
+    root is always the minimum element of its component (union parents
+    the smaller root), so ``find(n)`` is the min member. Self-loop rows
+    are skipped entirely, and loop-only nodes are never emitted —
+    matching the distributed leg's ``a != b`` edge filter. Python's
+    ``<`` on str compares
     code points, which equals Spark's default UTF8-binary ordering
     (UTF-8 byte order preserves code-point order), so string component
     ids agree with ``F.min`` too."""
@@ -299,13 +364,20 @@ def _local_components(edge_rows) -> list:
     return [(n, find(n)) for n in parent]
 
 
+def _driver_labels(spark, edge_rows, id_type,
+                   names=("node", "component")) -> DataFrame:
+    """:func:`_local_components` of collected edge rows as a two-column
+    frame of the id type (the schema the distributed leg produces)."""
+    schema = T.StructType([T.StructField(n, id_type, True) for n in names])
+    return spark.createDataFrame(_local_components(edge_rows), schema)
+
+
 def merge_components(
     prev_labels: DataFrame,
     new_edges: DataFrame,
     src: str = "src",
     dst: str = "dst",
     max_iter: int = 25,
-    local_fold_threshold: int | None = 20_000,
 ) -> DataFrame:
     """Incremental connected components: fold a batch of new edges into a
     converged (node, component) labeling WITHOUT re-running CC over the
@@ -325,19 +397,17 @@ def merge_components(
     Equivalence with a full recompute over the union graph is
     pytest-pinned (random planted graphs) and DuckDB-oracled.
 
-    ``local_fold_threshold``: the contraction graph is bounded by the
-    NEW BATCH, not the accumulated graph — at ingest cadence it is
+    Small folds stay on the driver: the contraction graph is bounded
+    by the NEW BATCH, not the accumulated graph — at ingest cadence
     usually a few thousand edges, where the distributed iteration's
-    floor (~2 actions per round: join+groupBy materialization and a
-    convergence probe, each a full scheduler round-trip) dominates wall
-    time. At or under this many contracted edges the fold collects them
-    once and runs a driver-side union-find (:func:`_local_components`),
-    broadcasting the tiny relabel map back — one action instead of
-    ~2+2·rounds, identical labeling (parity pytest-pinned). The probe
-    is a single ``limit(threshold+1).collect()``: if it comes back
-    full, the batch is genuinely large and the iterative distributed
-    path runs as before. ``None`` disables the probe (always
-    distributed — the pre-round-7 behavior)."""
+    per-round scheduler round-trips dominate wall time. The fold probes
+    it with a single ``limit(_LOCAL_CC_LIMIT + 1).collect()`` (the
+    driver-memory budget :func:`connected_components` uses for its own
+    driver leg): if the probe comes back short, the collected rows are
+    labeled by :func:`_local_components` and the tiny relabel map is
+    broadcast back — one action, identical labeling (parity
+    pytest-pinned). A full probe means a genuinely large batch, and
+    ``connected_components`` runs on the contraction graph instead."""
     # self-loops carry no connectivity and would otherwise surface their
     # node as a spurious singleton (connected_components never emits
     # loop-only nodes — keep the same contract)
@@ -357,25 +427,16 @@ def merge_components(
             F.coalesce("_cd", "_d").alias("dst"),
         )
     )
-    local_fold = False
-    relabel = None
-    if local_fold_threshold is not None:
-        probe = contracted.limit(local_fold_threshold + 1).collect()
-        if len(probe) <= local_fold_threshold:
-            pairs = _local_components((r[0], r[1]) for r in probe)
-            id_type = contracted.schema["src"].dataType
-            schema = T.StructType([
-                T.StructField("_key", id_type, True),
-                T.StructField("_new", id_type, True),
-            ])
-            relabel = F.broadcast(
-                prev_labels.sparkSession.createDataFrame(pairs, schema)
-            )
-            local_fold = True
-        # else: probe came back full — large batch, fall through to the
-        # iterative distributed path (contracted recomputes its two
-        # label joins once more; negligible next to the iteration).
-    if relabel is None:
+    probe = contracted.limit(_LOCAL_CC_LIMIT + 1).collect()
+    local_fold = len(probe) <= _LOCAL_CC_LIMIT
+    if local_fold:
+        relabel = F.broadcast(_driver_labels(
+            prev_labels.sparkSession, probe, contracted.schema["src"].dataType,
+            ("_key", "_new"),
+        ))
+    else:
+        # probe came back full — large batch (contracted recomputes its
+        # two label joins once more; negligible next to the labeling)
         relabel = connected_components(contracted, max_iter=max_iter).select(
             F.col("node").alias("_key"), F.col("component").alias("_new")
         )

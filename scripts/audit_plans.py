@@ -207,8 +207,11 @@ What to read: the exact-keep LEFT SEMI join sits BELOW the banding
 stage, so identical texts collapse to one canonical doc before any
 signature is computed — the O(n²) identical-signature bucket (the case
 max_bucket guards) structurally cannot form. The CC labels arrive as a
-localCheckpoint scan (lineage truncated per iteration), and the final
-keep-list is a LEFT ANTI join — no collect anywhere.
+Scan ExistingRDD: connected_components read the pairs once, and a
+near-dup graph within components._LOCAL_CC_LIMIT symmetric rows (this
+one) was labeled on the driver from one collect of its edge set; a
+larger graph arrives as the distributed loop's localCheckpoint scan.
+The keep-list is a LEFT ANTI join — no self-join anywhere.
 """))
 
 q = decontaminate(docs, docs.filter(F.col("doc_id") % 97 == 0), n=8)
@@ -259,17 +262,20 @@ _batch = spark.range(1_000).select(
 )
 q = merge_components(_prev, _batch)
 sections.append(("merge_components (incremental CC fold)", plan_of(q), """
-What to read: the iterative CC subtree consumes ONLY the contraction
-graph (one edge per NEW edge, endpoints mapped through prev labels via
-two broadcast-able joins) — the accumulated graph appears exactly
-twice, both times as a NON-iterative single-pass join (the relabel map
-join and the new-node anti-join), reading the converged labels from
-their checkpoint scan. That is the incrementality claim in plan form:
-per-batch cost = CC(batch-sized graph) + two linear joins over the
-label table, never CC(accumulated graph). Benchmarked as
-q10_cc_full vs q10b_cc_incremental (sf-independent synthetic fixture:
-500k-node chain graph, 1% batch) — the fold runs ~4x faster and its
-iterative stages touch only ~5k contraction edges vs 437k.
+What to read: the labeling consumes ONLY the contraction graph (one
+edge per NEW edge, endpoints mapped through prev labels via two
+broadcast-able joins). It fits components._LOCAL_CC_LIMIT here, so it
+was collected once by the probe, labeled by a driver union-find and
+enters as the broadcast relabel map (Scan ExistingRDD under a
+BroadcastExchange); a batch past the limit would run
+connected_components on the contraction graph alone. The accumulated
+graph appears exactly twice, both times as a NON-iterative single-pass
+join (the relabel map join and the new-node anti-join), reading the
+converged labels from their checkpoint scan. That is the
+incrementality claim in plan form: per-batch cost = CC(batch-sized
+graph) + two linear joins over the label table, never CC(accumulated
+graph). Benchmarked as q10_cc_full vs q10b_cc_incremental
+(sf-independent synthetic fixture: 500k-node chain graph, 1% batch).
 """))
 
 from information_extraction_for_chinese_nlp_spark.operators.fusion import fuse_triples

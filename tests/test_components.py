@@ -1,11 +1,47 @@
-"""Connected components: durable (reliable checkpoint) vs local-block
-lineage truncation must be behavior-identical; incremental merge must
-equal a full recompute."""
+"""Connected components: the driver leg (union-find over the collected
+symmetric edge table) and the distributed leg (iterative min-label
+propagation) must be behavior-identical; durable (reliable checkpoint)
+vs local-block lineage truncation too; incremental merge must equal a
+full recompute."""
 
+import random
+import warnings
+
+import pytest
+from pyspark.sql import functions as F
+
+from information_extraction_for_chinese_nlp_spark.operators import components as cc_mod
 from information_extraction_for_chinese_nlp_spark.operators.components import (
     connected_components,
     merge_components,
 )
+
+# the symmetric edge count picks the leg (driver while
+# n_sym <= _LOCAL_CC_LIMIT, the same constant bounds merge_components'
+# probe); these limits put ANY graph on one leg
+CC_LEGS = {"driver": 1 << 30, "distributed": -1}
+
+
+def _on_leg(monkeypatch, leg):
+    monkeypatch.setattr(cc_mod, "_LOCAL_CC_LIMIT", CC_LEGS[leg])
+
+
+def _driver_calls(monkeypatch) -> list:
+    """Record every call of the driver-side union-find."""
+    calls = []
+    real = cc_mod._local_components
+
+    def spy(rows):
+        calls.append(1)
+        return real(rows)
+
+    monkeypatch.setattr(cc_mod, "_local_components", spy)
+    return calls
+
+
+def _labels(df) -> list:
+    return sorted(map(tuple, df.collect()))
+
 
 EDGES = [
     ("a", "b"), ("b", "c"), ("c", "a"),
@@ -16,13 +52,18 @@ EDGES = [
 ]
 
 
-def test_durable_checkpoint_matches_local(spark):
+def test_durable_checkpoint_matches_local(spark, monkeypatch):
     edges = spark.createDataFrame(EDGES, "src string, dst string")
-    local = sorted(map(tuple, connected_components(edges).collect()))
-    durable = sorted(map(tuple, connected_components(edges, durable=True).collect()))
-    assert durable == local
+    per_leg = []
+    for leg in CC_LEGS:
+        _on_leg(monkeypatch, leg)
+        local = _labels(connected_components(edges))
+        durable = _labels(connected_components(edges, durable=True))
+        assert durable == local, leg
+        per_leg.append(durable)
+    assert per_leg[0] == per_leg[1]
     comps = {}
-    for node, comp in durable:
+    for node, comp in per_leg[0]:
         comps.setdefault(comp, set()).add(node)
     assert set(map(frozenset, comps.values())) == {
         frozenset("abc"), frozenset("def"), frozenset("ghi"),
@@ -30,42 +71,42 @@ def test_durable_checkpoint_matches_local(spark):
     }
 
 
-def test_durable_auto_checkpoint_cleaned_on_every_run(spark):
+def test_durable_auto_checkpoint_cleaned_on_every_run(spark, monkeypatch):
     """Run 2+ must also get a fresh auto-created checkpoint dir and clean
     it: getCheckpointDir() keeps returning run 1's (deleted) dir, so
     without ownership tracking later runs would checkpoint into a
-    recreated dir nobody removes."""
+    recreated dir nobody removes. Both legs checkpoint the symmetric
+    edge table there, so both must remove it."""
     import os
 
     sc = spark.sparkContext
     current = sc.getCheckpointDir()
     owned = getattr(sc, "_cc_auto_checkpoint_resolved", None)
     if current is not None and current != owned:
-        import pytest
-
         pytest.skip("session has a user-set checkpoint dir; auto branch off")
 
     edges = spark.createDataFrame(EDGES, "src string, dst string")
-    r1 = sorted(map(tuple, connected_components(edges, durable=True).collect()))
-    d1 = sc._cc_auto_checkpoint_resolved
-    r2 = sorted(map(tuple, connected_components(edges, durable=True).collect()))
-    d2 = sc._cc_auto_checkpoint_resolved
-    assert d1 != d2, "run 2 reused run 1's deleted checkpoint dir"
-    for d in (d1, d2):
-        path = d.split(":", 1)[1] if d.startswith("file:") else d
-        # setCheckpointDir creates a UUID subdir under our tempdir; the
-        # cleanup removes the whole tempdir
-        assert not os.path.exists(os.path.dirname(path)), d
-    assert r1 == r2
+    for leg in CC_LEGS:
+        _on_leg(monkeypatch, leg)
+        r1 = _labels(connected_components(edges, durable=True))
+        d1 = sc._cc_auto_checkpoint_resolved
+        r2 = _labels(connected_components(edges, durable=True))
+        d2 = sc._cc_auto_checkpoint_resolved
+        assert d1 != d2, f"{leg}: run 2 reused run 1's deleted checkpoint dir"
+        for d in (d1, d2):
+            path = d.split(":", 1)[1] if d.startswith("file:") else d
+            # setCheckpointDir creates a UUID subdir under our tempdir;
+            # the cleanup removes the whole tempdir
+            assert not os.path.exists(os.path.dirname(path)), (leg, d)
+        assert r1 == r2, leg
 
 
-def test_merge_components_equals_full_recompute(spark):
+def test_merge_components_equals_full_recompute(spark, monkeypatch):
     """Folding a batch of new edges into a converged labeling via the
     contraction graph must equal CC over the full union — on a random
     graph covering merges (old component ∪ old component), extensions
-    (old ∪ new node), brand-new chains, and untouched components."""
-    import random
-
+    (old ∪ new node), brand-new chains, and untouched components; on
+    both legs."""
     rnd = random.Random(42)
     nodes = [f"n{i:03d}" for i in range(60)]
     all_edges = [
@@ -76,22 +117,21 @@ def test_merge_components_equals_full_recompute(spark):
     old_df = spark.createDataFrame(old, "src string, dst string")
     new_df = spark.createDataFrame(new, "src string, dst string")
 
-    prev = connected_components(old_df)
-    merged = merge_components(prev, new_df)
-    full = connected_components(old_df.union(new_df))
-    assert sorted(map(tuple, merged.collect())) == sorted(
-        map(tuple, full.collect())
-    )
+    for leg in CC_LEGS:
+        _on_leg(monkeypatch, leg)
+        prev = connected_components(old_df)
+        merged = merge_components(prev, new_df)
+        full = connected_components(old_df.union(new_df))
+        assert _labels(merged) == _labels(full), leg
 
 
-def test_merge_components_cases(spark):
+def test_merge_components_cases(spark, monkeypatch):
     """Deterministic micro-cases: merge two old components, extend one
     with a new node, add a disjoint new chain, leave one untouched."""
     old = spark.createDataFrame(
         [("a", "b"), ("c", "d"), ("e", "f"), ("x", "y")],
         "src string, dst string",
     )
-    prev = connected_components(old)
     new = spark.createDataFrame(
         [
             ("b", "c"),      # merges {a,b} with {c,d} -> component 'a'
@@ -101,22 +141,22 @@ def test_merge_components_cases(spark):
         ],
         "src string, dst string",
     )
-    got = {r.node: r.component for r in merge_components(prev, new).collect()}
-    assert got == {
-        "a": "a", "b": "a", "c": "a", "d": "a",
-        "e": "e", "f": "e", "g": "e",
-        "p": "p", "q": "p",
-        "x": "x", "y": "x",
-    }
+    for leg in CC_LEGS:
+        _on_leg(monkeypatch, leg)
+        prev = connected_components(old)
+        got = {r.node: r.component for r in merge_components(prev, new).collect()}
+        assert got == {
+            "a": "a", "b": "a", "c": "a", "d": "a",
+            "e": "e", "f": "e", "g": "e",
+            "p": "p", "q": "p",
+            "x": "x", "y": "x",
+        }, leg
 
-def test_merge_components_local_fold_parity(spark):
-    """The driver-side union-find fast path (default: contraction graph
-    under local_fold_threshold) must produce the IDENTICAL labeling as
-    the distributed iterative path (threshold=None) and as a full
-    recompute — same random graph as the recompute test, all three
-    pairwise equal."""
-    import random
-
+def test_merge_components_local_fold_parity(spark, monkeypatch):
+    """The driver-side union-find fold (contraction graph within
+    _LOCAL_CC_LIMIT) must produce the IDENTICAL labeling as the
+    distributed fold and as a full recompute — same random graph as the
+    recompute test, all three pairwise equal."""
     rnd = random.Random(7)
     nodes = [f"n{i:03d}" for i in range(80)]
     all_edges = [(rnd.choice(nodes), rnd.choice(nodes)) for _ in range(110)]
@@ -127,19 +167,20 @@ def test_merge_components_local_fold_parity(spark):
     prev = connected_components(
         old_df.filter("src != dst")
     ).localCheckpoint()
-    local = sorted(map(tuple, merge_components(prev, new_df).collect()))
-    dist = sorted(map(tuple, merge_components(
-        prev, new_df, local_fold_threshold=None
-    ).collect()))
-    full = sorted(map(tuple, connected_components(
-        old_df.union(new_df)
-    ).collect()))
-    assert local == dist == full
+    full = _labels(connected_components(old_df.union(new_df)))
+    calls = _driver_calls(monkeypatch)
+    folds = {}
+    for leg in CC_LEGS:
+        _on_leg(monkeypatch, leg)
+        calls.clear()
+        folds[leg] = _labels(merge_components(prev, new_df))
+        assert bool(calls) == (leg == "driver"), leg
+    assert folds["driver"] == folds["distributed"] == full
 
 
-def test_merge_components_probe_fallback(spark):
-    """A threshold smaller than the contraction graph must fall back to
-    the distributed path (the limit-probe comes back full) and still
+def test_merge_components_probe_fallback(spark, monkeypatch):
+    """A limit smaller than the contraction graph must fall back to the
+    distributed path (the limit-probe comes back full) and still
     produce the same labeling."""
     old = spark.createDataFrame(
         [("a", "b"), ("c", "d"), ("e", "f"), ("x", "y")],
@@ -149,10 +190,11 @@ def test_merge_components_probe_fallback(spark):
     new = spark.createDataFrame(
         [("b", "c"), ("f", "g"), ("p", "q")], "src string, dst string"
     )
-    tiny = sorted(map(tuple, merge_components(
-        prev, new, local_fold_threshold=1
-    ).collect()))
-    default = sorted(map(tuple, merge_components(prev, new).collect()))
+    default = _labels(merge_components(prev, new))
+    calls = _driver_calls(monkeypatch)
+    monkeypatch.setattr(cc_mod, "_LOCAL_CC_LIMIT", 1)
+    tiny = _labels(merge_components(prev, new))
+    assert not calls
     assert tiny == default
 
 
@@ -175,29 +217,131 @@ def test_local_components_matches_distributed_semantics():
     assert got2 == {2: 2, 10: 2, 100: 2}
 
 
-# e2e / streaming / property-heavy: excluded from the fast inner-loop tier
-import pytest
+def test_cc_leg_boundary(spark, monkeypatch):
+    """A symmetric edge count equal to _LOCAL_CC_LIMIT takes the driver
+    leg; one row more than the limit takes the distributed leg; the
+    labels are the same."""
+    edges = spark.createDataFrame(EDGES, "src string, dst string")
+    n_sym = 2 * len(EDGES)  # distinct, loop-free, no reversed duplicates
+    calls = _driver_calls(monkeypatch)
+    got = {}
+    for limit, driver in ((n_sym, True), (n_sym - 1, False)):
+        monkeypatch.setattr(cc_mod, "_LOCAL_CC_LIMIT", limit)
+        calls.clear()
+        got[driver] = _labels(connected_components(edges))
+        assert bool(calls) == driver, limit
+    assert got[True] == got[False]
 
+
+def test_max_iter_exhaustion_warns(spark, monkeypatch):
+    """max_iter bounds only the distributed loop: running out of rounds
+    with labels still changing warns (rounds run, last changed count)
+    instead of silently returning unconverged labels; the driver leg is
+    exact whatever max_iter says."""
+    path = spark.createDataFrame(
+        [(i, i + 1) for i in range(59)], "src long, dst long"
+    )
+    _on_leg(monkeypatch, "distributed")
+    with pytest.warns(RuntimeWarning, match=r"3 rounds ran and \d+ labels"):
+        unconverged = connected_components(path, max_iter=3).collect()
+    assert {r.component for r in unconverged} != {0}
+
+    _on_leg(monkeypatch, "driver")
+    with warnings.catch_warnings():
+        warnings.simplefilter("error", RuntimeWarning)
+        exact = connected_components(path, max_iter=3).collect()
+    assert sorted(map(tuple, exact)) == [(i, 0) for i in range(60)]
+
+
+def _oracle_components(rows) -> list:
+    """Python reference: BFS over the loop-free, NULL-free undirected
+    edges, each component labeled by its minimum node."""
+    adj = {}
+    for a, b in rows:
+        if a is None or b is None or a == b:
+            continue
+        adj.setdefault(a, set()).add(b)
+        adj.setdefault(b, set()).add(a)
+    out, seen = [], set()
+    for start in adj:
+        if start in seen:
+            continue
+        comp, todo = [], [start]
+        seen.add(start)
+        while todo:
+            n = todo.pop()
+            comp.append(n)
+            for m in adj[n] - seen:
+                seen.add(m)
+                todo.append(m)
+        out += [(n, min(comp)) for n in comp]
+    return sorted(out)
+
+
+@pytest.mark.parametrize("id_type", ["long", "string"])
+def test_cc_legs_match_python_oracle(spark, monkeypatch, id_type):
+    """Random graphs with duplicate and reversed edges, self-loops and
+    NULL endpoints: driver leg == distributed leg == a Python oracle.
+    NULL endpoints and loop-only nodes never surface as nodes."""
+    rnd = random.Random(11 if id_type == "long" else 12)
+    ids = list(range(120)) if id_type == "long" else [f"v{i:03d}" for i in range(120)]
+    linked, unlinked = ids[:100], ids[-7:]
+    rows = [(rnd.choice(linked), rnd.choice(linked)) for _ in range(90)]
+    rows += [(b, a) for a, b in rows[:20]] + rows[20:30]   # reversed + dups
+    rows += [(v, v) for v in unlinked[2:]]                 # loop-only nodes
+    rows += [(rows[0][0], rows[0][0])]                     # loop on a linked node
+    rows += [(None, unlinked[0]), (unlinked[1], None), (None, None)]
+    rnd.shuffle(rows)
+    edges = spark.createDataFrame(rows, f"src {id_type}, dst {id_type}")
+
+    want = _oracle_components(rows)
+    for leg in CC_LEGS:
+        _on_leg(monkeypatch, leg)
+        got = _labels(connected_components(edges))
+        assert got == want, leg
+        nodes = {n for n, _ in got}
+        assert None not in nodes and not nodes & set(unlinked), leg
+
+
+def test_cc_reads_edges_once(spark, monkeypatch):
+    """The symmetric edge table is built from ONE read of the input:
+    a row-counting mapInPandas upstream of connected_components sees
+    every input row once, not once per direction."""
+    seen = spark.sparkContext.accumulator(0)
+
+    def count_rows(batches):
+        for pdf in batches:
+            seen.add(len(pdf))
+            yield pdf
+
+    edges = spark.createDataFrame(EDGES, "src string, dst string")
+    upstream = edges.mapInPandas(count_rows, edges.schema)
+    for leg in CC_LEGS:
+        _on_leg(monkeypatch, leg)
+        before = seen.value
+        labels = _labels(connected_components(upstream))
+        assert len(labels) == 14, leg
+        assert seen.value - before == len(EDGES), leg
+
+
+# e2e / streaming / property-heavy: excluded from the fast inner-loop tier
 pytestmark = pytest.mark.slow
 
 
-def test_broadcast_label_hint_parity(spark):
-    """r8: under broadcast_label_limit the per-round label join carries
-    a broadcast hint (edge table never exchanged). Hinted and unhinted
-    labelings must be identical, pointer_jump on and off."""
-    from pyspark.sql import functions as F
-
-    from information_extraction_for_chinese_nlp_spark.operators.components import (
-        connected_components,
-    )
-
+def test_broadcast_label_hint_parity(spark, monkeypatch):
+    """Under broadcast_label_limit the distributed leg's per-round label
+    join carries a broadcast hint (edge table never exchanged). Hinted
+    and unhinted labelings must be identical, pointer_jump on and off,
+    and equal to the driver leg's."""
     edges = spark.range(3000).select(
         F.pmod(F.xxhash64("id"), 500).alias("src"),
         F.pmod(F.xxhash64("id", F.lit(7)), 500).alias("dst"),
     )
+    _on_leg(monkeypatch, "driver")
+    driver = _labels(connected_components(edges))
+    _on_leg(monkeypatch, "distributed")
     for pj in (False, True):
-        hinted = sorted(map(tuple, connected_components(
-            edges, pointer_jump=pj).collect()))
-        plain = sorted(map(tuple, connected_components(
-            edges, pointer_jump=pj, broadcast_label_limit=0).collect()))
-        assert hinted == plain
+        hinted = _labels(connected_components(edges, pointer_jump=pj))
+        plain = _labels(connected_components(
+            edges, pointer_jump=pj, broadcast_label_limit=0))
+        assert hinted == plain == driver, pj
