@@ -50,7 +50,6 @@ def build_queries(spark):
         ngram_jaccard_pairs,
         simhash,
         simhash_near_pairs,
-        simhash_near_pairs_wide,
     )
     from information_extraction_for_chinese_nlp_spark.operators.similarity import (
         ann_topk,
@@ -110,8 +109,8 @@ def build_queries(spark):
         ).count(),
         # 64-bit fingerprints (memoized token bit-votes, no tokens×64
         # explode through the shuffle)
-        "q4c_simhash64_vec": lambda: simhash_near_pairs_wide(
-            docs, n_bands=8, max_hamming=7, max_bucket=1000
+        "q4c_simhash64_vec": lambda: simhash_near_pairs(
+            docs, n_bits=64, n_bands=8, max_hamming=7, max_bucket=1000
         ).count(),
         "q5_bruteforce_topk": lambda: brute_force_topk(emb, queries, k=10).count(),
         # exact search, vectorized: per-partition numpy matmul + local
@@ -909,7 +908,7 @@ def run_sf1() -> None:
 
     from information_extraction_for_chinese_nlp_spark.operators.dedup import (
         ngram_jaccard_pairs,
-        simhash_near_pairs_wide,
+        simhash_near_pairs,
     )
     from information_extraction_for_chinese_nlp_spark.operators.similarity import (
         ann_topk,
@@ -925,8 +924,8 @@ def run_sf1() -> None:
         return {
             "q3_ngram_jaccard": lambda: ngram_jaccard_pairs(
                 docs, n=3, threshold=0.1, max_df=100).count(),
-            "q4c_simhash64_vec": lambda: simhash_near_pairs_wide(
-                docs, n_bands=8, max_hamming=7, max_bucket=1000).count(),
+            "q4c_simhash64_vec": lambda: simhash_near_pairs(
+                docs, n_bits=64, n_bands=8, max_hamming=7, max_bucket=1000).count(),
             "q5b_lsh_ann": lambda: ann_topk(
                 emb, queries, k=10, n_planes=6, max_hamming=1).count(),
             "q8_dataprep": lambda: _dataprep_count(spark, docs),

@@ -42,7 +42,6 @@ def build_frames(spark):
         ngram_jaccard_pairs,
         simhash,
         simhash_near_pairs,
-        simhash_near_pairs_wide,
     )
     from information_extraction_for_chinese_nlp_spark.operators.linking import (
         link_entities,
@@ -161,8 +160,8 @@ def build_frames(spark):
         "q4b_simhash_pairs": lambda: simhash_near_pairs(
             docs, max_hamming=3, max_bucket=1000
         ),
-        "q4c_simhash64_vec": lambda: simhash_near_pairs_wide(
-            docs, n_bands=8, max_hamming=7, max_bucket=1000
+        "q4c_simhash64_vec": lambda: simhash_near_pairs(
+            docs, n_bits=64, n_bands=8, max_hamming=7, max_bucket=1000
         ),
         "q5_bruteforce_topk": lambda: brute_force_topk(emb, queries, k=10),
         "q5d_matmul_topk": lambda: matmul_topk(emb, queries, k=10),

@@ -9,11 +9,16 @@ All four families are expressed as shuffle-lean DataFrame plans:
   self-join anywhere (Spark re-executes the upstream pipeline for a
   self-join's second alias — measured).
 - SimHash: per-bit majority vote over token hashes (one Arrow
-  ``mapInPandas``), 16/32-bit packed or 64-bit two-word,
-  pigeonhole-banded near-pairs with exact bit_count verify.
+  ``mapInPandas``) into 32-bit words — one word for n_bits ≤ 32, two
+  for 64; ONE pair operator bands each word (pigeonhole) and verifies
+  with bit_count(xor) summed over the words.
 - n-gram Jaccard: ONE aggregation chain — set sizes ride as a
   projection through the shingle inverted index's bucket structs, so
   |A∩B| and |A|,|B| come out of the same pair expansion.
+
+Every pair operator here — and the hyperplane-LSH near-dup pairs and
+the KG linker elsewhere — shares one bucket step,
+:func:`_bucket_pair_rows` (group by bucket key, cap, expand pairs).
 
 All hashes are md5-hex (engine-portable: identical in DuckDB, so every
 operator here is oracle-checkable). The relational (Catalyst)
@@ -22,6 +27,9 @@ formulations of MinHash and SimHash live in
 """
 
 from __future__ import annotations
+
+import operator
+from functools import reduce
 
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -380,6 +388,35 @@ def _bucket_pairs(ids):
     )
 
 
+def _bucket_pair_rows(rows: DataFrame, keys: tuple, id_col: str,
+                      carry: tuple = (), *, cap: int | None,
+                      observation) -> DataFrame:
+    """-> (p): one row per ordered pair struct ``p.doc_a`` / ``p.doc_b``
+    sharing an inverted-index bucket — the bucket step of every
+    set-similarity operator (MinHash, SimHash, n-gram, hyperplane LSH,
+    the KG linker), so a change to it lands on all of them.
+
+    ``rows`` are grouped by ``keys``; a bucket holds the sorted
+    ``id_col`` values, or the sorted ``struct(id_col, *carry)`` when
+    columns the verify step needs ride along. Buckets of one are
+    dropped, oversized ones go through :func:`_cap_buckets`, and pairs
+    are expanded JVM-side by :func:`_bucket_pairs`. A row with a NULL id
+    never enters a bucket: ``collect_list`` skips a NULL id, and a
+    struct payload filters NULL ids first (Catalyst drops that filter
+    when the id column cannot be NULL)."""
+    payload = F.col(id_col)
+    if carry:
+        rows = rows.filter(F.col(id_col).isNotNull())
+        payload = F.struct(id_col, *carry)
+    buckets = (
+        rows.groupBy(*keys)
+        .agg(F.array_sort(F.collect_list(payload)).alias("ids"))
+        .filter(F.size("ids") >= 2)
+    )
+    buckets = _cap_buckets(buckets, cap, observation)
+    return buckets.select(F.explode(_bucket_pairs(F.col("ids"))).alias("p"))
+
+
 def minhash_lsh_pairs(docs: DataFrame, n_bands: int = 4, rows_per_band: int = 2,
                       id_col: str = "doc_id", text_col: str = "text",
                       max_bucket: int | None = 10_000,
@@ -426,14 +463,9 @@ def minhash_lsh_pairs(docs: DataFrame, n_bands: int = 4, rows_per_band: int = 2,
     1.02s vs 1.50s min-of-4).
     """
     banded = _minhash_bands(docs, n_bands, rows_per_band, id_col, text_col)
-    buckets = (
-        banded.groupBy("band_id", "band")
-        .agg(F.array_sort(F.collect_list("doc_id")).alias("ids"))
-        .filter(F.size("ids") >= 2)
-    )
-    buckets = _cap_buckets(buckets, max_bucket, observation)
     return (
-        buckets.select(F.explode(_bucket_pairs(F.col("ids"))).alias("p"))
+        _bucket_pair_rows(banded, ("band_id", "band"), "doc_id",
+                          cap=max_bucket, observation=observation)
         .select("p.doc_a", "p.doc_b")
         .distinct()
     )
@@ -569,96 +601,31 @@ def simhash_wide(docs: DataFrame, id_col: str = "doc_id",
     ).select("doc_id", "sim_hi", "sim_lo")
 
 
-def simhash_near_pairs_wide(docs: DataFrame, n_bands: int = 8,
-                            max_hamming: int = 7, id_col: str = "doc_id",
-                            text_col: str = "text",
-                            max_bucket: int | None = None,
-                            observation=None) -> DataFrame:
-    """64-bit variant of ``simhash_near_pairs``: pigeonhole banding over
-    the (sim_hi, sim_lo) fingerprint (the block-permutation trick of
-    Manku/Jain/Sarma, WWW'07), recall 1.0 for Hamming distance ≤
-    n_bands-1, exact ``bit_count(xor)`` verify per word. Bands must not
-    straddle the word boundary (32 % (64/n_bands) == 0).
-
-    ``max_bucket`` defaults OFF here, unlike ``minhash_lsh_pairs``: a
-    SimHash band has only 2^(64/n_bands) possible values (256 at the
-    default n_bands=8), so bucket sizes grow ~N/keyspace with corpus
-    size — a fixed cap would eventually drop EVERY bucket and silently
-    void the pigeonhole recall contract. Capping is still right for
-    true exact-dup clusters (identical fingerprints): run
-    ``dedup_exact``/``dedup_pipeline`` first, or set the cap explicitly
-    with an ``observation`` so drops are counted."""
-    bpb = 64 // n_bands
-    if n_bands * bpb != 64:
-        raise ValueError("n_bands must divide 64")
-    if 32 % bpb != 0:
-        raise ValueError("bands must not straddle the 32-bit word boundary")
-    if max_hamming > n_bands - 1:
-        raise ValueError(
-            f"max_hamming={max_hamming} exceeds the pigeonhole recall bound "
-            f"n_bands-1={n_bands - 1}; raise n_bands or lower max_hamming"
-        )
-    fp = simhash_wide(docs, id_col, text_col)
-    mask = (1 << bpb) - 1
-    band_vals = F.array(
-        *[
-            F.shiftright(
-                F.col("sim_lo" if (b * bpb) < 32 else "sim_hi"), (b * bpb) % 32
-            ).bitwiseAND(F.lit(mask))
-            for b in range(n_bands)
-        ]
-    )
-    banded = fp.select(
-        "doc_id", "sim_hi", "sim_lo",
-        F.posexplode(band_vals).alias("band_id", "band"),
-    )
-    buckets = (
-        banded.groupBy("band_id", "band")
-        .agg(
-            F.array_sort(
-                F.collect_list(F.struct("doc_id", "sim_hi", "sim_lo"))
-            ).alias("ids")
-        )
-        .filter(F.size("ids") >= 2)
-    )
-    buckets = _cap_buckets(buckets, max_bucket, observation)
-    ham = (
-        F.bit_count(F.col("p.doc_a.sim_hi").bitwiseXOR(F.col("p.doc_b.sim_hi")))
-        + F.bit_count(F.col("p.doc_a.sim_lo").bitwiseXOR(F.col("p.doc_b.sim_lo")))
-    )
-    pairs = (
-        buckets.select(F.explode(_bucket_pairs(F.col("ids"))).alias("p"))
-        .select(
-            F.col("p.doc_a.doc_id").alias("doc_a"),
-            F.col("p.doc_b.doc_id").alias("doc_b"),
-            ham.cast("long").alias("hamming"),
-        )
-        .distinct()
-    )
-    return pairs.filter(F.col("hamming") <= max_hamming)
-
-
 def simhash_near_pairs(docs: DataFrame, n_bits: int = 16, n_bands: int = 4,
                        max_hamming: int = 3, id_col: str = "doc_id",
                        text_col: str = "text",
                        max_bucket: int | None = None,
                        observation=None) -> DataFrame:
     """-> (doc_a, doc_b, hamming): SimHash pairs with fingerprint
-    Hamming distance ≤ max_hamming.
+    Hamming distance ≤ max_hamming, over the n_bits ≤ 32 ``simhash``
+    or the 64-bit two-word ``simhash_wide`` (n_bits=64).
 
     Pigeonhole banding: the n_bits fingerprint splits into n_bands
     equal bit slices; two fingerprints within Hamming distance
     n_bands-1 MUST agree on at least one slice, so bucketing by
     (band_id, band_bits) has recall 1.0 for max_hamming ≤ n_bands-1 —
-    candidates then verify the true distance with bit_count(xor).
-    Same single-pass bucket expansion as minhash_lsh_pairs (fingerprint
-    computed once, no self-join). ``max_bucket`` defaults OFF: band
-    values span only 2^(n_bits/n_bands) possibilities (16 at the
-    defaults), so bucket size grows ~N/keyspace — a fixed cap would
-    drop every bucket past moderate corpus sizes and silently break the
-    pigeonhole recall contract. Set it explicitly (with an
-    ``observation`` so drops are counted) only when targeting true
-    exact-dup clusters — or better, exact-dedup first.
+    candidates then verify the true distance with bit_count(xor) summed
+    over the fingerprint's 32-bit words (at 64 bits this is the
+    block-permutation trick of Manku/Jain/Sarma, WWW'07; a band must not
+    straddle a word). Same single-pass bucket expansion as
+    minhash_lsh_pairs (fingerprint computed once, no self-join).
+    ``max_bucket`` defaults OFF: band values span only
+    2^(n_bits/n_bands) possibilities (16 at the defaults), so bucket
+    size grows ~N/keyspace — a fixed cap would drop every bucket past
+    moderate corpus sizes and silently break the pigeonhole recall
+    contract. Set it explicitly (with an ``observation`` so drops are
+    counted) only when targeting true exact-dup clusters — or better,
+    exact-dedup first.
 
     Sizing rule (corpus size N, target expected bucket size B): per-band
     keyspace is 2^(n_bits/n_bands), so E[bucket] ≈ N / 2^(n_bits/n_bands)
@@ -676,9 +643,13 @@ def simhash_near_pairs(docs: DataFrame, n_bits: int = 16, n_bands: int = 4,
     means fingerprint mass is concentrating (templated/boilerplate
     corpus) and the band width must grow regardless of the formula.
     """
+    if n_bits > 32 and n_bits != 64:
+        raise ValueError(f"n_bits={n_bits}: SimHash is ≤ 32 bits or 64")
     bpb = n_bits // n_bands
     if n_bands * bpb != n_bits:
         raise ValueError("n_bands must divide n_bits")
+    if n_bits == 64 and 32 % bpb:
+        raise ValueError("bands must not straddle the 32-bit word boundary")
     if max_hamming > n_bands - 1:
         # beyond n_bands-1 the pigeonhole guarantee breaks: a pair at
         # distance in (n_bands-1, max_hamming] can differ in EVERY band
@@ -687,33 +658,31 @@ def simhash_near_pairs(docs: DataFrame, n_bits: int = 16, n_bands: int = 4,
             f"max_hamming={max_hamming} exceeds the pigeonhole recall bound "
             f"n_bands-1={n_bands - 1}; raise n_bands or lower max_hamming"
         )
-    fp = simhash(docs, n_bits, id_col, text_col)
+    if n_bits == 64:
+        fp, words = simhash_wide(docs, id_col, text_col), ("sim_lo", "sim_hi")
+    else:
+        fp, words = simhash(docs, n_bits, id_col, text_col), ("simhash",)
     mask = (1 << bpb) - 1
     band_vals = F.array(
         *[
-            F.shiftright(F.col("simhash"), b * bpb).bitwiseAND(F.lit(mask))
+            F.shiftright(F.col(words[(b * bpb) // 32]), (b * bpb) % 32)
+            .bitwiseAND(F.lit(mask))
             for b in range(n_bands)
         ]
     )
-    banded = fp.select(
-        "doc_id", "simhash", F.posexplode(band_vals).alias("band_id", "band")
-    )
-    buckets = (
-        banded.groupBy("band_id", "band")
-        .agg(F.array_sort(F.collect_list(F.struct("doc_id", "simhash"))).alias("ids"))
-        .filter(F.size("ids") >= 2)
-    )
-    buckets = _cap_buckets(buckets, max_bucket, observation)
+    banded = fp.select("*", F.posexplode(band_vals).alias("band_id", "band"))
+    carry = tuple(fp.columns[1:])
+    ham = reduce(operator.add, [
+        F.bit_count(F.col(f"p.doc_a.{w}").bitwiseXOR(F.col(f"p.doc_b.{w}")))
+        for w in carry
+    ])
     pairs = (
-        buckets.select(F.explode(_bucket_pairs(F.col("ids"))).alias("p"))
+        _bucket_pair_rows(banded, ("band_id", "band"), "doc_id", carry,
+                          cap=max_bucket, observation=observation)
         .select(
             F.col("p.doc_a.doc_id").alias("doc_a"),
             F.col("p.doc_b.doc_id").alias("doc_b"),
-            F.bit_count(
-                F.col("p.doc_a.simhash").bitwiseXOR(F.col("p.doc_b.simhash"))
-            )
-            .cast("long")
-            .alias("hamming"),
+            ham.cast("long").alias("hamming"),
         )
         .distinct()
     )
@@ -728,7 +697,7 @@ def ngram_jaccard_pairs(docs: DataFrame, n: int = 3, threshold: float = 0.1,
 
     Scalable formulation: pairs come from the shingle inverted index
     (one aggregation chain — no self-join, so the shingle explode runs
-    ONCE; see _bucket_pairs), and disjoint documents never meet.
+    ONCE; see _bucket_pair_rows), and disjoint documents never meet.
     ``max_df`` caps hot shingles — a shingle appearing in more than
     max_df documents is dropped from the index before pair expansion
     (it contributes O(df²) candidate pairs but almost no Jaccard
@@ -750,14 +719,9 @@ def ngram_jaccard_pairs(docs: DataFrame, n: int = 3, threshold: float = 0.1,
     sh = base.select(
         "doc_id", F.size("_sh").alias("n_sh"), F.explode("_sh").alias("s")
     )
-    buckets = (
-        sh.groupBy("s")
-        .agg(F.array_sort(F.collect_list(F.struct("doc_id", "n_sh"))).alias("ids"))
-        .filter(F.size("ids") >= 2)
-    )
-    buckets = _cap_buckets(buckets, max_df, observation)
     inter = (
-        buckets.select(F.explode(_bucket_pairs(F.col("ids"))).alias("p"))
+        _bucket_pair_rows(sh, ("s",), "doc_id", ("n_sh",), cap=max_df,
+                          observation=observation)
         .groupBy(
             F.col("p.doc_a.doc_id").alias("doc_a"),
             F.col("p.doc_a.n_sh").alias("n_a"),

@@ -346,21 +346,16 @@ def lsh_near_dup_pairs(
     ``dedup.minhash_lsh_pairs``) only for true identical-vector
     clusters, or raise n_planes so buckets stay small.
     """
-    from ..operators.dedup import _bucket_pairs, _cap_buckets
+    from ..operators.dedup import _bucket_pair_rows
 
     b = hyperplane_lsh_buckets(vectors, n_planes, id_col=id_col, vec_col=vec_col)
     probes = b.select(
         "vec_id",
         F.explode(_probe_buckets(F.col("bucket"), n_planes, max_hamming)).alias("code"),
     )
-    buckets = (
-        probes.groupBy("code")
-        .agg(F.array_sort(F.collect_list("vec_id")).alias("ids"))
-        .filter(F.size("ids") >= 2)
-    )
-    buckets = _cap_buckets(buckets, max_bucket, observation)
     cand = (
-        buckets.select(F.explode(_bucket_pairs(F.col("ids"))).alias("p"))
+        _bucket_pair_rows(probes, ("code",), "vec_id", cap=max_bucket,
+                          observation=observation)
         .select(F.col("p.doc_a").alias("vec_a"), F.col("p.doc_b").alias("vec_b"))
         .distinct()
     )
@@ -468,14 +463,14 @@ def _assign_query_cells(
     The centroid matrix ships in the task closure (tiny by contract) and
     distances are one numpy pass per Arrow batch, so the PLAN is
     constant-size regardless of n_cells. The Catalyst-literal
-    alternative (``_nearest_cells``) builds one struct expression per
-    centroid with per-dimension literal arrays — at a realistic 100 TB
-    index (n_cells ≥ 4096, dim ≥ 768) that is millions of literal nodes
-    and plan compile/codegen blows up before any data moves.
+    alternative (``nearest_cells`` in ``tests/catalyst_reference.py``,
+    the parity reference) builds one struct expression per centroid with
+    per-dimension literal arrays — at a realistic 100 TB index
+    (n_cells ≥ 4096, dim ≥ 768) that is millions of literal nodes and
+    plan compile/codegen blows up before any data moves.
 
-    Tie semantics match ``_nearest_cells`` exactly: stable argsort on
-    squared L2 breaks ties by ascending cell index, the same order as
-    ``array_sort`` over struct(d, cell).
+    Ties: stable argsort on squared L2 breaks them by ascending cell
+    index, the same order as ``array_sort`` over struct(d, cell).
     """
     import numpy as np
     import pandas as pd
@@ -504,33 +499,6 @@ def _assign_query_cells(
     )
 
 
-def _nearest_cells(vec_col, centroids, n_probe: int):
-    """Indices of the n_probe nearest centroids (JVM-side expressions).
-
-    Plan size is LINEAR in n_cells × dim — kept only as the parity
-    oracle for ``_assign_query_cells``; do not use beyond toy n_cells."""
-    dists = F.array(
-        *[
-            F.struct(
-                F.aggregate(
-                    F.zip_with(
-                        vec_col,
-                        F.array(*[F.lit(float(x)) for x in c]),
-                        lambda a, b: (a.cast("double") - b) * (a.cast("double") - b),
-                    ),
-                    F.lit(0.0),
-                    lambda acc, v: acc + v,
-                ).alias("d"),
-                F.lit(i).alias("cell"),
-            )
-            for i, c in enumerate(centroids)
-        ]
-    )
-    return F.slice(
-        F.transform(F.array_sort(dists), lambda s: s["cell"]), 1, n_probe
-    )
-
-
 def ivf_search(
     assigned: DataFrame,
     centroids: list,
@@ -539,7 +507,6 @@ def ivf_search(
     n_probe: int = 4,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    catalyst_assign: bool = False,
 ) -> DataFrame:
     """Search a prebuilt IVF index (``ivf_assignments`` output). The
     index is built ONCE and amortized over many query waves — the
@@ -548,23 +515,15 @@ def ivf_search(
     each query's n_probe nearest cells.
 
     Cell assignment for the (small, broadcast) query side runs as a
-    numpy argmin in one mapInPandas (constant plan size in n_cells);
-    ``catalyst_assign=True`` switches to the literal-expression variant
-    — parity-tested equal, but its plan grows with n_cells, so it exists
-    only as the test oracle."""
+    numpy argmin in one mapInPandas (constant plan size in n_cells)."""
     c = assigned.select(
         F.col("vec_id").alias("nid"), F.col("embedding").alias("nvec"), "cell"
     )
     q = queries.select(
         F.col(id_col).alias("qid"), F.col(vec_col).alias("qvec")
     )
-    if catalyst_assign:
-        q = q.withColumn(
-            "cell", F.explode(_nearest_cells(F.col("qvec"), centroids, n_probe))
-        )
-    else:
-        cells = _assign_query_cells(queries, centroids, n_probe, id_col, vec_col)
-        q = q.join(cells, on="qid")
+    cells = _assign_query_cells(queries, centroids, n_probe, id_col, vec_col)
+    q = q.join(cells, on="qid")
     # per-pair cost: one _dot over unit vectors (zero-norm rows drop at
     # normalize time; cell assignment above used the raw vectors, which
     # k-means needs)

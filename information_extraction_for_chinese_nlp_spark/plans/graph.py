@@ -32,19 +32,24 @@ def normalize_objects(edges: DataFrame) -> DataFrame:
     return normed.withColumn("entity_key", key)
 
 
-# the linker's default banding budget — shared by the batch linker and
-# streaming/stream.stream_build_kg so the two faces generate identical
-# candidate sets (same discipline as fusion's log_miss_expr)
+# the linker's banding budget — read only by banded_surfaces, which the
+# batch linker and streaming/stream.stream_build_kg share, so the two
+# faces generate identical candidate sets (same discipline as fusion's
+# log_miss_expr)
 LINK_N_BANDS, LINK_ROWS_PER_BAND = 8, 1
 
 
-def band_signatures(n_bands: int = LINK_N_BANDS,
-                    rows_per_band: int = LINK_ROWS_PER_BAND):
-    """The MinHash band-signature projection over a ``grams`` column —
-    ONE array expression (per-seed ``array_min`` over md5'd grams, bands
-    joined with '|'), no explode and no shuffle. Shared by
-    ``raw_match_pairs`` and the streaming linker: a change to the seed
-    string, band count, or join format lands on both faces at once."""
+def banded_surfaces(surfaces: DataFrame) -> DataFrame:
+    """(pred, obj, entity_key) raw surfaces -> (pred, entity_key, grams,
+    band_id, band): one row per linker band of each surface with a
+    non-empty char-bigram set. The one banding projection of the batch
+    linker (``raw_match_pairs``) and the streaming one
+    (``streaming.stream.stream_build_kg``), so a change to the seed
+    string, band count or join format lands on both at once.
+
+    The band signature is ONE array expression (per-seed ``array_min``
+    over md5'd grams, each band's rows joined with '|'): no explode of
+    the grams and no shuffle."""
 
     def seed_min(s: int):
         return F.array_min(
@@ -53,36 +58,33 @@ def band_signatures(n_bands: int = LINK_N_BANDS,
             )
         )
 
-    return F.array(
+    bands = F.array(
         *[
             F.array_join(
                 F.array(
                     *[
-                        seed_min(b * rows_per_band + r)
-                        for r in range(rows_per_band)
+                        seed_min(b * LINK_ROWS_PER_BAND + r)
+                        for r in range(LINK_ROWS_PER_BAND)
                     ]
                 ),
                 "|",
             )
-            for b in range(n_bands)
+            for b in range(LINK_N_BANDS)
         ]
     )
-
-
-def _distinct_raw_surfaces(normed: DataFrame) -> DataFrame:
     return (
-        normed.filter(F.col("obj_norm") == "nan")
-        .select("pred", "obj", "entity_key")
-        .distinct()
-        .withColumn("grams", char_ngrams(F.col("obj"), 2))
+        surfaces.withColumn("grams", char_ngrams(F.col("obj"), 2))
+        .filter(F.size("grams") > 0)
+        .select(
+            "pred", "entity_key", "grams",
+            F.posexplode(bands).alias("band_id", "band"),
+        )
     )
 
 
 def raw_match_pairs(
     normed: DataFrame,
     threshold: float = 0.6,
-    n_bands: int = 8,
-    rows_per_band: int = 1,
     max_bucket: int | None = 10_000,
     observation=None,
 ) -> DataFrame:
@@ -93,59 +95,38 @@ def raw_match_pairs(
     predicate: at scale the nan-surface set is the whole long tail of
     OCR/colloquial junk, and with only 3 predicates "block by pred" is
     barely blocking. Here candidates form only inside (pred, band)
-    buckets: each surface's char-bigram set gets an n_bands×rows_per_band
-    MinHash signature computed as a pure PROJECTION (`array_min` over
-    the gram array per seed — surfaces are short, so no token explode
+    buckets: each surface's char-bigram set gets a LINK_N_BANDS ×
+    LINK_ROWS_PER_BAND MinHash signature computed as a pure PROJECTION
+    (:func:`banded_surfaces` — surfaces are short, so no token explode
     and no shuffle), then ONE aggregation chain groups by
     (pred, band_id, band) and expands ordered pairs JVM-side
-    (``dedup._bucket_pairs`` — a self-join would re-run the upstream
+    (``dedup._bucket_pair_rows`` — a self-join would re-run the upstream
     pipeline for its second alias, measured). Every candidate is
     verified with the exact bigram Jaccard, so precision is identical to
     the quadratic version; recall for a pair at Jaccard s is
-    1-(1-s^r)^b (defaults b=8, r=1: ≥0.9993 at s=0.6).
+    1-(1-s^r)^b (b=8, r=1: ≥0.9993 at s=0.6).
 
     ``max_bucket`` caps degenerate buckets (e.g. thousands of identical
     junk surfaces) exactly like the dedup operators — default ON,
     ``None`` = explicit opt-out, drops counted via ``observation``
     (see ``dedup.minhash_lsh_pairs``).
     """
-    from ..operators.dedup import _bucket_pairs, _cap_buckets
+    from ..operators.dedup import _bucket_pair_rows
 
-    raw = _distinct_raw_surfaces(normed).filter(F.size("grams") > 0)
-    bands = band_signatures(n_bands, rows_per_band)
-    banded = raw.select(
-        "pred", "entity_key", "grams",
-        F.posexplode(bands).alias("band_id", "band"),
+    surfaces = (
+        normed.filter(F.col("obj_norm") == "nan")
+        .select("pred", "obj", "entity_key")
+        .distinct()
     )
-    buckets = (
-        banded.groupBy("pred", "band_id", "band")
-        .agg(F.array_sort(F.collect_list(F.struct("entity_key", "grams"))).alias("ids"))
-        .filter(F.size("ids") >= 2)
-    )
-    buckets = _cap_buckets(buckets, max_bucket, observation)
-    cand = buckets.select(F.explode(_bucket_pairs(F.col("ids"))).alias("p")).select(
+    cand = _bucket_pair_rows(
+        banded_surfaces(surfaces), ("pred", "band_id", "band"), "entity_key",
+        ("grams",), cap=max_bucket, observation=observation,
+    ).select(
         F.col("p.doc_a.entity_key").alias("src"),
         F.col("p.doc_b.entity_key").alias("dst"),
         jaccard(F.col("p.doc_a.grams"), F.col("p.doc_b.grams")).alias("sim"),
     )
     return cand.filter(F.col("sim") >= threshold).select("src", "dst").distinct()
-
-
-def raw_match_pairs_exact(normed: DataFrame, threshold: float = 0.6) -> DataFrame:
-    """Recall-1.0 baseline: the pred-blocked all-pairs join. QUADRATIC
-    per predicate — kept only as the oracle for the banded generator's
-    parity/recall tests; never use in the pipeline at scale."""
-    raw = _distinct_raw_surfaces(normed)
-    a, b = raw.alias("a"), raw.alias("b")
-    return (
-        a.join(b, on="pred")
-        .filter(F.col("a.entity_key") < F.col("b.entity_key"))
-        .withColumn("sim", jaccard(F.col("a.grams"), F.col("b.grams")))
-        .filter(F.col("sim") >= threshold)
-        .select(
-            F.col("a.entity_key").alias("src"), F.col("b.entity_key").alias("dst")
-        )
-    )
 
 
 def build_graph(edges: DataFrame, link_threshold: float = 0.6,

@@ -344,9 +344,10 @@ def simhash64_q(spark, sf_dir):
     """,
 )
 def simhash64_near_pairs_q(spark, sf_dir):
-    from ..operators.dedup import simhash_near_pairs_wide
+    from ..operators.dedup import simhash_near_pairs
 
-    return simhash_near_pairs_wide(_simhash64_df(spark), n_bands=8, max_hamming=7)
+    return simhash_near_pairs(_simhash64_df(spark), n_bits=64, n_bands=8,
+                              max_hamming=7)
 
 
 # ---------------------------------------------------------------------------

@@ -100,6 +100,16 @@ def get_spark(
             "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate",
         )
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
+        # AQEPropagateEmptyRelation replaces a subtree over an empty query
+        # stage with an empty relation, and the CollectMetrics nodes inside
+        # that subtree go with it: when a bucket cap drops EVERY bucket, the
+        # pairs stage is empty and `observation.get` raised instead of
+        # reporting the drop (tests/test_bucket_contract.py). Without the
+        # rule an empty stage still schedules its (empty) downstream tasks.
+        .config(
+            "spark.sql.adaptive.optimizer.excludedRules",
+            "org.apache.spark.sql.execution.adaptive.AQEPropagateEmptyRelation",
+        )
         # Shuffled hash join over sort-merge when the build side fits
         # (guide §9 baseline): the iterative graph loops join a big
         # edge table against a rank/label vector every round — skipping

@@ -925,7 +925,7 @@ def stream_build_kg(
       MinHash-LSH candidates for its NEW raw surfaces against the
       accumulated surface set (new×old meet in shared (pred, band)
       buckets, new×new within the batch; exact-Jaccard verified — the
-      same ``plans.graph.band_signatures`` projection as the batch
+      same ``plans.graph.banded_surfaces`` projection as the batch
       linker, so the accumulated pair set equals the batch pair set)
       and folds them via ``merge_components`` — iteration bounded by
       the batch's pairs, never the accumulated graph. Full snapshot per
@@ -973,8 +973,8 @@ def stream_build_kg(
     """
     from ..operators.components import connected_components, merge_components
     from ..operators.fusion import fused_prob_expr, log_miss_expr
-    from ..operators.linking import char_ngrams, jaccard
-    from ..plans.graph import band_signatures, normalize_objects
+    from ..operators.linking import jaccard
+    from ..plans.graph import banded_surfaces, normalize_objects
 
     if compact_every is not None and compact_every < 1:
         raise ValueError("compact_every must be >= 1 (or None to disable)")
@@ -985,21 +985,6 @@ def stream_build_kg(
         {"subj": "subj", "pred": "pred", "obj": "obj", "prob": "prob",
          "doc_id": "doc_id"},
     )
-
-    def _banded(surfaces: DataFrame) -> DataFrame:
-        """(pred, obj, entity_key) raw surfaces -> exploded band rows
-        with grams — the SHARED plans.graph.band_signatures projection,
-        so the streaming candidate set cannot drift from the batch
-        linker's."""
-        with_grams = surfaces.withColumn(
-            "grams", char_ngrams(F.col("obj"), 2)
-        ).filter(F.size("grams") > 0)
-        return with_grams.select(
-            "pred",
-            "entity_key",
-            "grams",
-            F.posexplode(band_signatures()).alias("band_id", "band"),
-        )
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
@@ -1043,8 +1028,8 @@ def stream_build_kg(
         all_raw = surfaces.filter(F.col("obj_norm") == "nan").select(
             "pred", "obj", "entity_key"
         )
-        nb = _banded(new_raw).withColumnRenamed("entity_key", "_nk")
-        ab = _banded(all_raw)
+        nb = banded_surfaces(new_raw).withColumnRenamed("entity_key", "_nk")
+        ab = banded_surfaces(all_raw)
         if link_max_bucket is not None:
             # cap on the ACCUMULATED bucket size (the join's blowup
             # factor); see the docstring for the order-dependence note

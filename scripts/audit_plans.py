@@ -91,6 +91,19 @@ at scale. Candidates only materialize on bucket collisions — never an
 all-pairs product; max_bucket caps degenerate exact-dup clusters.
 """))
 
+from information_extraction_for_chinese_nlp_spark.operators.dedup import simhash_near_pairs
+q = simhash_near_pairs(docs, n_bits=64, n_bands=8, max_hamming=7)
+sections.append(("simhash_near_pairs (pigeonhole banding, 64-bit)", plan_of(q), """
+What to read: the same bucket chain as minhash_lsh_pairs — ONE
+MapInPandas computes each fingerprint as 32-bit words (one word for
+n_bits ≤ 32, two at 64), a Generate emits the n_bands band values
+(each cut from one word), then the (band_id, band) bucket aggregate and
+the pair distinct are the only two Exchanges. The Filter over the
+MapInPandas drops NULL doc ids (a NULL id never enters a bucket); the
+one over the pair Generate is the exact Hamming verify, bit_count(xor)
+summed over the words, pushed below the pair distinct.
+"""))
+
 from information_extraction_for_chinese_nlp_spark.operators.similarity import ann_topk
 emb = spark.read.parquet(f"{SF}/embeddings.parquet")
 q = ann_topk(emb, emb.filter(F.col("vec_id") < 5), k=3, n_planes=6, max_hamming=1)

@@ -1,20 +1,34 @@
-"""Relational (pure Catalyst) formulations of MinHash and SimHash.
+"""Relational (pure Catalyst) formulations the library does not ship,
+kept as the parity references its production paths are tested against.
 
-The library computes signatures and fingerprints in one Arrow
-``mapInPandas`` per partition. These token-explode + aggregate plans
-are the same hash families written as DataFrame expressions — the
-shape the DuckDB oracles use — and serve as the parity references the
-production paths are tested against (test_bucketing). They are not
-shipped: each shuffles tokens × n_seeds (or × n_bits) rows, which
-measured slower than the Arrow path at every budget.
+- MinHash and SimHash: the library computes signatures and fingerprints
+  in one Arrow ``mapInPandas`` per partition. These token-explode +
+  aggregate plans are the same hash families written as DataFrame
+  expressions — the shape the DuckDB oracles use (test_bucketing). Each
+  shuffles tokens × n_seeds (or × n_bits) rows, which measured slower
+  than the Arrow path at every budget.
+- IVF query-cell assignment: one literal struct per centroid, so the
+  plan grows with n_cells × dim (test_ann); the library assigns cells
+  with a numpy pass in one ``mapInPandas``.
+- The KG linker's pred-blocked all-pairs join: recall 1.0 but quadratic
+  per predicate (test_graph); the library links through MinHash bands.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.window import Window
 
 from information_extraction_for_chinese_nlp_spark.operators.dedup import tokens
+from information_extraction_for_chinese_nlp_spark.operators.linking import (
+    char_ngrams,
+    jaccard,
+)
+from information_extraction_for_chinese_nlp_spark.operators.similarity import (
+    _dot,
+    unit_vectors,
+)
 
 
 def minhash_signatures(docs: DataFrame, n_seeds: int = 4,
@@ -111,4 +125,75 @@ def simhash_wide(docs: DataFrame, id_col: str = "doc_id",
             F.when((F.col("v") > 0) & (F.col("bit") < 32),
                    F.pow(F.lit(2.0), F.col("bit"))).otherwise(0.0)
         ).cast("long").alias("sim_lo"),
+    )
+
+
+def nearest_cells(vec_col, centroids, n_probe: int):
+    """Indices of the n_probe nearest centroids (JVM-side expressions).
+
+    Plan size is LINEAR in n_cells × dim — do not use beyond toy n_cells."""
+    dists = F.array(
+        *[
+            F.struct(
+                F.aggregate(
+                    F.zip_with(
+                        vec_col,
+                        F.array(*[F.lit(float(x)) for x in c]),
+                        lambda a, b: (a.cast("double") - b) * (a.cast("double") - b),
+                    ),
+                    F.lit(0.0),
+                    lambda acc, v: acc + v,
+                ).alias("d"),
+                F.lit(i).alias("cell"),
+            )
+            for i, c in enumerate(centroids)
+        ]
+    )
+    return F.slice(
+        F.transform(F.array_sort(dists), lambda s: s["cell"]), 1, n_probe
+    )
+
+
+def ivf_search(assigned: DataFrame, centroids: list, queries: DataFrame,
+               k: int = 3, n_probe: int = 4, id_col: str = "vec_id",
+               vec_col: str = "embedding") -> DataFrame:
+    """``similarity.ivf_search`` with the query cells assigned by
+    :func:`nearest_cells` instead of the numpy ``mapInPandas``."""
+    c = assigned.select(
+        F.col("vec_id").alias("nid"), F.col("embedding").alias("nvec"), "cell"
+    )
+    q = queries.select(
+        F.col(id_col).alias("qid"), F.col(vec_col).alias("qvec")
+    ).withColumn(
+        "cell", F.explode(nearest_cells(F.col("qvec"), centroids, n_probe))
+    )
+    c = unit_vectors(c, "nvec")
+    q = unit_vectors(q, "qvec")
+    scored = (
+        c.join(F.broadcast(q), on="cell")
+        .filter(F.col("qid") != F.col("nid"))
+        .select("qid", "nid", F.round(_dot(F.col("qvec"), F.col("nvec")), 4).alias("sim"))
+    )
+    w = Window.partitionBy("qid").orderBy(F.desc("sim"), F.asc("nid"))
+    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+
+
+def raw_match_pairs_exact(normed: DataFrame, threshold: float = 0.6) -> DataFrame:
+    """Recall-1.0 reference for ``plans.graph.raw_match_pairs``: the
+    pred-blocked all-pairs join over the distinct raw surfaces."""
+    raw = (
+        normed.filter(F.col("obj_norm") == "nan")
+        .select("pred", "obj", "entity_key")
+        .distinct()
+        .withColumn("grams", char_ngrams(F.col("obj"), 2))
+    )
+    a, b = raw.alias("a"), raw.alias("b")
+    return (
+        a.join(b, on="pred")
+        .filter(F.col("a.entity_key") < F.col("b.entity_key"))
+        .withColumn("sim", jaccard(F.col("a.grams"), F.col("b.grams")))
+        .filter(F.col("sim") >= threshold)
+        .select(
+            F.col("a.entity_key").alias("src"), F.col("b.entity_key").alias("dst")
+        )
     )

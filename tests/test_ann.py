@@ -186,6 +186,8 @@ def test_ivf_numpy_assignment_matches_catalyst(spark, sf_dir):
     """The scale-safe numpy query-cell assignment must equal the
     Catalyst-literal oracle (same squared-L2, same ascending-cell tie
     order) through the full search, at n_cells=16."""
+    from catalyst_reference import ivf_search as ivf_search_ref
+
     from information_extraction_for_chinese_nlp_spark.operators.similarity import (
         ivf_assignments,
         ivf_search,
@@ -198,8 +200,7 @@ def test_ivf_numpy_assignment_matches_catalyst(spark, sf_dir):
     new = {tuple(r) for r in
            ivf_search(assigned, centroids, queries, k=3, n_probe=4).collect()}
     old = {tuple(r) for r in
-           ivf_search(assigned, centroids, queries, k=3, n_probe=4,
-                      catalyst_assign=True).collect()}
+           ivf_search_ref(assigned, centroids, queries, k=3, n_probe=4).collect()}
     assert new == old
     assert len(new) > 0
 

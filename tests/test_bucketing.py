@@ -80,8 +80,8 @@ def test_vectorized_minhash_matches_catalyst(spark, sf_dir):
 
 def test_vectorized_simhash_matches_catalyst(spark, sf_dir):
     """simhash / simhash_wide (Arrow) must be byte-identical to the
-    Catalyst explode/vote references, and simhash_near_pairs_wide must
-    return exactly the reference fingerprints' pairs within the
+    Catalyst explode/vote references, and simhash_near_pairs(n_bits=64)
+    must return exactly the reference fingerprints' pairs within the
     Hamming bound (pigeonhole recall 1.0)."""
     from itertools import combinations
 
@@ -89,7 +89,7 @@ def test_vectorized_simhash_matches_catalyst(spark, sf_dir):
 
     from information_extraction_for_chinese_nlp_spark.operators.dedup import (
         simhash,
-        simhash_near_pairs_wide,
+        simhash_near_pairs,
         simhash_wide,
     )
 
@@ -115,7 +115,8 @@ def test_vectorized_simhash_matches_catalyst(spark, sf_dir):
         if ham <= 7:
             p_ref.add((a, b, ham))
     p_vec = {tuple(r) for r in
-             simhash_near_pairs_wide(fixture, n_bands=8, max_hamming=7).collect()}
+             simhash_near_pairs(fixture, n_bits=64, n_bands=8,
+                                max_hamming=7).collect()}
     assert p_ref == p_vec and len(p_ref) > 0
 
 

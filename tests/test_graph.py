@@ -93,9 +93,10 @@ def test_banded_pairs_match_exact_allpairs(spark):
     """The banded generator must reproduce the quadratic baseline's pair
     set on planted clusters (recall 1-(1-s^r)^b ≈ 0.9993+ at s=0.6 with
     the default b=8×r=1 — deterministic md5 banding, asserted exactly)."""
+    from catalyst_reference import raw_match_pairs_exact
+
     from information_extraction_for_chinese_nlp_spark.plans.graph import (
         raw_match_pairs,
-        raw_match_pairs_exact,
     )
 
     normed = normalize_objects(_junk_edges(spark))

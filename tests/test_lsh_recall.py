@@ -115,7 +115,7 @@ def test_simhash64_pigeonhole_recall_is_total(spark):
     from pyspark.sql import functions as F
 
     from information_extraction_for_chinese_nlp_spark.operators.dedup import (
-        simhash_near_pairs_wide,
+        simhash_near_pairs,
         simhash_wide,
     )
     from information_extraction_for_chinese_nlp_spark.plans.queries_dataprep import (
@@ -125,7 +125,9 @@ def test_simhash64_pigeonhole_recall_is_total(spark):
     docs = _simhash64_df(spark)
     got = {
         (r.doc_a, r.doc_b, r.hamming)
-        for r in simhash_near_pairs_wide(docs, n_bands=8, max_hamming=7).collect()
+        for r in simhash_near_pairs(
+            docs, n_bits=64, n_bands=8, max_hamming=7
+        ).collect()
     }
     fp = simhash_wide(docs)
     a, b = fp.alias("a"), fp.alias("b")
@@ -154,7 +156,7 @@ def test_simhash64_pigeonhole_recall_is_total(spark):
     assert lo32 == wide_lo
     # past the pigeonhole bound the contract refuses instead of lying
     with pytest.raises(ValueError):
-        simhash_near_pairs_wide(docs, n_bands=8, max_hamming=8)
+        simhash_near_pairs(docs, n_bits=64, n_bands=8, max_hamming=8)
 
 # e2e / streaming / property-heavy: excluded from the fast inner-loop tier
 import pytest
