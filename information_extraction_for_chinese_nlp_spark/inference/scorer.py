@@ -342,18 +342,18 @@ def make_extract_map(
     limit: float = 0.5,
     serving_batch_size: int = 64,
 ):
-    """Fused fast path: ONE Arrow crossing for prompt-expand + chunk +
-    score + decode, and batched forward passes for the encoder.
+    """ONE Arrow crossing for prompt-expand + chunk + score + decode,
+    and batched forward passes for the encoder.
 
-    The modular plan (explode prompts -> chunk UDF -> score UDF) ships
-    each document's text 3× through Arrow and serializes the chunk list
-    as a nested struct array — measured to dominate wall time over the
-    actual scoring. Here the input is just (doc_id, text); prompts and
-    windows are iterated inside the batch, all chunks of the Arrow
+    A modular plan (explode prompts -> chunk UDF -> score UDF) would
+    ship each document's text 3× through Arrow and serialize the chunk
+    list as a nested struct array — measured to dominate wall time over
+    the actual scoring. Here the input is just (doc_id, text); prompts
+    and windows are iterated inside the batch, all chunks of the Arrow
     batch are scored through ``extract_batch`` (padded+stacked, ≤1
     ``session.run`` per ``serving_batch_size`` chunks), and only
-    decoded span rows come back out. Semantics are identical (the e2e
-    test compares both against the serial reference-style oracle).
+    decoded span rows come back out (the e2e test compares the result
+    against the serial reference-style oracle).
     """
     from ..functions.chunking import chunk_content
 
@@ -383,32 +383,3 @@ def make_extract_map(
 
     return extract_map
 
-
-def make_score_map(encoder_kind: str, prompts: Sequence[str],
-                   max_seq_len: int = 512, model_path: str | None = None,
-                   limit: float = 0.5, serving_batch_size: int = 64):
-    """Iterator mapInPandas fn: model-input batches -> decoded span rows.
-
-    Output offsets are document-absolute (chunk_start + local offset),
-    end exclusive — matching the reference's emitted D5 records
-    (run_infer.py:79-81 reports offsets in regularized-document space).
-    ``max_seq_len`` reaches the encoder (an OnnxEncoder must truncate at
-    the pipeline's configured length, not a hardcoded default), and
-    scoring batches through ``extract_batch`` like the fused path.
-    """
-
-    def score_map(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        pin_worker_threads()
-        encoder = get_encoder(encoder_kind, prompts, model_path, max_seq_len)
-        for pdf in batches:
-            metas: List[tuple] = [
-                (doc_id, int(chunk_idx), int(chunk_start), content, prompt)
-                for doc_id, chunk_idx, chunk_start, content, prompt in zip(
-                    pdf["doc_id"], pdf["chunk_idx"], pdf["chunk_start"],
-                    pdf["content"], pdf["prompt"],
-                )
-            ]
-            rows = _score_chunk_items(encoder, metas, limit, serving_batch_size)
-            yield pd.DataFrame(rows, columns=EXTRACTION_COLUMNS)
-
-    return score_map

@@ -42,6 +42,90 @@ def fused_prob_expr(log_miss_col: str, max_prob_col: str) -> Column:
     )
 
 
+def _seen_range(ts_col: str | None) -> list[Column]:
+    """first_seen/last_seen, a fact's min/max mention time over
+    ``ts_col`` (none without it)."""
+    if ts_col is None:
+        return []
+    return [F.min(ts_col).alias("first_seen"), F.max(ts_col).alias("last_seen")]
+
+
+def fusion_partials(
+    mentions: DataFrame,
+    keys,
+    prob_col: str = "prob",
+    eps: float = 1e-12,
+    ts_col: str | None = None,
+) -> DataFrame:
+    """Combinable noisy-or partials per ``keys`` over the supported
+    (non-NULL probability) mentions: ``_log_miss``, ``n_mentions``,
+    ``max_prob``, plus ``first_seen``/``last_seen`` when ``ts_col`` is
+    given. The state rows of the streaming faces, merged by
+    :func:`partial_merge_aggs` and finalized by :func:`finalize_fusion`
+    (the batch operator folds all three into its one shuffle)."""
+    return (
+        mentions.filter(F.col(prob_col).isNotNull())
+        .groupBy(*keys)
+        .agg(
+            F.sum(log_miss_expr(prob_col, eps)).alias("_log_miss"),
+            F.count("*").alias("n_mentions"),
+            F.max(prob_col).alias("max_prob"),
+            *_seen_range(ts_col),
+        )
+    )
+
+
+def partial_merge_aggs(temporal: bool = False) -> list[Column]:
+    """Aggregates merging :func:`fusion_partials` rows (sum/sum/max, and
+    min/max of the temporal envelope): associative, so the merge order
+    — and a replayed batch — cannot change the result."""
+    return [
+        F.sum("_log_miss").alias("_log_miss"),
+        F.sum("n_mentions").alias("n_mentions"),
+        F.max("max_prob").alias("max_prob"),
+        *(
+            [F.min("first_seen").alias("first_seen"),
+             F.max("last_seen").alias("last_seen")]
+            if temporal
+            else []
+        ),
+    ]
+
+
+def finalize_fusion(
+    partials: DataFrame,
+    fact,
+    doc_col: str = "doc_id",
+    temporal: bool = False,
+) -> DataFrame:
+    """Per-(fact, doc) partials -> one row per ``fact`` with the batch
+    operator's columns (fused_prob, n_mentions, n_docs, max_prob,
+    first_doc[, first_seen, last_seen]).
+
+    ``n_docs`` is count(doc_col), not count(*): the partials hold one
+    row per (fact, doc) INCLUDING a possible NULL-doc group, and the
+    batch face's countDistinct(doc_col) ignores NULLs — a count(*) here
+    would read NULL-doc mentions as one extra source and break
+    batch/stream parity by one (ADVICE r7)."""
+    return (
+        partials.groupBy(*fact)
+        .agg(
+            *partial_merge_aggs(temporal),
+            F.count(doc_col).alias("n_docs"),
+            F.min(doc_col).alias("first_doc"),
+        )
+        .select(
+            *fact,
+            fused_prob_expr("_log_miss", "max_prob").alias("fused_prob"),
+            "n_mentions",
+            "n_docs",
+            "max_prob",
+            "first_doc",
+            *(["first_seen", "last_seen"] if temporal else []),
+        )
+    )
+
+
 def fuse_triples(
     triples: DataFrame,
     subj_col: str = "subj",
@@ -82,21 +166,13 @@ def fuse_triples(
     shuffle; no extra pass.
     """
     supported = triples.filter(F.col(prob_col).isNotNull())
-    temporal = (
-        [
-            F.min(ts_col).alias("first_seen"),
-            F.max(ts_col).alias("last_seen"),
-        ]
-        if ts_col is not None
-        else []
-    )
     agg = supported.groupBy(subj_col, pred_col, obj_col).agg(
         F.sum(log_miss_expr(prob_col, eps)).alias("_log_miss"),
         F.count("*").alias("n_mentions"),
         F.countDistinct(doc_col).alias("n_docs"),
         F.max(prob_col).alias("max_prob"),
         F.min(doc_col).alias("first_doc"),
-        *temporal,
+        *_seen_range(ts_col),
     )
     return agg.select(
         subj_col,

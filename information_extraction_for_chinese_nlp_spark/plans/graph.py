@@ -129,6 +129,41 @@ def raw_match_pairs(
     return cand.filter(F.col("sim") >= threshold).select("src", "dst").distinct()
 
 
+def canon_keys(df: DataFrame, labels: DataFrame) -> DataFrame:
+    """Add ``canon_key`` = the (node, component) labeling's component of
+    ``df``'s entity_key, or the entity_key itself when unlabeled (no
+    linker pair touched it)."""
+    return df.join(
+        labels.withColumnRenamed("node", "entity_key"), on="entity_key", how="left"
+    ).withColumn("canon_key", F.coalesce("component", "entity_key"))
+
+
+def pick_vertices(surface_counts: DataFrame) -> DataFrame:
+    """(canon_key, pred, obj, n) surface counts -> one vertex per
+    canon_key: (entity_id, canonical_text, type, n_mentions, canon_key).
+    The most frequent surface names the vertex (max_by over (n, obj):
+    ties break lexicographically), n_mentions sums the support and
+    entity_id = md5(canon_key). The one vertex pick of ``build_graph``
+    and the streaming snapshot (``streaming.stream.stream_build_kg``),
+    so the faces cannot drift."""
+    return (
+        surface_counts.groupBy("canon_key")
+        .agg(
+            F.max_by(
+                F.struct("obj", "pred"), F.struct(F.col("n"), F.col("obj"))
+            ).alias("_best"),
+            F.sum("n").alias("n_mentions"),
+        )
+        .select(
+            F.md5("canon_key").alias("entity_id"),
+            F.col("_best.obj").alias("canonical_text"),
+            F.col("_best.pred").alias("type"),
+            "n_mentions",
+            "canon_key",
+        )
+    )
+
+
 def build_graph(edges: DataFrame, link_threshold: float = 0.6,
                 link_max_bucket: int | None = 10_000,
                 checkpoint: bool = False):
@@ -162,31 +197,14 @@ def build_graph(edges: DataFrame, link_threshold: float = 0.6,
     pairs = raw_match_pairs(normed, link_threshold, max_bucket=link_max_bucket)
     comps = connected_components(pairs, src="src", dst="dst")
 
-    keyed = normed.join(
-        comps.withColumnRenamed("node", "entity_key"), on="entity_key", how="left"
-    ).withColumn("canon_key", F.coalesce("component", "entity_key"))
+    keyed = canon_keys(normed, comps)
     if checkpoint:
         keyed = keyed.localCheckpoint(eager=False)
 
     surface_counts = keyed.groupBy("canon_key", "pred", "obj").agg(
         F.count("*").alias("n")
     )
-    vertices = (
-        surface_counts.groupBy("canon_key")
-        .agg(
-            F.max_by(
-                F.struct("obj", "pred"), F.struct(F.col("n"), F.col("obj"))
-            ).alias("_best"),
-            F.sum("n").alias("n_mentions"),
-        )
-        .select(
-            F.md5("canon_key").alias("entity_id"),
-            F.col("_best.obj").alias("canonical_text"),
-            F.col("_best.pred").alias("type"),
-            "n_mentions",
-            "canon_key",
-        )
-    )
+    vertices = pick_vertices(surface_counts)
 
     canonical_edges = keyed.select(
         "subj",

@@ -4,9 +4,8 @@ SURVEY.md §3, restated as one declarative DataFrame graph).
     transcripts
       -> assemble_turns               (1 shuffle, conv_id)
       -> scrub (P1, Catalyst exprs)
-      -> expand_prompts (R1, narrow explode)
-      -> chunk (R2, pandas UDF + posexplode, narrow)
-      -> score + decode (M2/M3, iterator mapInPandas, narrow)
+      -> prompt-expand + chunk + score + decode (R1, R2, M2/M3: one
+         iterator mapInPandas, narrow)
       -> strategy (threshold: narrow filter / max: 1 shuffle)
       -> edges projection
 
@@ -24,11 +23,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .. import ENTITY_TYPES
-from ..functions.chunking import explode_chunks
 from ..functions.text import scrub_col
-from ..inference.scorer import EXTRACTION_DDL, make_extract_map, make_score_map
+from ..inference.scorer import EXTRACTION_DDL, make_extract_map
 from ..operators.assembly import assemble_turns
-from ..operators.expansion import expand_prompts
 from ..operators.postprocess import apply_strategy
 
 
@@ -40,16 +37,10 @@ def extract_spans(
     model_path: str | None = None,
     strategy: str = "threshold",
     threshold: float = 0.5,
-    fused: bool = True,
     pack_by_length: bool = False,
 ) -> DataFrame:
-    """documents(doc_id, text) -> extractions (exploded D5).
-
-    fused=True (default, the hot path): one Arrow crossing doing
-    prompt-expand + chunk + score + decode together. fused=False keeps
-    the modular explode/chunk/score stages (useful when intermediate
-    model-input records must be materialized, e.g. training-data prep).
-    Both produce identical results — pinned by the e2e parity test.
+    """documents(doc_id, text) -> extractions (exploded D5): one Arrow
+    crossing doing prompt-expand + chunk + score + decode together.
 
     pack_by_length=True adds a repartitionByRange on document length
     before the Python stage (SURVEY §4 item 4): Arrow batches then hold
@@ -61,21 +52,10 @@ def extract_spans(
     scrubbed = documents.select("doc_id", scrub_col(F.col("text")).alias("text"))
     if pack_by_length:
         scrubbed = scrubbed.repartitionByRange(F.length("text"), "doc_id")
-    if fused:
-        extracted = scrubbed.mapInPandas(
-            make_extract_map(encoder_kind, list(prompts), max_seq_len, model_path),
-            EXTRACTION_DDL,
-        )
-    else:
-        prompted = expand_prompts(scrubbed, prompts)
-        chunked = explode_chunks(prompted, "text", "prompt", None, max_seq_len)
-        model_input = chunked.select(
-            "doc_id", "chunk_idx", "chunk_start", "content", "prompt"
-        )
-        extracted = model_input.mapInPandas(
-            make_score_map(encoder_kind, list(prompts), max_seq_len, model_path),
-            EXTRACTION_DDL,
-        )
+    extracted = scrubbed.mapInPandas(
+        make_extract_map(encoder_kind, list(prompts), max_seq_len, model_path),
+        EXTRACTION_DDL,
+    )
     return apply_strategy(extracted, strategy, threshold)
 
 

@@ -5,32 +5,43 @@ Spark-native capability for continuously-arriving transcripts:
 
 - ``stream_edges``: incremental triple extraction via ``foreachBatch`` —
   each micro-batch runs the exact batch plan (one code path, no
-  batch/stream drift). foreachBatch itself is at-least-once on retry;
-  the sink writes each batch into its own overwritten batch_id=N
-  directory, which makes replays idempotent (exactly-once at rest).
-  Caveat: a conversation split across micro-batches is assembled per
-  batch — use ``assemble_stream_stateful`` upstream when batches can
-  split conversations.
+  batch/stream drift). Caveat: a conversation split across
+  micro-batches is assembled per batch — use
+  ``assemble_stream_stateful`` upstream when batches can split
+  conversations.
 - ``assemble_stream_stateful``: custom stateful operator
   (``applyInPandasWithState``) accumulating turns per conv_id in group
   state and emitting the assembled document after a session gap —
   correct cross-batch assembly with out-of-order turns.
 - ``windowed_edge_counts``: event-time tumbling window aggregation with
   a watermark for late data — the monitoring/rollup stream.
-- ``stream_line_dedup``: prefix-consistent boilerplate removal — the
-  hot-line df table accumulates across batches (partials + compacted
-  snapshots, replay-idempotent) and each batch rewrites its documents
-  through the SAME membership legs as the batch operator.
-- ``stream_fuse_triples``: incremental knowledge fusion — per-(fact,
-  doc) combinable partials accumulate across batches and each batch
-  finalizes the full fused fact table through the SAME noisy-or
-  expressions as the batch operator.
+- ``stream_dedup_exact``, ``stream_line_dedup``,
+  ``stream_merge_components``, ``stream_fuse_triples``: the streaming
+  faces of the batch dedup, boilerplate, CC and fusion operators.
 - ``stream_build_kg``: the COMPOSED streaming KG — all state keyed by
   the stable pre-canonicalization entity_key, the labeling folded
   incrementally, and canonicalization applied only at snapshot time,
   so a late-arriving bridge surface retroactively merges entities and
   re-fuses their facts; snapshots equal batch ``build_kg`` over the
   concatenated edges.
+
+Every ``foreachBatch`` operator keeps its outputs, state and snapshots
+in one store, :class:`_BatchDirs`: a ``<root>/batch_id=N`` directory
+tree under Structured Streaming's idempotent-sink contract (Armbrust
+et al., SIGMOD 2018). foreachBatch is at-least-once on retry, so batch
+N only ever OVERWRITES its own directories and only READS
+``batch_id < N`` — a replayed micro-batch rewrites what its first
+attempt wrote, exactly-once at rest. Compaction writes a full state as
+batch N's directory, marks it with a ``_SNAPSHOT`` file as the
+replay-idempotent last step (an unmarked directory is never read as a
+base), then deletes directories older than the PREVIOUS marker only.
+On top of the store sit three shared steps: the sum-state fold
+(:func:`_fold_sum_state`, for ``_state``, ``_surfaces`` and
+``_fstate``), the label fold (:func:`_fold_labels`, for
+``stream_merge_components`` and ``_labels``) and the writer start
+(:func:`_start`); the KG snapshot reuses the batch vertex pick
+(``plans.graph.pick_vertices``) and fusion finalizer
+(``operators.fusion.finalize_fusion``).
 """
 
 from __future__ import annotations
@@ -43,15 +54,192 @@ from ..plans.pipeline import extract_triples
 from ..schemas import TRANSCRIPTS
 
 
-def _hadoop_fs(spark: SparkSession, path: str):
-    """(fs, Path class, path) via the JVM Hadoop FS API — one driver-side
-    listing instead of per-batch exists() RPCs; shared by the
-    foreachBatch state managers below."""
-    jvm = spark._jvm
-    hconf = spark._jsc.hadoopConfiguration()  # type: ignore[attr-defined]
-    path_cls = jvm.org.apache.hadoop.fs.Path
-    p = path_cls(path)
-    return p.getFileSystem(hconf), path_cls, p
+class _BatchDirs:
+    """The ``<root>/batch_id=N`` directory tree one operator keeps an
+    output, a state or its snapshots in. Hadoop FS calls go through one
+    driver-side handle."""
+
+    def __init__(self, spark: SparkSession, root: str):
+        self.spark, self.root = spark, root
+        self._Path = spark._jvm.org.apache.hadoop.fs.Path
+        self.fs = self._Path(root).getFileSystem(
+            spark._jsc.hadoopConfiguration()  # type: ignore[attr-defined]
+        )
+
+    def dir(self, batch_id: int) -> str:
+        return f"{self.root}/batch_id={batch_id}"
+
+    def _marker(self, batch_id: int):
+        return self._Path(f"{self.dir(batch_id)}/_SNAPSHOT")
+
+    def ids(self, below: int, marked: bool = False) -> list[int]:
+        """Ids M < ``below`` of the batch_id=M directories (only those
+        carrying a ``_SNAPSHOT`` marker if ``marked``); foreign entries
+        are ignored."""
+        root = self._Path(self.root)
+        if not self.fs.exists(root):
+            return []
+        out = []
+        for st in self.fs.listStatus(root):
+            name = st.getPath().getName()
+            if not name.startswith("batch_id="):
+                continue
+            try:
+                bid = int(name.split("=", 1)[1])
+            except ValueError:
+                continue
+            if bid < below and (not marked or self.fs.exists(self._marker(bid))):
+                out.append(bid)
+        return out
+
+    def latest(self, below: int, marked: bool = False) -> int | None:
+        return max(self.ids(below, marked), default=None)
+
+    def read(self, schema, lo: int, hi: int) -> DataFrame:
+        """Rows of the directories ``lo <= batch_id < hi``: one
+        partition-discovery read with an EXPLICIT schema (it must carry
+        ``batch_id``). No footer sampling: this batch's own in-flight
+        directory may hold a partial file on replay, and partition
+        pruning never touches its files."""
+        return (
+            self.spark.read.schema(schema)
+            .option("basePath", self.root)
+            .parquet(self.root)
+            .filter((F.col("batch_id") >= lo) & (F.col("batch_id") < hi))
+            .drop("batch_id")
+        )
+
+    def write(self, df: DataFrame, batch_id: int) -> None:
+        df.write.mode("overwrite").parquet(self.dir(batch_id))
+
+    def drop_below(self, below: int) -> None:
+        for bid in self.ids(below):
+            self.fs.delete(self._Path(self.dir(bid)), True)
+
+    def mark_and_compact(self, batch_id: int) -> None:
+        """Mark batch_id's directory a full snapshot (its overwrite
+        wiped any marker of an earlier attempt, so re-marking is the
+        replay-idempotent last step), then delete the directories older
+        than the PREVIOUS marked snapshot only: anything in [prev, N)
+        is still needed if THIS batch replays (it reads batch_id < N),
+        and everything below prev is contained in prev's snapshot.
+        Keying deletion on actual markers (not arithmetic) stays safe
+        when ``compact_every`` changes between restarts."""
+        self.fs.create(self._marker(batch_id), True).close()
+        prev = self.latest(batch_id, marked=True)
+        if prev is not None:
+            self.drop_below(prev)
+
+
+def _start(stream: DataFrame, process_batch, checkpoint_path: str,
+           available_now: bool):
+    writer = stream.writeStream.foreachBatch(process_batch).option(
+        "checkpointLocation", checkpoint_path
+    )
+    if available_now:
+        writer = writer.trigger(availableNow=True)
+    return writer.start()
+
+
+def _check_state_args(compact_every: int | None = None,
+                      keep_snapshots: int = 1) -> None:
+    if compact_every is not None and compact_every < 1:
+        raise ValueError("compact_every must be >= 1 (or None to disable)")
+    if keep_snapshots < 1:
+        # replay reads the immediate predecessor: deleting it (0) would
+        # let a crash between delete and checkpoint-commit silently
+        # RESET the accumulated state to just the replayed batch
+        raise ValueError("keep_snapshots must be >= 1")
+
+
+def _compacts(batch_id: int, compact_every: int | None) -> bool:
+    return (
+        compact_every is not None
+        and batch_id > 0
+        and batch_id % compact_every == 0
+    )
+
+
+def _require_columns(stream: DataFrame, needed: dict) -> None:
+    """Pre-start schema validation (ADVICE r6 discipline): fail before
+    the writer is built — a missing column discovered inside
+    foreachBatch leaves a wedged checkpoint for a query that can never
+    run."""
+    missing = {
+        role: col for role, col in needed.items()
+        if col is not None and col not in stream.columns
+    }
+    if missing:
+        raise ValueError(
+            f"input stream is missing required columns {missing} "
+            f"(stream has {stream.columns})"
+        )
+
+
+def _fold_sum_state(store: _BatchDirs, partials: DataFrame, keys, merge_aggs,
+                    batch_id: int, compact_every: int | None,
+                    reuse: bool = False):
+    """One batch of a SUM state (``stream_fuse_triples``' ``_state``,
+    ``stream_build_kg``'s ``_surfaces`` and ``_fstate``) -> (state,
+    prior).
+
+    Unlike a SET state (re-reading a directory a snapshot folded in is
+    idempotent), a sum must read the latest MARKED snapshot before
+    ``batch_id`` plus only the incremental directories after it
+    (residual pre-snapshot directories — deletion lags one marker
+    behind — are partition-pruned out). That prior state is merged with
+    ``partials`` (union, regroup on ``keys`` with ``merge_aggs``). The
+    batch writes its partials, or on a compaction batch the merged
+    state as a marked snapshot. The merged state is cached when it is
+    consumed twice — on a compaction batch, or when the caller says it
+    will ``reuse`` it — and the caller unpersists it. ``prior`` is None
+    when no earlier directory exists."""
+    from pyspark.sql.types import LongType, StructField, StructType
+
+    state, prior = partials, None
+    if store.ids(batch_id):
+        # fresh StructType: StructType.add MUTATES in place and
+        # DataFrame.schema is cached, so partials.schema.add(...) would
+        # graft a phantom batch_id field onto the CALLER's partials
+        # frame (ADVICE r7)
+        schema = StructType(
+            list(partials.schema.fields) + [StructField("batch_id", LongType())]
+        )
+        prior = store.read(schema, store.latest(batch_id, marked=True) or 0,
+                           batch_id)
+        state = prior.unionByName(partials).groupBy(*keys).agg(*merge_aggs)
+    compact = prior is not None and _compacts(batch_id, compact_every)
+    if compact or reuse:
+        state = state.cache()
+    store.write(state if compact else partials, batch_id)
+    if compact:
+        store.mark_and_compact(batch_id)
+    return state, prior
+
+
+def _fold_labels(store: _BatchDirs, edges: DataFrame, batch_id: int,
+                 node_type: str, keep_snapshots: int, src: str = "src",
+                 dst: str = "dst") -> DataFrame:
+    """Fold a batch's match edges into the latest (node, component)
+    labeling before ``batch_id`` — ``connected_components`` when there
+    is none, else ``merge_components``, whose CC iteration runs on the
+    batch-bounded contraction graph — and write the full labeling as
+    batch_id's snapshot, pruning snapshots more than ``keep_snapshots``
+    behind. Returns the written labeling, read back."""
+    from ..operators.components import connected_components, merge_components
+
+    schema = f"node {node_type}, component {node_type}"
+    prev = store.latest(batch_id)
+    if prev is None:
+        labels = connected_components(edges, src=src, dst=dst)
+    else:
+        labels = merge_components(
+            store.spark.read.schema(schema).parquet(store.dir(prev)),
+            edges, src=src, dst=dst,
+        )
+    store.write(labels, batch_id)
+    store.drop_below(batch_id - keep_snapshots)
+    return store.spark.read.schema(schema).parquet(store.dir(batch_id))
 
 
 def _is_orderable(dt) -> bool:
@@ -67,17 +255,6 @@ def _is_orderable(dt) -> bool:
     if isinstance(dt, T.StructType):
         return all(_is_orderable(f.dataType) for f in dt.fields)
     return dt.typeName() != "variant"
-
-
-def _batch_dir_id(status):
-    """batch_id of a 'batch_id=N' state directory, None for foreign dirs."""
-    name = status.getPath().getName()
-    if not name.startswith("batch_id="):
-        return None
-    try:
-        return int(name.split("=", 1)[1])
-    except ValueError:
-        return None
 
 
 def read_transcript_stream(spark: SparkSession, path: str,
@@ -96,25 +273,17 @@ def stream_edges(
     max_seq_len: int = 512,
     available_now: bool = True,
 ):
-    """Incremental extraction: micro-batch -> batch pipeline -> append."""
+    """Incremental extraction: micro-batch -> batch pipeline -> append.
+    Readers load ``output_path`` and get batch_id via partition
+    discovery."""
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        edges = extract_triples(batch_df, max_seq_len=max_seq_len)
-        # overwrite INTO a per-batch directory: a replayed micro-batch
-        # (foreachBatch is at-least-once) rewrites the same directory, so
-        # the sink stays exactly-once at rest; readers load output_path
-        # and get batch_id via partition discovery.
-        edges.write.mode("overwrite").parquet(
-            f"{output_path}/batch_id={batch_id}"
+        _BatchDirs(batch_df.sparkSession, output_path).write(
+            extract_triples(batch_df, max_seq_len=max_seq_len), batch_id
         )
 
-    writer = (
-        transcripts_stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_path)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(transcripts_stream, process_batch, checkpoint_path,
+                  available_now)
 
 
 def stream_dedup_exact(
@@ -136,21 +305,18 @@ def stream_dedup_exact(
     ``<output_path>/_seen/batch_id=N``. Each batch OVERWRITES its own
     two directories (uniques + seen-hashes), and the cross-batch anti
     join reads only ``batch_id < N`` — so a replayed micro-batch
-    (foreachBatch is at-least-once) neither double-emits nor
-    anti-joins against its own previous attempt. Exactly-once at rest.
+    neither double-emits nor anti-joins against its own previous
+    attempt.
 
     Compaction bounds the state listing on long-lived streams: every
     ``compact_every`` batches, the batch writes the FULL seen-hash
-    union (everything before it plus its own firsts) as its own
-    ``batch_id=N`` snapshot, then deletes directories older than the
-    PREVIOUS snapshot. Replay-safe by construction: a replayed batch M
-    only ever reads ``batch_id < M``, and deletions at batch N touch
-    only ids < N-compact_every — content wholly contained in the
-    N-compact_every snapshot, which is never deleted by that same
-    batch. Live directory count stays ≤ ~2·compact_every+1.
+    union (everything before it plus its own firsts) as its own marked
+    ``batch_id=N`` snapshot (see :meth:`_BatchDirs.mark_and_compact`).
+    A SET state may re-read directories a snapshot already folded in,
+    so reads ignore the markers. Live directory count stays
+    ≤ ~2·compact_every+1.
     """
-    if compact_every is not None and compact_every < 1:
-        raise ValueError("compact_every must be >= 1 (or None to disable)")
+    _check_state_args(compact_every)
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
@@ -174,79 +340,28 @@ def stream_dedup_exact(
             .drop("_keep_id")
             .dropDuplicates(["_h", id_col])
         )
-        # one partition-discovery read with an EXPLICIT schema: no
-        # footer sampling (this batch's own in-flight directory may hold
-        # a partial file on replay — partition pruning on batch_id < N
-        # never touches its files), no broad except swallowing real IO
-        # errors.
-        fs, _Path, seen_root = _hadoop_fs(spark, f"{output_path}/_seen")
+        seen_dirs = _BatchDirs(spark, f"{output_path}/_seen")
         seen = None
-        if fs.exists(seen_root):
-            seen = (
-                spark.read.schema("_h string, batch_id long")
-                .option("basePath", f"{output_path}/_seen")
-                .parquet(f"{output_path}/_seen")
-                .filter(F.col("batch_id") < batch_id)
-                .select("_h")
-            )
+        if seen_dirs.ids(batch_id):
+            seen = seen_dirs.read("_h string, batch_id long", 0, batch_id)
             firsts = firsts.join(seen, on="_h", how="left_anti")
         firsts = firsts.cache()
-        firsts.drop("_h").write.mode("overwrite").parquet(
-            f"{output_path}/batch_id={batch_id}"
-        )
-        do_compact = (
-            compact_every is not None
-            and batch_id > 0
-            and batch_id % compact_every == 0
-            and seen is not None
-        )
-        if do_compact:
-            # this batch's _seen dir becomes a full snapshot: union of
-            # everything strictly before it plus its own firsts (the two
-            # sets are disjoint — firsts was anti-joined — but residual
-            # pre-snapshot dirs can overlap the previous snapshot, hence
-            # the distinct)
+        _BatchDirs(spark, output_path).write(firsts.drop("_h"), batch_id)
+        compact = seen is not None and _compacts(batch_id, compact_every)
+        if compact:
+            # the full snapshot: union of everything strictly before
+            # this batch plus its own firsts (disjoint — firsts was
+            # anti-joined — but residual pre-snapshot dirs can overlap
+            # the previous snapshot, hence the distinct)
             state = seen.union(firsts.select("_h")).distinct()
         else:
             state = firsts.select("_h")
-        state.write.mode("overwrite").parquet(
-            f"{output_path}/_seen/batch_id={batch_id}"
-        )
+        seen_dirs.write(state, batch_id)
         firsts.unpersist()
-        if do_compact:
-            # Mark this dir as a full snapshot (the overwrite above wiped
-            # any marker from a previous attempt — re-marking is the
-            # replay-idempotent last step), then drop dirs older than the
-            # PREVIOUS marked snapshot only: anything in [prev, N) is
-            # still needed if THIS batch replays (it reads batch_id < N),
-            # and everything below prev is contained in prev's snapshot.
-            # Keying deletion on actual markers (not arithmetic) stays
-            # safe when compact_every changes between restarts.
-            marker = _Path(f"{output_path}/_seen/batch_id={batch_id}/_SNAPSHOT")
-            fs.create(marker, True).close()
-            prev_snaps = [
-                bid
-                for st in fs.listStatus(seen_root)
-                if (bid := _batch_dir_id(st)) is not None
-                and bid < batch_id
-                and fs.exists(
-                    _Path(f"{output_path}/_seen/batch_id={bid}/_SNAPSHOT")
-                )
-            ]
-            if prev_snaps:
-                cutoff = max(prev_snaps)
-                for st in fs.listStatus(seen_root):
-                    bid = _batch_dir_id(st)
-                    if bid is not None and bid < cutoff:
-                        fs.delete(st.getPath(), True)
+        if compact:
+            seen_dirs.mark_and_compact(batch_id)
 
-    writer = (
-        docs_stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_path)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(docs_stream, process_batch, checkpoint_path, available_now)
 
 
 def stream_line_dedup(
@@ -270,44 +385,33 @@ def stream_line_dedup(
     tests); the membership/rewrite stage IS the batch operator's
     ``_line_dedup_apply``, so the two faces cannot drift.
 
-    State layout mirrors ``stream_dedup_exact``'s replay discipline
-    (foreachBatch is at-least-once; every write is an overwrite of a
-    batch-id-keyed directory, so replays are idempotent — exactly-once
-    at rest):
+    State layout (module store discipline):
 
     - ``<output>/_df/batch_id=N``: batch N's PARTIAL line dfs (distinct
       docs within the batch; doc ids are assumed unique across batches,
       and in-batch redelivery is collapsed by dropDuplicates).
     - ``<output>/_df_snap/batch_id=N``: every ``compact_every`` batches
-      the FULL cumulative df table snapshots here — completed snapshots
-      carry a ``_SNAPSHOT`` marker written as the replay-idempotent
-      LAST step (a half-written snapshot from a crash is never picked
-      as a base, even if a restart changes ``compact_every`` so the
-      replayed batch no longer compacts) — then partials at or below
-      the PREVIOUS marked snapshot and snapshots before it are
-      deleted. Reads always take the latest MARKED snapshot STRICTLY
-      BEFORE the current batch plus the partials after it — a replayed
-      batch N still finds snapshot(base) + partials(base, N] intact
-      (its own deletions only touched ids <= base), and its own
-      snapshot at N is ignored (base < N) and rewritten.
+      the FULL cumulative df table snapshots here, marked (a
+      half-written snapshot from a crash is never picked as a base,
+      even if a restart changes ``compact_every`` so the replayed batch
+      no longer compacts); then partials at or below the PREVIOUS
+      marked snapshot and snapshots before it are deleted. Reads always
+      take the latest MARKED snapshot STRICTLY BEFORE the current batch
+      plus the partials after it — a replayed batch N still finds
+      snapshot(base) + partials(base, N] intact (its own deletions only
+      touched ids <= base), and its own snapshot at N is ignored
+      (base < N) and rewritten.
     - ``<output>/batch_id=N``: the rewritten documents
       (doc_id, *passengers, text, n_dropped).
     """
     from ..operators.dedup import _line_dedup_apply, _validate_line_dedup_args
 
-    if compact_every is not None and compact_every < 1:
-        raise ValueError("compact_every must be >= 1 (or None to disable)")
-    # fail BEFORE the stream starts (mirrors the compact_every
-    # pre-check): a passenger column colliding with the fixed output
-    # names (doc_id/text/n_dropped) would otherwise surface only inside
-    # foreachBatch, killing the query at its first micro-batch after
-    # checkpoint state already exists
-    for col in (id_col, text_col):
-        if col not in docs_stream.columns:
-            raise ValueError(
-                f"stream_line_dedup: column {col!r} not in input stream "
-                f"schema {docs_stream.columns}"
-            )
+    _check_state_args(compact_every)
+    # fail BEFORE the stream starts: a passenger column colliding with
+    # the fixed output names (doc_id/text/n_dropped) would otherwise
+    # surface only inside foreachBatch, killing the query at its first
+    # micro-batch after checkpoint state already exists
+    _require_columns(docs_stream, {"id_col": id_col, "text_col": text_col})
     passengers = tuple(
         c for c in docs_stream.columns if c not in (id_col, text_col)
     )
@@ -355,43 +459,16 @@ def stream_line_dedup(
             .select(id_col, *[F.col(f"{row_s}.{c}").alias(c) for c in others])
             .cache()
         )
-        partial = _line_df(batch_df, id_col, text_col)
-        partial.write.mode("overwrite").parquet(
-            f"{output_path}/_df/batch_id={batch_id}"
-        )
-        fs, _Path, df_root = _hadoop_fs(spark, f"{output_path}/_df")
-        snap_root_s = f"{output_path}/_df_snap"
-        fs_snap, _P, snap_root = _hadoop_fs(spark, snap_root_s)
-        base = None
-        if fs_snap.exists(snap_root):
-            snaps = [
-                bid
-                for st in fs_snap.listStatus(snap_root)
-                if (bid := _batch_dir_id(st)) is not None
-                and bid < batch_id
-                and fs_snap.exists(
-                    _Path(f"{snap_root_s}/batch_id={bid}/_SNAPSHOT")
-                )
-            ]
-            base = max(snaps) if snaps else None
-        parts = (
-            spark.read.schema("_line string, _df long, batch_id long")
-            .option("basePath", f"{output_path}/_df")
-            .parquet(f"{output_path}/_df")
-            .filter(
-                (F.col("batch_id") <= batch_id)
-                & (F.col("batch_id") > (base if base is not None else -1))
-            )
-            .select("_line", "_df")
+        partial_dirs = _BatchDirs(spark, f"{output_path}/_df")
+        snaps = _BatchDirs(spark, f"{output_path}/_df_snap")
+        partial_dirs.write(_line_df(batch_df, id_col, text_col), batch_id)
+        base = snaps.latest(batch_id, marked=True)
+        schema = "_line string, _df long, batch_id long"
+        parts = partial_dirs.read(
+            schema, base + 1 if base is not None else 0, batch_id + 1
         )
         if base is not None:
-            parts = parts.union(
-                spark.read.schema("_line string, _df long, batch_id long")
-                .option("basePath", snap_root_s)
-                .parquet(snap_root_s)
-                .filter(F.col("batch_id") == base)
-                .select("_line", "_df")
-            )
+            parts = parts.union(snaps.read(schema, base, base + 1))
         cum = parts.groupBy("_line").agg(F.sum("_df").alias("_df"))
         # only the SMALL hot subset materializes per batch; the full
         # cumulative table is evaluated again only on the 1-in-
@@ -400,40 +477,15 @@ def stream_line_dedup(
             batch_df, _hot_lines(cum, min_df), id_col=id_col,
             text_col=text_col, keep=passengers,
         )
-        out.write.mode("overwrite").parquet(
-            f"{output_path}/batch_id={batch_id}"
-        )
+        _BatchDirs(spark, output_path).write(out, batch_id)
         batch_df.unpersist()
-        if (
-            compact_every is not None
-            and batch_id > 0
-            and batch_id % compact_every == 0
-        ):
-            cum.write.mode("overwrite").parquet(
-                f"{snap_root_s}/batch_id={batch_id}"
-            )
-            # marker LAST (replay-idempotent): a crash before this line
-            # leaves an unmarked dir no future batch will read as base
-            fs_snap.create(
-                _Path(f"{snap_root_s}/batch_id={batch_id}/_SNAPSHOT"), True
-            ).close()
+        if _compacts(batch_id, compact_every):
+            snaps.write(cum, batch_id)
+            snaps.mark_and_compact(batch_id)
             if base is not None:
-                for st in fs.listStatus(df_root):
-                    bid = _batch_dir_id(st)
-                    if bid is not None and bid <= base:
-                        fs.delete(st.getPath(), True)
-                for st in fs_snap.listStatus(snap_root):
-                    bid = _batch_dir_id(st)
-                    if bid is not None and bid < base:
-                        fs_snap.delete(st.getPath(), True)
+                partial_dirs.drop_below(base + 1)
 
-    writer = (
-        docs_stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_path)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(docs_stream, process_batch, checkpoint_path, available_now)
 
 
 def stream_merge_components(
@@ -453,71 +505,34 @@ def stream_merge_components(
 
     State = the labeling itself (the materialized vertex table: one row
     per entity), written as a FULL snapshot per batch under
-    ``<output_path>/batch_id=N``. Replay safety follows the module
-    convention: each batch OVERWRITES its own directory and reads the
-    latest snapshot with ``batch_id < N``, so a replayed micro-batch
-    (foreachBatch is at-least-once) folds into the same predecessor and
-    rewrites byte-identical output — exactly-once at rest. Snapshots
-    more than ``keep_snapshots`` behind are deleted (only the immediate
-    predecessor is ever re-read on replay).
+    ``<output_path>/batch_id=N`` (:func:`_fold_labels`). A replayed
+    micro-batch folds into the same predecessor (the latest snapshot
+    with ``batch_id < N``) and rewrites byte-identical output.
+    Snapshots more than ``keep_snapshots`` behind are deleted (only the
+    immediate predecessor is ever re-read on replay).
 
     Final labeling = the max-batch_id snapshot; equality with a batch
     ``connected_components`` over the concatenated edges is pinned in
     test_streaming (and is order-independent, since min-label CC is).
     """
-    if keep_snapshots < 1:
-        # replay reads the immediate predecessor: deleting it (0) would
-        # let a crash between delete and checkpoint-commit silently
-        # RESET the accumulated labeling to just the replayed batch
-        raise ValueError("keep_snapshots must be >= 1")
+    _check_state_args(keep_snapshots=keep_snapshots)
+    # node/component types follow the stream's id columns — a hardcoded
+    # string schema would throw on INT64 snapshots. Widened via a
+    # schema-only union (src int + dst long ⇒ snapshot written as long,
+    # so reading with src's narrower type alone would also throw).
+    node_type = (
+        edges_stream.select(F.col(src).alias("_n"))
+        .union(edges_stream.select(F.col(dst).alias("_n")))
+        .schema["_n"].dataType.simpleString()
+    )
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        from ..operators.components import connected_components, merge_components
-
-        spark = batch_df.sparkSession
-        fs, _Path, root = _hadoop_fs(spark, output_path)
-
-        prev = None
-        if fs.exists(root):
-            prior = [
-                bid
-                for st in fs.listStatus(root)
-                if (bid := _batch_dir_id(st)) is not None and bid < batch_id
-            ]
-            if prior:
-                # node/component types follow the stream's id columns —
-                # a hardcoded string schema would throw on INT64
-                # snapshots. Widened via a schema-only union (src int +
-                # dst long ⇒ snapshot written as long, so reading with
-                # src's narrower type alone would also throw).
-                node_t = (
-                    batch_df.select(F.col(src).alias("_n"))
-                    .union(batch_df.select(F.col(dst).alias("_n")))
-                    .schema["_n"].dataType.simpleString()
-                )
-                prev = spark.read.schema(
-                    f"node {node_t}, component {node_t}"
-                ).parquet(f"{output_path}/batch_id={max(prior)}")
-        if prev is None:
-            labels = connected_components(batch_df, src=src, dst=dst)
-        else:
-            labels = merge_components(prev, batch_df, src=src, dst=dst)
-        labels.write.mode("overwrite").parquet(
-            f"{output_path}/batch_id={batch_id}"
+        _fold_labels(
+            _BatchDirs(batch_df.sparkSession, output_path), batch_df,
+            batch_id, node_type, keep_snapshots, src=src, dst=dst,
         )
-        if fs.exists(root):
-            for st in fs.listStatus(root):
-                bid = _batch_dir_id(st)
-                if bid is not None and bid < batch_id - keep_snapshots:
-                    fs.delete(st.getPath(), True)
 
-    writer = (
-        edges_stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_path)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(edges_stream, process_batch, checkpoint_path, available_now)
 
 
 def assemble_stream_stateful(
@@ -619,103 +634,6 @@ def windowed_edge_counts(
 
 
 
-# ---------------------------------------------------------------------------
-# Sum-state management shared by the incremental-aggregation streams
-# (stream_fuse_triples, stream_build_kg). Unlike the SET state of
-# stream_dedup_exact (where re-reading a compacted directory is
-# idempotent), these states are SUMS — the reader must take the latest
-# marked snapshot plus only the incremental directories AFTER it, never
-# both a snapshot and a directory it folded in.
-# ---------------------------------------------------------------------------
-
-
-def _read_sum_state(spark, root_str, template, batch_id, fs, _Path):
-    """Marker-aware read of a sum-state directory tree. Returns
-    (frame_or_None, snap_ids, prior_ids); the frame covers exactly the
-    accumulated state before ``batch_id`` (residual pre-snapshot dirs —
-    deletion lags one marker behind — are partition-pruned out)."""
-    from pyspark.sql.types import LongType, StructField
-
-    prior_ids: list[int] = []
-    snap_ids: list[int] = []
-    root = _Path(root_str)
-    if fs.exists(root):
-        for st in fs.listStatus(root):
-            bid = _batch_dir_id(st)
-            if bid is None or bid >= batch_id:
-                # >= batch_id: this batch's own previous attempt —
-                # replay must not read it (it gets overwritten)
-                continue
-            prior_ids.append(bid)
-            if fs.exists(_Path(f"{root_str}/batch_id={bid}/_SNAPSHOT")):
-                snap_ids.append(bid)
-    if not prior_ids:
-        return None, snap_ids, prior_ids
-    lo = max(snap_ids) if snap_ids else min(prior_ids)
-    # fresh StructType: StructType.add MUTATES in place and
-    # DataFrame.schema is cached, so template.schema.add(...) would
-    # graft a phantom batch_id field onto the CALLER's partials frame
-    # (ADVICE r7)
-    from pyspark.sql.types import StructType
-
-    schema = StructType(
-        list(template.schema.fields) + [StructField("batch_id", LongType())]
-    )
-    frame = (
-        spark.read.schema(schema)
-        .option("basePath", root_str)
-        .parquet(root_str)
-        .filter((F.col("batch_id") >= lo) & (F.col("batch_id") < batch_id))
-        .drop("batch_id")
-    )
-    return frame, snap_ids, prior_ids
-
-
-def _write_sum_state(state_out, root_str, batch_id, do_compact, snap_ids,
-                     fs, _Path):
-    """Overwrite this batch's own directory; on compaction, mark it a
-    full snapshot (re-marking after the overwrite is the
-    replay-idempotent last step) and delete directories older than the
-    PREVIOUS marker — still needed if THIS batch replays."""
-    state_out.write.mode("overwrite").parquet(
-        f"{root_str}/batch_id={batch_id}"
-    )
-    if do_compact:
-        marker = _Path(f"{root_str}/batch_id={batch_id}/_SNAPSHOT")
-        fs.create(marker, True).close()
-        if snap_ids:
-            cutoff = max(snap_ids)
-            for st in fs.listStatus(_Path(root_str)):
-                bid = _batch_dir_id(st)
-                if bid is not None and bid < cutoff:
-                    fs.delete(st.getPath(), True)
-
-
-def _prune_batch_dirs(fs, _Path, root_str, batch_id, keep):
-    root = _Path(root_str)
-    if fs.exists(root):
-        for st in fs.listStatus(root):
-            bid = _batch_dir_id(st)
-            if bid is not None and bid < batch_id - keep:
-                fs.delete(st.getPath(), True)
-
-
-def _require_columns(stream: DataFrame, needed: dict) -> None:
-    """Pre-start schema validation (ADVICE r6 discipline): fail before
-    the writer is built — a missing column discovered inside
-    foreachBatch leaves a wedged checkpoint for a query that can never
-    run."""
-    missing = {
-        role: col for role, col in needed.items()
-        if col is not None and col not in stream.columns
-    }
-    if missing:
-        raise ValueError(
-            f"input stream is missing required columns {missing} "
-            f"(stream has {stream.columns})"
-        )
-
-
 def stream_fuse_triples(
     triples_stream: DataFrame,
     output_path: str,
@@ -748,20 +666,12 @@ def stream_fuse_triples(
        in the batch operator);
     2. merges them with the accumulated partials (sum/sum/max — the
        same associative ops, so replay or re-ordering cannot change
-       the result);
+       the result) in the ``_state`` sum state (:func:`_fold_sum_state`);
     3. finalizes the fused table via the SAME shared expressions the
-       batch operator uses (``log_miss_expr`` / ``fused_prob_expr`` —
-       one implementation, the faces cannot drift).
+       batch operator uses (``operators.fusion.finalize_fusion``).
 
-    State layout follows the module convention: each batch OVERWRITES
-    its own ``_state/batch_id=N`` partials directory and reads only
-    ``batch_id < N`` (plus its in-memory partials), so an at-least-once
-    replay is idempotent — exactly-once at rest. Compaction follows
-    the shared sum-state discipline (``_read_sum_state`` /
-    ``_write_sum_state``): marked snapshots, incrementals-after-marker
-    reads, deletion one marker behind. ``fused/`` snapshots older than
-    ``keep_snapshots`` are pruned (derived data; replay needs only
-    ``_state``).
+    ``fused/`` snapshots older than ``keep_snapshots`` are pruned
+    (derived data; replay needs only ``_state``).
 
     Scale shape: per-batch cost is one batch-bounded aggregation plus
     one merge shuffle over |distinct (fact, doc)| — orders smaller
@@ -772,121 +682,40 @@ def stream_fuse_triples(
     face — first_seen/last_seen ride the partials as combinable
     min/max, no extra state or pass.
     """
-    from ..operators.fusion import fused_prob_expr, log_miss_expr
+    from ..operators.fusion import (
+        finalize_fusion, fusion_partials, partial_merge_aggs,
+    )
 
-    if compact_every is not None and compact_every < 1:
-        raise ValueError("compact_every must be >= 1 (or None to disable)")
-    if keep_snapshots < 1:
-        raise ValueError("keep_snapshots must be >= 1")
+    _check_state_args(compact_every, keep_snapshots)
     _require_columns(
         triples_stream,
         {"subj_col": subj_col, "pred_col": pred_col, "obj_col": obj_col,
          "prob_col": prob_col, "doc_col": doc_col, "ts_col": ts_col},
     )
     fact = [subj_col, pred_col, obj_col]
-    temporal_partial = (
-        [F.min(ts_col).alias("first_seen"), F.max(ts_col).alias("last_seen")]
-        if ts_col is not None
-        else []
-    )
-    temporal_merge = (
-        [
-            F.min("first_seen").alias("first_seen"),
-            F.max("last_seen").alias("last_seen"),
-        ]
-        if ts_col is not None
-        else []
-    )
-    temporal_out = ["first_seen", "last_seen"] if ts_col is not None else []
+    temporal = ts_col is not None
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        partials = (
-            batch_df.filter(F.col(prob_col).isNotNull())
-            .groupBy(*fact, doc_col)
-            .agg(
-                F.sum(log_miss_expr(prob_col, eps)).alias("_log_miss"),
-                F.count("*").alias("n_mentions"),
-                F.max(prob_col).alias("max_prob"),
-                *temporal_partial,
-            )
-        )
         # consumed twice on every batch (state write + fused snapshot):
         # without the cache the batch-bounded aggregation AND the
         # source-file read execute twice per batch, forever
-        partials = partials.cache()
-
-        state_root = f"{output_path}/_state"
-        fs, _Path, _ = _hadoop_fs(spark, state_root)
-        prior, snap_ids, prior_ids = _read_sum_state(
-            spark, state_root, partials, batch_id, fs, _Path
+        partials = fusion_partials(
+            batch_df, [*fact, doc_col], prob_col, eps, ts_col
+        ).cache()
+        state, _ = _fold_sum_state(
+            _BatchDirs(spark, f"{output_path}/_state"), partials,
+            [*fact, doc_col], partial_merge_aggs(temporal), batch_id,
+            compact_every,
         )
-        merged = partials
-        if prior is not None:
-            merged = (
-                prior.unionByName(partials)
-                .groupBy(*fact, doc_col)
-                .agg(
-                    F.sum("_log_miss").alias("_log_miss"),
-                    F.sum("n_mentions").alias("n_mentions"),
-                    F.max("max_prob").alias("max_prob"),
-                    *temporal_merge,
-                )
-            )
-
-        do_compact = (
-            compact_every is not None
-            and batch_id > 0
-            and batch_id % compact_every == 0
-            and bool(prior_ids)
-        )
-        if do_compact:
-            # consumed twice on compaction batches (snapshot + fused)
-            merged = merged.cache()
-        _write_sum_state(
-            merged if do_compact else partials,
-            state_root, batch_id, do_compact, snap_ids, fs, _Path,
-        )
-
-        fused = merged.groupBy(*fact).agg(
-            F.sum("_log_miss").alias("_log_miss"),
-            F.sum("n_mentions").alias("n_mentions"),
-            # count(doc_col), not count(*): merged is one row per
-            # (fact, doc) INCLUDING a possible NULL-doc group, and the
-            # batch face's countDistinct(doc_col) ignores NULLs — a
-            # count(*) here would read NULL-doc mentions as one extra
-            # source and break batch/stream parity by one (ADVICE r7)
-            F.count(doc_col).alias("n_docs"),
-            F.max("max_prob").alias("max_prob"),
-            F.min(doc_col).alias("first_doc"),
-            *temporal_merge,
-        )
-        fused.select(
-            *fact,
-            fused_prob_expr("_log_miss", "max_prob").alias("fused_prob"),
-            "n_mentions",
-            "n_docs",
-            "max_prob",
-            "first_doc",
-            *temporal_out,
-        ).write.mode("overwrite").parquet(
-            f"{output_path}/fused/batch_id={batch_id}"
-        )
-        if do_compact:
-            merged.unpersist()
+        fused = _BatchDirs(spark, f"{output_path}/fused")
+        fused.write(finalize_fusion(state, fact, doc_col, temporal), batch_id)
+        state.unpersist()
         partials.unpersist()
+        fused.drop_below(batch_id - keep_snapshots)
 
-        _prune_batch_dirs(
-            fs, _Path, f"{output_path}/fused", batch_id, keep_snapshots
-        )
-
-    writer = (
-        triples_stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_path)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(triples_stream, process_batch, checkpoint_path,
+                  available_now)
 
 
 def stream_build_kg(
@@ -916,20 +745,18 @@ def stream_build_kg(
     snapshot time:
 
     - ``_surfaces/batch_id=N``: per (pred, obj) surface counts +
-      entity_key/obj_norm — combinable sums under the shared sum-state
-      discipline (``_read_sum_state`` / ``_write_sum_state``).
+      entity_key/obj_norm — a sum state (:func:`_fold_sum_state`).
     - ``_fstate/batch_id=N``: per (subj, pred, entity_key, doc) fusion
       partials (log-miss sum, mention count, max prob) — ditto.
     - ``_labels/batch_id=N``: the (node, component) labeling over
-      linker pairs, folded incrementally: each batch computes banded
-      MinHash-LSH candidates for its NEW raw surfaces against the
-      accumulated surface set (new×old meet in shared (pred, band)
-      buckets, new×new within the batch; exact-Jaccard verified — the
-      same ``plans.graph.banded_surfaces`` projection as the batch
-      linker, so the accumulated pair set equals the batch pair set)
-      and folds them via ``merge_components`` — iteration bounded by
-      the batch's pairs, never the accumulated graph. Full snapshot per
-      batch, pruned.
+      linker pairs, folded incrementally (:func:`_fold_labels`): each
+      batch computes banded MinHash-LSH candidates for its NEW raw
+      surfaces against the accumulated surface set (new×old meet in
+      shared (pred, band) buckets, new×new within the batch;
+      exact-Jaccard verified — the same ``plans.graph.banded_surfaces``
+      projection as the batch linker, so the accumulated pair set
+      equals the batch pair set) and folds them via
+      ``merge_components``. Full snapshot per batch, pruned.
 
     ``link_max_bucket`` caps degenerate (pred, band) buckets like the
     batch linker (thousands of identical junk surfaces would make the
@@ -941,16 +768,14 @@ def stream_build_kg(
     batch parity is exact only while every bucket stays under the cap
     — the regime the cap exists to preserve.
 
-    Snapshot time: canon_key = coalesce(label, entity_key); vertices =
-    surface counts regrouped under canon_key (argmax surface, summed
-    support); fused = fusion partials regrouped (subj, pred, canon_key)
-    with per-doc merge for exact n_docs — a batch-9 merge silently
-    re-fuses batch-1 facts because the regroup, not the state, carries
-    the canonicalization.
-
-    Replay safety follows the module convention everywhere: each batch
-    overwrites its own directories and reads only ``batch_id < N``
-    (sum states via the marker-aware snapshot/incremental split).
+    Snapshot time: canon_key = coalesce(label, entity_key)
+    (``plans.graph.canon_keys``); vertices = surface counts regrouped
+    under canon_key by the batch vertex pick
+    (``plans.graph.pick_vertices``); fused = fusion partials regrouped
+    per (subj, pred, canon_key, doc) then finalized by
+    ``operators.fusion.finalize_fusion`` for exact n_docs — a batch-9
+    merge silently re-fuses batch-1 facts because the regroup, not the
+    state, carries the canonicalization.
 
     Scale shape per batch: candidate generation touches only NEW
     surfaces (banded, capped recall construction — the accumulated
@@ -971,49 +796,43 @@ def stream_build_kg(
     'added'. Deltas are derived data (replay rewrites them) and are
     pruned like the snapshots.
     """
-    from ..operators.components import connected_components, merge_components
-    from ..operators.fusion import fused_prob_expr, log_miss_expr
+    from ..operators.fusion import (
+        finalize_fusion, fusion_partials, kg_diff, partial_merge_aggs,
+    )
     from ..operators.linking import jaccard
-    from ..plans.graph import banded_surfaces, normalize_objects
+    from ..plans.graph import (
+        banded_surfaces, canon_keys, normalize_objects, pick_vertices,
+    )
 
-    if compact_every is not None and compact_every < 1:
-        raise ValueError("compact_every must be >= 1 (or None to disable)")
-    if keep_snapshots < 1:
-        raise ValueError("keep_snapshots must be >= 1")
+    _check_state_args(compact_every, keep_snapshots)
     _require_columns(
         edges_stream,
         {"subj": "subj", "pred": "pred", "obj": "obj", "prob": "prob",
          "doc_id": "doc_id"},
     )
+    entity_doc = ["subj", "pred", "entity_key", "doc_id"]
+    fact = ["subj", "pred", "canon_key"]
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        fs, _Path, _ = _hadoop_fs(spark, output_path)
         normed = normalize_objects(batch_df).localCheckpoint(eager=False)
 
         # ---- surface-count state (pred, obj): sums ---------------------
-        surf_root = f"{output_path}/_surfaces"
         surf_partials = normed.groupBy("pred", "obj").agg(
             F.first("entity_key").alias("entity_key"),
             F.first("obj_norm").alias("obj_norm"),
             F.count("*").alias("n"),
         )
-        prior_surf, surf_snaps, surf_prior = _read_sum_state(
-            spark, surf_root, surf_partials, batch_id, fs, _Path
+        surfaces, prior_surf = _fold_sum_state(
+            _BatchDirs(spark, f"{output_path}/_surfaces"), surf_partials,
+            ["pred", "obj"],
+            [
+                F.first("entity_key").alias("entity_key"),
+                F.first("obj_norm").alias("obj_norm"),
+                F.sum("n").alias("n"),
+            ],
+            batch_id, compact_every, reuse=True,
         )
-        if prior_surf is not None:
-            surfaces = (
-                prior_surf.unionByName(surf_partials)
-                .groupBy("pred", "obj")
-                .agg(
-                    F.first("entity_key").alias("entity_key"),
-                    F.first("obj_norm").alias("obj_norm"),
-                    F.sum("n").alias("n"),
-                )
-            )
-        else:
-            surfaces = surf_partials
-        surfaces = surfaces.cache()
 
         # ---- incremental linking over NEW raw surfaces ------------------
         new_raw = surf_partials.filter(F.col("obj_norm") == "nan").select(
@@ -1060,179 +879,64 @@ def stream_build_kg(
             .select("src", "dst")
             .distinct()
         )
-
-        labels_root = f"{output_path}/_labels"
-        prev_labels = None
-        if fs.exists(_Path(labels_root)):
-            prior = [
-                bid
-                for st in fs.listStatus(_Path(labels_root))
-                if (bid := _batch_dir_id(st)) is not None and bid < batch_id
-            ]
-            if prior:
-                prev_labels = spark.read.schema(
-                    "node string, component string"
-                ).parquet(f"{labels_root}/batch_id={max(prior)}")
-        if prev_labels is None:
-            labels = connected_components(pairs, src="src", dst="dst")
-        else:
-            labels = merge_components(prev_labels, pairs, src="src", dst="dst")
-        labels.write.mode("overwrite").parquet(
-            f"{labels_root}/batch_id={batch_id}"
-        )
-        labels = spark.read.schema("node string, component string").parquet(
-            f"{labels_root}/batch_id={batch_id}"
+        labels = _fold_labels(
+            _BatchDirs(spark, f"{output_path}/_labels"), pairs, batch_id,
+            "string", keep_snapshots,
         )
 
         # ---- fusion-partial state (subj, pred, entity_key, doc) --------
-        fstate_root = f"{output_path}/_fstate"
-        f_partials = (
-            normed.filter(F.col("prob").isNotNull())
-            .groupBy("subj", "pred", "entity_key", "doc_id")
-            .agg(
-                F.sum(log_miss_expr("prob")).alias("_log_miss"),
-                F.count("*").alias("n_mentions"),
-                F.max("prob").alias("max_prob"),
-            )
-        )
-        prior_f, f_snaps, f_prior = _read_sum_state(
-            spark, fstate_root, f_partials, batch_id, fs, _Path
-        )
-        if prior_f is not None:
-            fstate = (
-                prior_f.unionByName(f_partials)
-                .groupBy("subj", "pred", "entity_key", "doc_id")
-                .agg(
-                    F.sum("_log_miss").alias("_log_miss"),
-                    F.sum("n_mentions").alias("n_mentions"),
-                    F.max("max_prob").alias("max_prob"),
-                )
-            )
-        else:
-            fstate = f_partials
-        fstate = fstate.cache()
-
-        do_compact = (
-            compact_every is not None
-            and batch_id > 0
-            and batch_id % compact_every == 0
-        )
-        _write_sum_state(
-            surfaces if (do_compact and surf_prior) else surf_partials,
-            surf_root, batch_id, do_compact and bool(surf_prior),
-            surf_snaps, fs, _Path,
-        )
-        _write_sum_state(
-            fstate if (do_compact and f_prior) else f_partials,
-            fstate_root, batch_id, do_compact and bool(f_prior),
-            f_snaps, fs, _Path,
+        fstate, _ = _fold_sum_state(
+            _BatchDirs(spark, f"{output_path}/_fstate"),
+            fusion_partials(normed, entity_doc), entity_doc,
+            partial_merge_aggs(), batch_id, compact_every,
         )
 
         # ---- snapshots: apply the CURRENT labeling ---------------------
-        lbl = labels.withColumnRenamed("node", "entity_key")
-        keyed_surf = surfaces.join(lbl, on="entity_key", how="left").withColumn(
-            "canon_key", F.coalesce("component", "entity_key")
+        vertices = pick_vertices(canon_keys(surfaces, labels))
+        vertex_dirs = _BatchDirs(spark, f"{output_path}/vertices")
+        vertex_dirs.write(vertices.drop("canon_key"), batch_id)
+        fused = finalize_fusion(
+            canon_keys(fstate, labels)
+            .groupBy(*fact, "doc_id")
+            .agg(*partial_merge_aggs()),
+            fact,
         )
-        vertices = (
-            keyed_surf.groupBy("canon_key")
-            .agg(
-                F.max_by(
-                    F.struct("obj", "pred"), F.struct(F.col("n"), F.col("obj"))
-                ).alias("_best"),
-                F.sum("n").alias("n_mentions"),
-            )
-            .select(
+        fused_dirs = _BatchDirs(spark, f"{output_path}/fused")
+        fused_dirs.write(
+            fused.join(
+                vertices.select("canon_key", "canonical_text"), on="canon_key"
+            ).select(
+                "subj",
+                "pred",
                 F.md5("canon_key").alias("entity_id"),
-                F.col("_best.obj").alias("canonical_text"),
-                F.col("_best.pred").alias("type"),
+                "canonical_text",
+                "fused_prob",
                 "n_mentions",
-                "canon_key",
-            )
-        )
-        vertices.drop("canon_key").write.mode("overwrite").parquet(
-            f"{output_path}/vertices/batch_id={batch_id}"
-        )
-
-        keyed_f = fstate.join(lbl, on="entity_key", how="left").withColumn(
-            "canon_key", F.coalesce("component", "entity_key")
-        )
-        fused = (
-            keyed_f.groupBy("subj", "pred", "canon_key", "doc_id")
-            .agg(
-                F.sum("_log_miss").alias("_log_miss"),
-                F.sum("n_mentions").alias("n_mentions"),
-                F.max("max_prob").alias("max_prob"),
-            )
-            .groupBy("subj", "pred", "canon_key")
-            .agg(
-                F.sum("_log_miss").alias("_log_miss"),
-                F.sum("n_mentions").alias("n_mentions"),
-                # count(doc_id) skips a NULL-doc group — see the
-                # stream_fuse_triples finalizer note (ADVICE r7)
-                F.count("doc_id").alias("n_docs"),
-                F.max("max_prob").alias("max_prob"),
-                F.min("doc_id").alias("first_doc"),
-            )
-        )
-        fused.join(
-            vertices.select("canon_key", "canonical_text"), on="canon_key"
-        ).select(
-            "subj",
-            "pred",
-            F.md5("canon_key").alias("entity_id"),
-            "canonical_text",
-            fused_prob_expr("_log_miss", "max_prob").alias("fused_prob"),
-            "n_mentions",
-            "n_docs",
-            "max_prob",
-            "first_doc",
-        ).write.mode("overwrite").parquet(
-            f"{output_path}/fused/batch_id={batch_id}"
+                "n_docs",
+                "max_prob",
+                "first_doc",
+            ),
+            batch_id,
         )
         surfaces.unpersist()
         fstate.unpersist()
 
         if emit_delta:
-            from ..operators.fusion import kg_diff
-
-            fused_root = f"{output_path}/fused"
-            cur = spark.read.parquet(f"{fused_root}/batch_id={batch_id}")
-            prior_snaps = [
-                bid
-                for st in fs.listStatus(_Path(fused_root))
-                if (bid := _batch_dir_id(st)) is not None and bid < batch_id
-            ]
-            if prior_snaps:
-                prev = spark.read.parquet(
-                    f"{fused_root}/batch_id={max(prior_snaps)}"
-                )
-            else:
-                prev = cur.limit(0)
+            cur = spark.read.parquet(fused_dirs.dir(batch_id))
+            prev = fused_dirs.latest(batch_id)
+            prev = (
+                cur.limit(0) if prev is None
+                else spark.read.parquet(fused_dirs.dir(prev))
+            )
+            delta_dirs = _BatchDirs(spark, f"{output_path}/fused_delta")
             # diff on the FACT key (subj, pred, entity_id): a
             # retroactive merge surfaces as its fragment facts removed
             # plus the merged fact added/changed
-            kg_diff(
-                prev, cur, obj_col="entity_id", tol=0.0
-            ).write.mode("overwrite").parquet(
-                f"{output_path}/fused_delta/batch_id={batch_id}"
+            delta_dirs.write(
+                kg_diff(prev, cur, obj_col="entity_id", tol=0.0), batch_id
             )
-            _prune_batch_dirs(
-                fs, _Path, f"{output_path}/fused_delta", batch_id,
-                keep_snapshots,
-            )
+            delta_dirs.drop_below(batch_id - keep_snapshots)
+        vertex_dirs.drop_below(batch_id - keep_snapshots)
+        fused_dirs.drop_below(batch_id - keep_snapshots)
 
-        _prune_batch_dirs(fs, _Path, labels_root, batch_id, keep_snapshots)
-        _prune_batch_dirs(
-            fs, _Path, f"{output_path}/vertices", batch_id, keep_snapshots
-        )
-        _prune_batch_dirs(
-            fs, _Path, f"{output_path}/fused", batch_id, keep_snapshots
-        )
-
-    writer = (
-        edges_stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_path)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(edges_stream, process_batch, checkpoint_path, available_now)

@@ -1,3 +1,4 @@
+import itertools
 import os
 import sys
 
@@ -15,6 +16,37 @@ def spark():
     s = get_spark("ie-kg-tests", master="local[4]", shuffle_partitions=8)
     yield s
     s.stop()
+
+
+_job_groups = itertools.count()
+
+
+@pytest.fixture
+def count_jobs(spark):
+    """count_jobs(run) -> (result, n_jobs): call ``run()`` under a fresh
+    job group and count the Spark jobs that ran in it with
+    ``statusTracker().getJobIdsForGroup`` (how kgbench's tracer counts
+    a layer's jobs). A ``StreamingQuery`` result is awaited and counted
+    under the group Structured Streaming runs all its triggers in: the
+    query's runId."""
+    from pyspark.sql.streaming import StreamingQuery
+
+    sc = spark.sparkContext
+
+    def count(run):
+        group = f"count-jobs-{next(_job_groups)}"
+        prev = sc.getLocalProperty("spark.jobGroup.id")
+        sc.setJobGroup(group, group)
+        try:
+            result = run()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", prev)
+        if isinstance(result, StreamingQuery):
+            result.awaitTermination()
+            group = str(result.runId)
+        return result, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    return count
 
 
 @pytest.fixture(scope="session")

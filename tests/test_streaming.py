@@ -1369,3 +1369,133 @@ def test_stream_build_kg_soak_25_batches(spark, tmp_path):
     early = sorted(times[3:12])[len(times[3:12]) // 2]
     tail = sorted(times[-6:])[3]
     assert tail <= 3.0 * early, (early, tail, times)
+
+
+# Three edge micro-batches for the KG-stream replay and job tests: money
+# surfaces that canonicalize by value, two raw surfaces (J=0.27, kept
+# apart) and, in batch 2, a bridge surface that links both.
+_KG_BATCHES = [
+    [
+        ("case-1", "醫療費用", "98,532元", 0.5, "d0", 0, 7),
+        ("case-1", "醫療費用", "abcdefgh", 0.4, "d1", 0, 8),
+        ("case-2", "薪資收入", "3500元", 0.7, "d2", 0, 5),
+    ],
+    [
+        ("case-1", "醫療費用", "98532元", 0.5, "d3", 0, 6),
+        ("case-1", "醫療費用", "efghijkl", 0.4, "d4", 0, 8),
+        ("case-1", "醫療費用", None, None, "d5", 0, 0),
+    ],
+    [
+        ("case-1", "醫療費用", "abcdefghijkl", 0.4, "d6", 0, 12),
+        ("case-2", "薪資收入", "三千五百元", 0.6, "d7", 0, 5),
+    ],
+]
+
+
+def _stream_case(op):
+    """(start(stream, out, ckpt, **kw), input schema, three batches,
+    the output dirs a snapshot/state comparison reads) of a sum-state
+    stream."""
+    from information_extraction_for_chinese_nlp_spark.streaming.stream import (
+        stream_build_kg,
+        stream_fuse_triples,
+    )
+
+    if op == "fuse":
+        rows = _mention_rows()
+        return (stream_fuse_triples, _MENTION_SCHEMA,
+                [rows[i::3] for i in range(3)], ("fused", "_state"))
+    return (stream_build_kg, _EDGE_SCHEMA, _KG_BATCHES,
+            ("vertices", "fused", "_surfaces", "_fstate", "_labels"))
+
+
+def _dir_tree(spark, out, tables):
+    """{table: {batch dir: (has _SNAPSHOT marker, sorted rows)}} with
+    doubles rounded: summation order may move the last ulp."""
+    def canon(v):
+        return round(v, 9) if isinstance(v, float) else v
+
+    tree = {}
+    for table in tables:
+        root = os.path.join(out, table)
+        tree[table] = {
+            d: (
+                os.path.exists(os.path.join(root, d, "_SNAPSHOT")),
+                sorted(
+                    (tuple(canon(v) for v in r)
+                     for r in spark.read.parquet(os.path.join(root, d)).collect()),
+                    key=repr,
+                ),
+            )
+            for d in sorted(os.listdir(root)) if d.startswith("batch_id=")
+        }
+    return tree
+
+
+@pytest.mark.parametrize("op", ["fuse", "kg"])
+def test_stream_replayed_compaction_batch_matches_uninterrupted(
+        spark, tmp_path, op):
+    """A crash after the compaction batch's state write and before its
+    _SNAPSHOT marker and checkpoint commit: the restart replays that
+    batch, which must leave the same snapshots and live state dirs as
+    the uninterrupted run."""
+    start, schema, batches, tables = _stream_case(op)
+    src = str(tmp_path / "src")
+    for batch in batches:
+        spark.createDataFrame(batch, schema).coalesce(1).write.mode(
+            "append"
+        ).parquet(src)
+    out, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
+
+    def run():
+        q = start(
+            spark.readStream.schema(schema)
+            .option("maxFilesPerTrigger", 1)
+            .parquet(src),
+            out, ckpt, compact_every=2,
+        )
+        q.awaitTermination(300)
+        return [p["batchId"] for p in q.recentProgress
+                if p.get("numInputRows", 0) > 0]
+
+    assert run() == [0, 1, 2]
+    want = _dir_tree(spark, out, tables)
+    marked = [t for t in tables if want[t].get("batch_id=2", (False,))[0]]
+    assert marked  # batch 2 compacted at least one state
+
+    for name in ("2", ".2.crc"):
+        path = os.path.join(ckpt, "commits", name)
+        if os.path.exists(path):
+            os.remove(path)
+    for table in marked:
+        os.remove(os.path.join(out, table, "batch_id=2", "_SNAPSHOT"))
+
+    assert run() == [2]  # the replay
+    assert _dir_tree(spark, out, tables) == want
+
+
+# Jobs each of three single-file triggers ran when these bounds were
+# set: upper bounds, so a change may lower them but never raise them.
+_JOBS_PER_TRIGGER = {"fuse": [5, 6, 7], "kg": [25, 60, 58]}
+
+
+@pytest.mark.parametrize("op", ["fuse", "kg"])
+def test_stream_jobs_per_trigger_ratchet(spark, tmp_path, count_jobs, op):
+    """Spark jobs per trigger stay within the ratchet; the third trigger
+    is a compaction batch (compact_every=2)."""
+    start, schema, batches, _ = _stream_case(op)
+    src = str(tmp_path / "src")
+    out, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
+    jobs = []
+    for batch in batches:
+        spark.createDataFrame(batch, schema).coalesce(1).write.mode(
+            "append"
+        ).parquet(src)
+        _, n = count_jobs(lambda: start(
+            spark.readStream.schema(schema).parquet(src), out, ckpt,
+            compact_every=2,
+        ))
+        jobs.append(n)
+    assert all(
+        n <= bound for n, bound in zip(jobs, _JOBS_PER_TRIGGER[op])
+    ), (jobs, _JOBS_PER_TRIGGER[op])
