@@ -1,12 +1,21 @@
 """Similarity search over embedding columns (array<float>).
 
-- brute-force cosine top-k: exact baseline; the query side is small and
-  broadcast, the corpus side streams — no shuffle of the corpus.
-- LSH-bucketed ANN (random-hyperplane signs): the scale path; candidate
-  pairs only meet inside a bucket.
+- brute_force_topk: exact top-k cosine over the whole corpus.
+- ann_topk: multiprobe random-hyperplane LSH; a query scores only the
+  corpus rows in its probe buckets.
+- ivf_search / ivf_topk: k-means cells; a query scores only the corpus
+  rows in its n_probe nearest cells.
 
-Dot products are pure Catalyst (`aggregate` + `zip_with`), computed in
-double precision so results are engine-portable.
+The three searches share one scorer (``_search``): the query set, small
+by contract, is collected and unit-normalized on the driver and ships in
+the task closure; the corpus streams once through one Arrow map
+that computes a numpy matmul per candidate group (all rows, a bucket or
+a cell) and emits each query's per-batch top-k; ``_rank`` reduces those
+to the global top-k. The corpus is never shuffled.
+
+The pairwise paths (``lsh_near_dup_pairs``, the embedding linker scorer,
+the ``embedding_near_dup`` gate) score in Catalyst: ``_dot``/``cosine``
+over ``unit_vectors``, in double precision.
 """
 
 from __future__ import annotations
@@ -84,6 +93,117 @@ def unit_vectors(df: DataFrame, vec_col: str) -> DataFrame:
     return normed.withColumn(vec_col, unit).drop(nrm)
 
 
+def _round_half_up(x, decimals: int = 4):
+    """Spark/DuckDB ``round()``: HALF_UP, away from zero. ``np.round``
+    is half-even and would flip the 4th decimal on .xxxx5 boundaries;
+    ``+ 0.0`` folds -0.0 into +0.0."""
+    import numpy as np
+
+    scale = 10.0 ** decimals
+    return np.copysign(np.floor(np.abs(x) * scale + 0.5) / scale, x) + 0.0
+
+
+def _unit_rows(vecs):
+    """-> (keep mask, unit rows): drops NULL and zero-norm vectors, which
+    never match (their cosine is NULL), and normalizes the rest."""
+    import numpy as np
+
+    keep = np.array([v is not None for v in vecs], dtype=bool)
+    if not keep.any():
+        return keep, np.empty((0, 0))
+    m = np.array([v for v in vecs if v is not None], dtype=np.float64)
+    norms = np.linalg.norm(m, axis=1)
+    keep[keep] = norms > 0
+    return keep, m[norms > 0] / norms[norms > 0, None]
+
+
+def _rank(local: DataFrame, k: int) -> DataFrame:
+    """Global top-k per query on (sim desc, nid asc): the one ranking
+    tail of every search."""
+    w = Window.partitionBy("qid").orderBy(F.desc("sim"), F.asc("nid"))
+    return local.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+
+
+def _search(
+    corpus: DataFrame,
+    q_rows: list,
+    k: int,
+    id_col: str,
+    vec_col: str,
+    group_col: str | None = None,
+    merge: bool = False,
+) -> DataFrame:
+    """-> (qid, nid, sim, rank): the top-k scorer shared by every search.
+
+    ``q_rows`` are the collected queries: (qid, vector) rows, or (qid,
+    vector, groups) when ``group_col`` names the corpus column whose
+    value must be in a query's ``groups`` for the pair to be scored (a
+    bucket, a cell). One Arrow map streams the corpus: per Arrow
+    batch and group, ``rows @ queries.T``, self rows (nid == qid) masked
+    out before the cut, sims rounded HALF_UP to 4 places, and each query
+    row's top-k kept on (sim desc, nid asc), the order ``_rank`` uses, so
+    the local cut never drops a global winner.
+
+    Every (query row, corpus row) pair is its own candidate unless
+    ``merge``: then the max sim per (qid, nid) is kept, and the local cut
+    widens by the batch's repeated ids so k distinct ids survive it.
+    """
+    import numpy as np
+    import pandas as pd
+
+    keep, q_mat = _unit_rows([r[1] for r in q_rows])
+    q_rows = [r for r, kp in zip(q_rows, keep) if kp]
+    q_list = [r[0] for r in q_rows]
+    q_ids = np.array(q_list)
+    groups: dict = {}
+    for j, r in enumerate(q_rows):
+        for g in r[2] if group_col else (None,):
+            groups.setdefault(g, []).append(j)
+    groups = {g: np.array(js) for g, js in groups.items()}
+
+    def score(batches):
+        from ..functions.worker import pin_worker_threads
+
+        pin_worker_threads()
+        for pdf in batches:
+            valid, rows = _unit_rows(list(pdf[vec_col]))
+            nids = pdf[id_col].to_numpy()[valid]
+            if group_col is None:
+                parts = [(np.arange(len(nids)), groups.get(None))]
+            else:
+                keys = pdf[group_col].to_numpy()[valid]
+                parts = [(pos, groups.get(g))
+                         for g, pos in pd.Series(keys).groupby(keys).indices.items()]
+            out_q, out_n, out_s = [], [], []
+            for pos, js in parts:
+                if js is None or len(pos) == 0:
+                    continue
+                ids = nids[pos]
+                sims = _round_half_up(rows[pos] @ q_mat[js].T)  # [rows, queries]
+                sims[ids[:, None] == q_ids[js][None, :]] = -np.inf
+                n = len(ids)
+                cut = min(n, k + (n - len(np.unique(ids)) if merge else 0))
+                thr = np.partition(sims, n - cut, axis=0)[n - cut]
+                for c, j in enumerate(js):
+                    col = sims[:, c]
+                    cand = np.flatnonzero((col >= thr[c]) & (col > -np.inf))
+                    for i in sorted(cand, key=lambda i: (-col[i], ids[i]))[:cut]:
+                        out_q.append(q_list[j])
+                        out_n.append(ids[i])
+                        out_s.append(float(col[i]))
+            yield pd.DataFrame({"qid": out_q, "nid": out_n, "sim": out_s})
+
+    id_type = corpus.schema[id_col].dataType.simpleString()
+    cols = [id_col, vec_col] + ([group_col] if group_col else [])
+    local = corpus.select(*cols).mapInPandas(
+        score, f"qid {id_type}, nid {id_type}, sim double"
+    )
+    if merge:  # hash-partitioned on qid, the merge and _rank share one exchange
+        local = (local.repartition("qid").groupBy("qid", "nid")
+                 .agg(F.max("sim").alias("sim")))
+    return _rank(local, k)
+
+
 def brute_force_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -93,136 +213,14 @@ def brute_force_topk(
 ) -> DataFrame:
     """-> (qid, nid, sim, rank): exact top-k cosine neighbors per query.
 
-    queries is broadcast (small); ties break on neighbor id so ranking is
-    total. Self-matches are excluded; zero-norm vectors never match on
-    either side (unit_vectors drops them — same rows the old NULL-cosine
-    filter removed, but without re-evaluating the score expression).
-
-    Each side is unit-normalized ONCE (per row), so the per-pair cost is
-    a single interpreted `_dot` — the naive cosine-per-pair shape costs
-    3 aggregates per pair and, with the NULL filter pushdown-substituted
-    into the projection, evaluated them twice (measured 1.8-2x slower at
-    sf0.1; this is the r4 bench regression fixed in r5).
+    Self-matches are excluded, NULL and zero-norm vectors never match on
+    either side, ties break on the neighbor id, and a corpus row is
+    scored once per query row. Eager action: one ``collect`` of the
+    (small by contract) query set; every query scores every corpus row
+    (``_search``), and only each batch's per-query top-k is shuffled.
     """
-    q = unit_vectors(
-        queries.select(F.col(id_col).alias("qid"), F.col(vec_col).alias("qvec")),
-        "qvec",
-    )
-    c = unit_vectors(
-        corpus.select(F.col(id_col).alias("nid"), F.col(vec_col).alias("nvec")),
-        "nvec",
-    )
-    scored = (
-        c.crossJoin(F.broadcast(q))
-        .filter(F.col("qid") != F.col("nid"))
-        .select(
-            "qid",
-            "nid",
-            F.round(_dot(F.col("qvec"), F.col("nvec")), 4).alias("sim"),
-        )
-    )
-    w = Window.partitionBy("qid").orderBy(F.desc("sim"), F.asc("nid"))
-    return scored.withColumn("rank", F.row_number().over(w)).filter(
-        F.col("rank") <= k
-    )
-
-
-def matmul_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 3,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Exact top-k cosine at BLAS speed: the (small-by-contract) query
-    set is collected to a normalized numpy matrix and shipped in the
-    task closure; the corpus streams through ONE ``mapInPandas`` that
-    computes a [batch × n_queries] matmul and emits only each batch's
-    per-query top-k, so the shuffle is bounded by n_batches·n_q·k rows
-    (never the corpus); a final per-query rank reduces local top-k to
-    global top-k. Results are identical to ``brute_force_topk`` — this
-    is the exact-search scale path when the Catalyst expression dot
-    product (interpreted per pair) becomes the bottleneck.
-    """
-    import numpy as np
-    import pandas as pd
-
-    id_type = corpus.schema[id_col].dataType.simpleString()
-    q_rows = queries.select(id_col, vec_col).collect()  # small by contract
-    if not q_rows:
-        return queries.sparkSession.createDataFrame(
-            [], f"qid {id_type}, nid {id_type}, sim double, rank int"
-        )
-    # ids stay native Python values (string/long/... per the schema —
-    # forcing int64 broke the brute_force_topk drop-in contract for
-    # non-long ids); zero-norm queries are dropped like the Catalyst
-    # path's NULL-cosine filter drops them
-    q_pairs = [
-        (r[0], np.asarray(r[1], dtype=np.float64))
-        for r in q_rows
-        if np.linalg.norm(np.asarray(r[1], dtype=np.float64)) > 0
-    ]
-    if not q_pairs:
-        return queries.sparkSession.createDataFrame(
-            [], f"qid {id_type}, nid {id_type}, sim double, rank int"
-        )
-    q_ids = [p[0] for p in q_pairs]
-    q_mat = np.stack([p[1] for p in q_pairs])
-    q_mat /= np.linalg.norm(q_mat, axis=1, keepdims=True)
-
-    def round_half_up(x, decimals=4):
-        # Spark/DuckDB round() is HALF_UP away from zero; np.round is
-        # banker's half-even — mismatched .xxxx5 boundaries would flip
-        # the oracle's 4th decimal. `+ 0.0` folds -0.0 into +0.0.
-        scale = 10.0 ** decimals
-        return np.copysign(np.floor(np.abs(x) * scale + 0.5) / scale, x) + 0.0
-
-    def topk_map(batches):
-        from ..functions.worker import pin_worker_threads
-
-        pin_worker_threads()
-        for pdf in batches:
-            a = np.array(list(pdf[vec_col]), dtype=np.float64)
-            if len(a) == 0:
-                yield pd.DataFrame({"qid": [], "nid": [], "sim": []})
-                continue
-            norms = np.linalg.norm(a, axis=1, keepdims=True)
-            # zero-norm corpus rows never match (Catalyst-path parity:
-            # its NULL cosine is filtered before ranking)
-            valid = norms[:, 0] > 0
-            nids = pdf[id_col].to_numpy()[valid]
-            if len(nids) == 0:
-                yield pd.DataFrame({"qid": [], "nid": [], "sim": []})
-                continue
-            a = a[valid] / norms[valid]
-            sims = a @ q_mat.T  # [batch, n_q]
-            numeric_ids = np.issubdtype(nids.dtype, np.number)
-            out_q, out_n, out_s = [], [], []
-            kk = min(k + 1, len(nids))  # +1 absorbs a possible self-match
-            for j, qid in enumerate(q_ids):
-                # rank on the ROUNDED similarity with nid tie-break —
-                # the exact ordering the final window (and the oracle)
-                # uses; cutting local top-k on raw sims can keep the
-                # wrong member of a rounding-band tie
-                col = round_half_up(sims[:, j])
-                if numeric_ids:
-                    order = np.lexsort((nids, -col))
-                else:  # lexsort can't negate object/string keys
-                    order = sorted(
-                        range(len(nids)), key=lambda i: (-col[i], nids[i])
-                    )
-                for i in order[:kk]:
-                    if nids[i] != qid:
-                        out_q.append(qid)
-                        out_n.append(nids[i])
-                        out_s.append(float(col[i]))
-            yield pd.DataFrame({"qid": out_q, "nid": out_n, "sim": out_s})
-
-    local = corpus.select(id_col, vec_col).mapInPandas(
-        topk_map, f"qid {id_type}, nid {id_type}, sim double"
-    )
-    w = Window.partitionBy("qid").orderBy(F.desc("sim"), F.asc("nid"))
-    return local.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+    return _search(corpus, queries.select(id_col, vec_col).collect(), k,
+                   id_col, vec_col)
 
 
 def hyperplane_lsh_buckets(
@@ -415,7 +413,9 @@ def ivf_assignments(
 
     from ..functions.hashing import md5_long
 
-    feat = vectors.select(
+    # a NULL or all-zero vector never matches (cosine NULL) and would
+    # fail the k-means fit (NULL) or pull a centroid to the origin
+    feat = vectors.filter(F.exists(vec_col, lambda x: x != 0)).select(
         F.col(id_col).alias("vec_id"),
         F.col(vec_col).alias("embedding"),
         array_to_vector(F.col(vec_col).cast("array<double>")).alias("features"),
@@ -451,54 +451,6 @@ def ivf_assignments(
     return assigned, centroids
 
 
-def _assign_query_cells(
-    queries: DataFrame,
-    centroids: list,
-    n_probe: int,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """-> (qid, cell): each query exploded to its n_probe nearest cells.
-
-    The centroid matrix ships in the task closure (tiny by contract) and
-    distances are one numpy pass per Arrow batch, so the PLAN is
-    constant-size regardless of n_cells. The Catalyst-literal
-    alternative (``nearest_cells`` in ``tests/catalyst_reference.py``,
-    the parity reference) builds one struct expression per centroid with
-    per-dimension literal arrays — at a realistic 100 TB index
-    (n_cells ≥ 4096, dim ≥ 768) that is millions of literal nodes and
-    plan compile/codegen blows up before any data moves.
-
-    Ties: stable argsort on squared L2 breaks them by ascending cell
-    index, the same order as ``array_sort`` over struct(d, cell).
-    """
-    import numpy as np
-    import pandas as pd
-
-    cmat = np.asarray(centroids, dtype=np.float64)
-    k = min(n_probe, len(centroids))
-
-    def assign(batches):
-        from ..functions.worker import pin_worker_threads
-
-        pin_worker_threads()
-        for pdf in batches:
-            out_q: list = []
-            out_c: list = []
-            for qid, vec in zip(pdf[id_col], pdf[vec_col]):
-                q = np.asarray(list(vec), dtype=np.float64)
-                d = ((cmat - q) ** 2).sum(axis=1)
-                for c in np.argsort(d, kind="stable")[:k]:
-                    out_q.append(qid)
-                    out_c.append(int(c))
-            yield pd.DataFrame({"qid": out_q, "cell": out_c})
-
-    id_type = queries.schema[id_col].dataType.simpleString()
-    return queries.select(id_col, vec_col).mapInPandas(
-        assign, f"qid {id_type}, cell int"
-    )
-
-
 def ivf_search(
     assigned: DataFrame,
     centroids: list,
@@ -514,34 +466,23 @@ def ivf_search(
     centroid list is a tiny JSON-able model. Candidates come only from
     each query's n_probe nearest cells.
 
-    Cell assignment for the (small, broadcast) query side runs as a
-    numpy argmin in one mapInPandas (constant plan size in n_cells)."""
-    c = assigned.select(
-        F.col("vec_id").alias("nid"), F.col("embedding").alias("nvec"), "cell"
-    )
-    q = queries.select(
-        F.col(id_col).alias("qid"), F.col(vec_col).alias("qvec")
-    )
-    cells = _assign_query_cells(queries, centroids, n_probe, id_col, vec_col)
-    q = q.join(cells, on="qid")
-    # per-pair cost: one _dot over unit vectors (zero-norm rows drop at
-    # normalize time; cell assignment above used the raw vectors, which
-    # k-means needs)
-    c = unit_vectors(c, "nvec")
-    q = unit_vectors(q, "qvec")
-    # no (qid, nid) dedup stage, unlike ann_topk: IVF partitions the
-    # corpus — every row owns exactly ONE cell and a query's n_probe
-    # cells are distinct (stable argsort / sorted slice), so the cell
-    # join cannot emit the same (qid, nid) twice and the old
-    # groupBy+max was an identity that cost a full extra Exchange
-    # before the ranking window (r8 plan audit: 3 exchanges -> 2).
-    scored = (
-        c.join(F.broadcast(q), on="cell")
-        .filter(F.col("qid") != F.col("nid"))
-        .select("qid", "nid", F.round(_dot(F.col("qvec"), F.col("nvec")), 4).alias("sim"))
-    )
-    w = Window.partitionBy("qid").orderBy(F.desc("sim"), F.asc("nid"))
-    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+    Eager action: one ``collect`` of the (small by contract) query set.
+    Each query's cells are picked on the driver from its raw vector: a
+    stable argsort of the squared L2 distances to the centroids, so ties
+    go to the lower cell index and the plan stays constant-size in
+    n_cells. Each corpus row is scored against the queries probing its
+    cell (``_search``); a row owns one cell and a query's probe cells are
+    distinct, so every (query row, corpus row) pair is scored at most
+    once and the ranking window is the plan's only exchange."""
+    import numpy as np
+
+    cmat = np.asarray(centroids, dtype=np.float64)
+    q_rows = []
+    for qid, vec in queries.select(id_col, vec_col).collect():
+        if vec is not None:
+            d = ((cmat - np.asarray(vec, dtype=np.float64)) ** 2).sum(axis=1)
+            q_rows.append((qid, vec, np.argsort(d, kind="stable")[:n_probe].tolist()))
+    return _search(assigned, q_rows, k, "vec_id", "embedding", group_col="cell")
 
 
 def ivf_topk(
@@ -630,46 +571,22 @@ def ann_topk(
     vec_col: str = "embedding",
 ) -> DataFrame:
     """Approximate top-k via multiprobe hyperplane LSH: the corpus is
-    bucketed ONCE; each (small, broadcast) query probes every bucket
-    within ``max_hamming`` bit flips of its own code. Recall rises
-    steeply with the probe radius while the corpus-side cost stays a
-    single bucketing pass + one bucket-keyed join — the scale path when
-    brute force is too wide. ``max_hamming=0`` is the classic
-    single-bucket probe."""
-    # vector rides through the bucketing projection (keep=) — joining
-    # the bucket table back to the corpus would re-execute the corpus
-    # scan for the join's second alias AND pay an id-keyed exchange
+    bucketed ONCE; each (small) query probes every bucket within
+    ``max_hamming`` bit flips of its own code. Recall rises steeply with
+    the probe radius while the corpus-side cost stays a single bucketing
+    pass — the scale path when brute force is too wide.
+    ``max_hamming=0`` is the classic single-bucket probe.
+
+    Eager actions: one ``collect`` of the (small by contract) query set
+    with its probe codes, after ``hyperplane_lsh_buckets``' width probe
+    on each side. Each corpus row is scored against the queries probing
+    its bucket (``_search``); a (qid, nid) pair that repeats through a
+    duplicated id keeps its max sim."""
     c = hyperplane_lsh_buckets(
         corpus, n_planes, id_col=id_col, vec_col=vec_col, keep=(vec_col,)
-    ).select(
-        F.col("vec_id").alias("nid"), F.col(vec_col).alias("nvec"), "bucket"
     )
-    q = (
-        hyperplane_lsh_buckets(
-            queries, n_planes, id_col=id_col, vec_col=vec_col, keep=(vec_col,)
-        )
-        .select(
-            F.col("vec_id").alias("qid"), F.col(vec_col).alias("qvec"), "bucket"
-        )
-        .withColumn(
-            "bucket",
-            F.explode(_probe_buckets(F.col("bucket"), n_planes, max_hamming)),
-        )
-    )
-    # unit-normalize AFTER bucketing (hyperplane signs are
-    # scale-invariant, so the codes are identical); zero-norm rows drop
-    # here — the same rows the old NULL-cosine filter removed — and the
-    # per-pair score is ONE _dot, not a twice-evaluated 3-aggregate
-    # cosine (see unit_vectors)
-    c = unit_vectors(c, "nvec")
-    q = unit_vectors(q, "qvec")
-    scored = (
-        c.join(F.broadcast(q), on="bucket")
-        .filter(F.col("qid") != F.col("nid"))
-        .select("qid", "nid", F.round(_dot(F.col("qvec"), F.col("nvec")), 4).alias("sim"))
-        # a neighbor can surface from several probe buckets — dedup
-        .groupBy("qid", "nid")
-        .agg(F.max("sim").alias("sim"))
-    )
-    w = Window.partitionBy("qid").orderBy(F.desc("sim"), F.asc("nid"))
-    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+    q = hyperplane_lsh_buckets(
+        queries, n_planes, id_col=id_col, vec_col=vec_col, keep=(vec_col,)
+    ).select("vec_id", vec_col, _probe_buckets(F.col("bucket"), n_planes, max_hamming))
+    return _search(c, q.collect(), k, "vec_id", vec_col, group_col="bucket",
+                   merge=True)

@@ -471,17 +471,6 @@ def embedding_topk_q(spark, sf_dir):
     return out.select("qid", "nid", "sim", F.col("rank").cast("long").alias("rank"))
 
 
-@register_extra("matmul_topk", _EXACT_TOPK_SQL)
-def matmul_topk_q(spark, sf_dir):
-    """Vectorized exact search — must agree with the SAME oracle as the
-    Catalyst brute-force baseline (identical results by construction)."""
-    from ..operators.similarity import matmul_topk
-
-    emb = load(spark, sf_dir, "embeddings")
-    out = matmul_topk(emb, emb.filter(F.col("vec_id") < 5), k=3)
-    return out.select("qid", "nid", "sim", F.col("rank").cast("long").alias("rank"))
-
-
 @register(
     "embedding_near_dup",
     """

@@ -108,18 +108,15 @@ from information_extraction_for_chinese_nlp_spark.operators.similarity import an
 emb = spark.read.parquet(f"{SF}/embeddings.parquet")
 q = ann_topk(emb, emb.filter(F.col("vec_id") < 5), k=3, n_planes=6, max_hamming=1)
 sections.append(("ann_topk (multiprobe LSH)", plan_of(q), """
-What to read: exactly ONE corpus Scan — the bucket code is computed in
-the same projection that carries the vector (keep=), so there is no
-id-keyed join of the bucket table back to the corpus (the old shape
-re-executed the corpus scan for the self-join's second alias). The
-query side explodes to its Hamming-radius probe codes and broadcasts
-(BroadcastHashJoin on bucket) — the 100 TB corpus never shuffles for
-candidate generation; only the per-query top-k window runs on the
-(output-bound) candidate set.
-
-The two-scan join-back alternative (narrow bucketing + id-keyed join
-back to the corpus, identical rows) lost the round-6 A/B at 200k
-vectors and was removed; BASELINE.md keeps the table.
+What to read: exactly ONE corpus Scan. The bucket code is computed in
+the same projection that carries the vector (keep=), and the
+MapInPandas above it scores each row against the queries probing its
+bucket: the query set, with its probe codes, was collected when the
+plan was built and rides in the task closure, so there is no join and
+the corpus never shuffles. ONE Exchange follows, on the bounded local
+top-k rows: hash-partitioned on qid, it serves both the (qid, nid) max
+merge (a pair repeats only through a duplicated id) and the per-query
+ranking window.
 """))
 
 from information_extraction_for_chinese_nlp_spark.operators.dedup import line_dedup
@@ -150,15 +147,15 @@ set: past 4M hot lines the broadcast hint goes and AQE plans a shuffle
 join instead. `python bench.py --line-dedup-ab` prices both legs.
 """))
 
-from information_extraction_for_chinese_nlp_spark.operators.similarity import matmul_topk
-q = matmul_topk(emb, emb.filter(F.col("vec_id") < 5), k=3)
-sections.append(("matmul_topk (vectorized exact search)", plan_of(q), """
-What to read: ONE MapInPandas directly over the corpus scan — the
-query matrix rides in the task closure, each partition emits only its
-local top-k, so the Exchange above it moves at most batches·queries·k
-rows (never the corpus). The final Window ranks that bounded candidate
-set. Exact results at BLAS speed; 10× the Catalyst expression baseline
-on the benchmark set.
+from information_extraction_for_chinese_nlp_spark.operators.similarity import brute_force_topk
+q = brute_force_topk(emb, emb.filter(F.col("vec_id") < 5), k=3)
+sections.append(("brute_force_topk (exact search)", plan_of(q), """
+What to read: ONE MapInPandas directly over the corpus scan. The query
+matrix rides in the task closure and each Arrow batch emits only its
+per-query top-k, so the one Exchange (the ranking window) moves at most
+batches·queries·k rows, never the corpus. ann_topk and ivf_search are
+the same plan with a bucket or cell column carried into the
+MapInPandas.
 """))
 
 q = minhash_lsh_pairs(docs, n_bands=16, rows_per_band=4, max_bucket=1000)
@@ -193,12 +190,14 @@ from information_extraction_for_chinese_nlp_spark.operators.similarity import (
 )
 _assigned, _cents = ivf_assignments(emb, n_cells=16)
 q = ivf_search(_assigned, _cents, emb.filter(F.col("vec_id") < 5), k=3, n_probe=4)
-sections.append(("ivf_search (numpy query-cell assignment)", plan_of(q), """
-What to read: the query side's cell assignment is a constant-size
-MapInPandas (centroid matrix in the closure) — the plan no longer
-grows with n_cells (the literal-expression variant embeds one struct
-per centroid and blows up compile/codegen at n_cells ≥ 4096). The
-corpus joins candidates only via BroadcastHashJoin on cell.
+sections.append(("ivf_search (driver-side query cells)", plan_of(q), """
+What to read: the corpus side is the k-means assignment (the model's
+transform, with the NULL/zero-vector filter below it) feeding ONE
+MapInPandas that scores each row against the queries probing its cell.
+The query cells were picked on the driver when the plan was built, so
+the plan does not grow with n_cells, and the ranking window's Exchange
+is the only one: a row owns one cell and a query's probe cells are
+distinct, so no (qid, nid) pair repeats.
 """))
 
 q = qs["winnow_fingerprints"](spark, SF)
@@ -364,6 +363,8 @@ for title, plan, notes in sections:
         out.extend(evidence)
     out.append("```")
     out.append("")
-open("/root/repo/PLANS.md", "w").write("\n".join(out))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+with open(os.path.join(ROOT, "PLANS.md"), "w") as f:
+    f.write("\n".join(out))
 print("PLANS.md written", len("\n".join(out)), "chars")
 spark.stop()

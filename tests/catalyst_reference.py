@@ -7,9 +7,12 @@ kept as the parity references its production paths are tested against.
   expressions — the shape the DuckDB oracles use (test_bucketing). Each
   shuffles tokens × n_seeds (or × n_bits) rows, which measured slower
   than the Arrow path at every budget.
+- Exact cosine top-k: a broadcast cross join scored with one
+  interpreted ``_dot`` per pair over unit vectors, ranked by a window
+  (test_ann); the library scores with a numpy matmul per Arrow batch.
 - IVF query-cell assignment: one literal struct per centroid, so the
-  plan grows with n_cells × dim (test_ann); the library assigns cells
-  with a numpy pass in one ``mapInPandas``.
+  plan grows with n_cells × dim (test_ann); the library picks the cells
+  on the driver from the collected queries.
 - The KG linker's pred-blocked all-pairs join: recall 1.0 but quadratic
   per predicate (test_graph); the library links through MinHash bands.
 """
@@ -128,6 +131,39 @@ def simhash_wide(docs: DataFrame, id_col: str = "doc_id",
     )
 
 
+def brute_force_topk(
+    corpus: DataFrame,
+    queries: DataFrame,
+    k: int = 3,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+) -> DataFrame:
+    """-> (qid, nid, sim, rank): ``similarity.brute_force_topk`` as a
+    broadcast cross join. Each side is unit-normalized once per row, so
+    the per-pair cost is a single ``_dot``."""
+    q = unit_vectors(
+        queries.select(F.col(id_col).alias("qid"), F.col(vec_col).alias("qvec")),
+        "qvec",
+    )
+    c = unit_vectors(
+        corpus.select(F.col(id_col).alias("nid"), F.col(vec_col).alias("nvec")),
+        "nvec",
+    )
+    scored = (
+        c.crossJoin(F.broadcast(q))
+        .filter(F.col("qid") != F.col("nid"))
+        .select(
+            "qid",
+            "nid",
+            F.round(_dot(F.col("qvec"), F.col("nvec")), 4).alias("sim"),
+        )
+    )
+    w = Window.partitionBy("qid").orderBy(F.desc("sim"), F.asc("nid"))
+    return scored.withColumn("rank", F.row_number().over(w)).filter(
+        F.col("rank") <= k
+    )
+
+
 def nearest_cells(vec_col, centroids, n_probe: int):
     """Indices of the n_probe nearest centroids (JVM-side expressions).
 
@@ -158,7 +194,7 @@ def ivf_search(assigned: DataFrame, centroids: list, queries: DataFrame,
                k: int = 3, n_probe: int = 4, id_col: str = "vec_id",
                vec_col: str = "embedding") -> DataFrame:
     """``similarity.ivf_search`` with the query cells assigned by
-    :func:`nearest_cells` instead of the numpy ``mapInPandas``."""
+    :func:`nearest_cells` and the pairs scored in Catalyst."""
     c = assigned.select(
         F.col("vec_id").alias("nid"), F.col("embedding").alias("nvec"), "cell"
     )

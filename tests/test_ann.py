@@ -1,6 +1,9 @@
 """ANN paths: IVF recall vs brute force; LSH bucket determinism;
 multiprobe LSH recall on planted near-duplicates."""
 
+import itertools
+import math
+
 import pytest
 
 import numpy as np
@@ -263,11 +266,12 @@ def test_ivf_index_persistence_roundtrip(spark, sf_dir, tmp_path):
 
 def test_zero_norm_vectors_never_match(spark):
     """An all-zero embedding (embedding-service failure row) must not
-    crash ANSI-mode division and must be excluded from top-k on BOTH
-    exact paths (Catalyst NULL-cosine filter == numpy mask)."""
+    crash ANSI-mode division and must be excluded from top-k, the same
+    rows the Catalyst reference's NULL-cosine filter drops."""
+    from catalyst_reference import brute_force_topk as brute_force_topk_ref
+
     from information_extraction_for_chinese_nlp_spark.operators.similarity import (
         brute_force_topk,
-        matmul_topk,
     )
 
     rows = [
@@ -276,29 +280,30 @@ def test_zero_norm_vectors_never_match(spark):
     emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
     q = emb.filter("vec_id = 0")
     bf = sorted(map(tuple, brute_force_topk(emb, q, k=3).collect()))
-    mm = sorted(map(tuple, matmul_topk(emb, q, k=3).collect()))
-    assert bf == mm
+    ref = sorted(map(tuple, brute_force_topk_ref(emb, q, k=3).collect()))
+    assert bf == ref
     assert all(r[1] != 2 for r in bf), "zero-norm corpus row surfaced"
     # zero-norm QUERY yields no rows instead of crashing
     zq = emb.filter("vec_id = 2")
     assert brute_force_topk(emb, zq, k=3).count() == 0
-    assert matmul_topk(emb, zq, k=3).count() == 0
+    assert brute_force_topk_ref(emb, zq, k=3).count() == 0
 
 
 def test_matmul_topk_string_ids(spark):
-    """id_col is honored for non-long ids (the scale path must stay a
-    drop-in for brute_force_topk on any id type)."""
+    """id_col is honored for non-long ids: the numpy scorer matches the
+    Catalyst reference on string ids."""
+    from catalyst_reference import brute_force_topk as brute_force_topk_ref
+
     from information_extraction_for_chinese_nlp_spark.operators.similarity import (
         brute_force_topk,
-        matmul_topk,
     )
 
     rows = [("a", [1.0, 0.0]), ("b", [0.9, 0.1]), ("c", [0.0, 1.0])]
     emb = spark.createDataFrame(rows, "vec_id string, embedding array<double>")
     q = emb.filter("vec_id = 'a'")
     bf = sorted(map(tuple, brute_force_topk(emb, q, k=2).collect()))
-    mm = sorted(map(tuple, matmul_topk(emb, q, k=2).collect()))
-    assert bf == mm and len(bf) == 2
+    ref = sorted(map(tuple, brute_force_topk_ref(emb, q, k=2).collect()))
+    assert bf == ref and len(bf) == 2
 
 # e2e / streaming / property-heavy: excluded from the fast inner-loop tier
 pytestmark = pytest.mark.slow
@@ -339,3 +344,112 @@ def test_hyperplane_literal_weights_match_expression(spark):
               for r in hyperplane_lsh_buckets(df, n_planes=6,
                                               probe_dim=False).collect()}
     assert lit_b == expr_b, (lit_b, expr_b)
+
+
+# Degenerate-input contract shared by every top-k search. Corpus: a
+# NULL and an all-zero embedding (never returned, as query or neighbor),
+# id 1 carried by two near-identical vectors (query 1 has two self rows
+# at the top of its ranking), id 5 by two different vectors (and twice
+# in the query set), and ids 2 and 9 sharing one vector (a sim tie the
+# id must break).
+_CONTRACT_CORPUS = [
+    (1, [1.0, 0.0, 0.0, 0.0]),
+    (1, [1.0, 0.0, 0.01, 0.0]),
+    (2, [0.9, 0.1, 0.0, 0.0]),
+    (3, [0.5, 0.5, 0.0, 0.0]),
+    (4, [0.0, 1.0, 0.0, 0.0]),
+    (5, [0.7, 0.7, 0.1, 0.0]),
+    (5, [0.2, 0.9, 0.0, 0.3]),
+    (6, None),
+    (7, [0.0, 0.0, 0.0, 0.0]),
+    (8, [-1.0, 0.2, 0.0, 0.0]),
+    (9, [0.9, 0.1, 0.0, 0.0]),
+]
+_CONTRACT_QUERIES = [_CONTRACT_CORPUS[i] for i in (0, 5, 6, 7, 8)]
+
+
+def _contract_search(name, corpus, queries, k):
+    """Each search configured to probe its whole index, so the expected
+    rows are the exact top-k under the operator's duplicate semantics."""
+    from information_extraction_for_chinese_nlp_spark.operators.similarity import (
+        ivf_assignments,
+        ivf_search,
+    )
+
+    if name == "brute_force_topk":
+        return brute_force_topk(corpus, queries, k=k)
+    if name == "ann_topk":  # radius 2 over 2 planes probes all 4 codes
+        return ann_topk(corpus, queries, k=k, n_planes=2, max_hamming=2)
+    assigned, centroids = ivf_assignments(corpus, n_cells=2)
+    return ivf_search(assigned, centroids, queries, k=k, n_probe=2)
+
+
+def _contract_expected(corpus_rows, query_rows, k, merge):
+    """Exact top-k in plain Python: cosine rounded HALF_UP to 4 places,
+    self rows and NULL/zero-norm rows dropped, ranked on (-sim, nid).
+    ``merge`` keeps the max sim per (qid, nid) (ANN's contract); without
+    it every (query row, corpus row) pair is its own candidate."""
+    def unit(rows):
+        out = []
+        for i, v in rows:
+            n = math.sqrt(sum(x * x for x in v)) if v is not None else 0.0
+            if n > 0:
+                out.append((i, [x / n for x in v]))
+        return out
+
+    def half_up(x):
+        return math.copysign(math.floor(abs(x) * 1e4 + 0.5) / 1e4, x) + 0.0
+
+    cands = {}
+    for qid, qv in unit(query_rows):
+        for nid, nv in unit(corpus_rows):
+            if nid != qid:
+                sim = half_up(sum(a * b for a, b in zip(qv, nv)))
+                cands.setdefault(qid, []).append((nid, sim))
+    out = []
+    for qid, pairs in cands.items():
+        if merge:
+            best = {}
+            for nid, sim in pairs:
+                best[nid] = max(sim, best.get(nid, sim))
+            pairs = list(best.items())
+        pairs.sort(key=lambda p: (-p[1], p[0]))
+        out += [(qid, nid, sim, r) for r, (nid, sim) in enumerate(pairs[:k], 1)]
+    return sorted(out)
+
+
+@pytest.mark.parametrize("search", ["brute_force_topk", "ann_topk", "ivf_search"])
+def test_search_degenerate_input_contract(spark, search):
+    """NULL and zero-norm rows never match; self rows never surface,
+    even for a duplicated query id, which still gets k rows when k
+    non-self candidates exist; a duplicated corpus id keeps one row per
+    corpus row (brute force, IVF) or is max-merged (ANN); string ids
+    rank like long ids; k above the candidate count returns every
+    candidate."""
+    merge = search == "ann_topk"
+    for as_str in (False, True):
+        name = (lambda i: f"v{10 - i}") if as_str else (lambda i: i)
+        corpus_rows = [(name(i), v) for i, v in _CONTRACT_CORPUS]
+        query_rows = [(name(i), v) for i, v in _CONTRACT_QUERIES]
+        schema = f"vec_id {'string' if as_str else 'long'}, embedding array<double>"
+        df = spark.createDataFrame(corpus_rows, schema)
+        queries = spark.createDataFrame(query_rows, schema)
+        # one partition puts each id's rows in the same Arrow batch
+        for n_parts, k in itertools.product((None, 1), (3, 10)):
+            case = (as_str, n_parts, k)
+            corpus = df if n_parts is None else df.coalesce(n_parts)
+            got = sorted(
+                (r.qid, r.nid, r.sim, r.rank)
+                for r in _contract_search(search, corpus, queries, k).collect()
+            )
+            want = _contract_expected(corpus_rows, query_rows, k, merge)
+            assert got == want, case
+            bad = {name(6), name(7)}
+            assert not any(q in bad or n in bad or q == n for q, n, _, _ in got)
+            # query 1: seven non-self corpus rows, six distinct ids
+            n_one = sum(g[0] == name(1) for g in got)
+            assert n_one == min(k, 6 if merge else 7), (case, n_one)
+            # query id 5: seven non-self corpus rows, six distinct ids,
+            # scored against each of its two query rows
+            n_dup = sum(g[0] == name(5) for g in got)
+            assert n_dup == min(k, 6 if merge else 14), (case, n_dup)
