@@ -159,16 +159,6 @@ def build_frames(spark):
         # 200k candidate pairs, 2k distinct surfaces — the shape where
         # per-pair Python used to be the slowest surviving inner loop
         "q9_linker_tfidf": lambda: _linker_frame(spark),
-        # same fixture through the fully-distributed scorer (Spark-side
-        # IDF fit, no driver collect/cap). Expected ~2-3x slower HERE:
-        # it pays a mention-side explode+groupBy shuffle the UDF path
-        # doesn't, buying the unbounded-dictionary contract — the UDF
-        # path stays the default under the curated-dict cap, the
-        # distributed path is the escape hatch past it (measured 1.3s
-        # vs 3.3s at this fixture; both paths share one oracle)
-        "q9b_linker_tfidf_dist": lambda: _linker_frame(
-            spark, scorer="tfidf_distributed"
-        ),
         # incremental CC vs full recompute on the same union graph: the
         # fold's wall-time must track the 1% batch, not the accumulated
         # graph (VERDICT r4 task 6); prev_labels precomputed once in
@@ -296,7 +286,7 @@ def _dataprep_frame(docs):
     )
 
 
-def _linker_frame(spark, scorer="tfidf"):
+def _linker_frame(spark):
     """Mention-heavy TF-IDF linking: 200k candidate pairs over 2k
     distinct money surfaces — the fixture where the old per-pair Python
     scorer was the slowest surviving inner loop (VERDICT r4 task 1)."""
@@ -320,7 +310,7 @@ def _linker_frame(spark, scorer="tfidf"):
             F.format_string("%,d", (F.col("id") % 2000) * 137 + 1000), F.lit("元")
         ).alias("obj"),
     )
-    return link_entities(mentions, aliases, scorer=scorer, threshold=0.3)
+    return link_entities(mentions, aliases, scorer="tfidf", threshold=0.3)
 
 
 # incremental-CC fixture: 500k nodes in chains of 8 (~437k edges base),
@@ -397,6 +387,15 @@ def _line_dedup_legs(docs):
     }
 
 
+def _append_baseline(lines: list, repeats: int) -> None:
+    """Append one table to BASELINE.md, stamped with the machine's CPU
+    count and the repeats behind each number."""
+    cpus = len(os.sched_getaffinity(0))
+    with open(os.path.join(os.path.dirname(os.path.abspath(__file__)),
+                           "BASELINE.md"), "a") as f:
+        f.write("\n".join(lines) + f"\n\ncpus: {cpus}, repeats: {repeats}\n\n")
+
+
 def _alternating_medians(legs: dict, pairs: int) -> dict:
     """Median seconds per leg over ``pairs`` rounds, alternating which
     leg runs first; every leg must drop the same number of lines."""
@@ -441,9 +440,7 @@ def run_line_dedup_ab() -> None:
         print(json.dumps({"n_hot": n_hot, **med}))
         lines.append(f"| {n_hot} | {med['inrow']} | {med['relational']} |")
     spark.stop()
-    with open(os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                           "BASELINE.md"), "a") as f:
-        f.write("\n".join(lines) + "\n")
+    _append_baseline(lines, pairs)
 
 
 def run_line_dedup_oversized() -> None:
@@ -476,11 +473,8 @@ def run_line_dedup_oversized() -> None:
         "| --- | --- |",
         f"| broadcast hint | {med['relational']} |",
         f"| no hint (AQE shuffle join) | {med['relational_no_hint']} |",
-        "",
     ]
-    with open(os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                           "BASELINE.md"), "a") as f:
-        f.write("\n".join(lines))
+    _append_baseline(lines, pairs)
 
 
 def run_skew_ab() -> None:
@@ -585,11 +579,8 @@ def run_skew_ab() -> None:
               "",
               "The hot template's over-cap bucket is dropped AND counted "
               "(never silent); the n_bands sizing rule holds p99 well "
-              "under the cap on the uniform corpus.",
-              ""]
-    with open(os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                           "BASELINE.md"), "a") as f:
-        f.write("\n".join(lines))
+              "under the cap on the uniform corpus."]
+    _append_baseline(lines, BENCH_ITERS)
 
 
 def _cc_chains(spark, n_nodes: int):
@@ -685,9 +676,7 @@ def run_cc_legs() -> None:
         lines.append(f"| {n_nodes:,} | {n_sym:,} | {med['driver']} "
                      f"| {med['distributed']} |")
     spark.stop()
-    with open(os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                           "BASELINE.md"), "a") as f:
-        f.write("\n".join(lines) + "\n")
+    _append_baseline(lines, pairs)
 
 
 def _cc_incremental(state):
@@ -823,10 +812,8 @@ def run_scaling() -> None:
         f"| local[{n_hi}] (4N) | {t32:.2f} | {results[n_hi]['times']} | {tp32:.0f} |",
         "",
         f"Scaling efficiency (T_{n_lo} / T_{n_hi}) / 4 = **{eff:.2f}** (target >= 0.8).",
-        "",
     ]
-    with open(os.path.join(os.path.dirname(os.path.abspath(__file__)), "BASELINE.md"), "a") as f:
-        f.write("\n".join(lines))
+    _append_baseline(lines, SCALING_ITERS)
     print(json.dumps({"efficiency": round(eff, 3), "t8": t8, "t32": t32,
                       "turns_per_sec_8": round(tp8, 1),
                       "turns_per_sec_32": round(tp32, 1)}))
@@ -978,9 +965,7 @@ def run_sf1() -> None:
         flag = " **> 12x**" if ratio > 12 else ""
         lines.append("| %s | %.2f | %.2f | %.1fx%s |" % (
             key, r["sf0.1"], r["sf1"], ratio, flag))
-    with open(os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                           "BASELINE.md"), "a") as f:
-        f.write("\n".join(lines) + "\n")
+    _append_baseline(lines, 2)
     print(json.dumps({k: v for k, v in results.items()}))
     spark.stop()
 

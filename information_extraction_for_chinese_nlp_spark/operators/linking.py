@@ -4,8 +4,9 @@ best-match selection (SURVEY.md §2.8; the KG tail of north_star).
 The alias dictionary is small by construction (it's curated), so the
 candidate join broadcasts it — no shuffle of the mention table, which is
 the 100 TB side. Blocking keys bound the candidate set per mention;
-scoring is char-n-gram Jaccard (set expressions, JVM-side) with an
-optional TF-IDF cosine variant for longer surface forms.
+scoring is char-n-gram Jaccard (set expressions, JVM-side), char-n-gram
+TF-IDF cosine (one Arrow-batched UDF, IDF fitted driver-side on the
+dictionary) for longer surface forms, or embedding cosine.
 """
 
 from __future__ import annotations
@@ -50,50 +51,13 @@ def _ngrams_py(s: str, n: int) -> list[str]:
     return [s[i : i + n] for i in range(max(len(s) - n + 1, 0))]
 
 
-def make_tfidf_scorer(aliases: list[str], ngram: int = 2):
-    """Char-n-gram TF-IDF cosine, IDF fitted on the alias corpus
-    (sklearn-style smooth idf: ln((1+N)/(1+df)) + 1; terms unseen in
-    the corpus get df=0 weight). The alias dictionary is small and
-    curated by contract, so fitting happens driver-side at plan time —
-    the scorer closure ships to workers with the UDF.
-
-    This is the reference per-pair implementation, kept as the parity
-    oracle for :func:`make_tfidf_batch_scorer` (the vectorized path
-    ``link_entities`` actually runs) — see
-    tests/test_graph.py::test_tfidf_batch_matches_loop."""
-    import math
-    from collections import Counter
-
-    n_docs = len(aliases)
-    df: Counter = Counter()
-    for a in aliases:
-        df.update(set(_ngrams_py(a, ngram)))
-    default_idf = math.log(1.0 + n_docs) + 1.0
-    idf = {t: math.log((1.0 + n_docs) / (1.0 + c)) + 1.0 for t, c in df.items()}
-
-    def weights(s: str) -> dict:
-        counts = Counter(_ngrams_py(s, ngram))
-        return {t: n * idf.get(t, default_idf) for t, n in counts.items()}
-
-    def score(obj, alias) -> float:
-        if obj is None or alias is None:
-            return 0.0
-        wa, wb = weights(obj), weights(alias)
-        dot = sum(w * wb[t] for t, w in wa.items() if t in wb)
-        na = math.sqrt(sum(w * w for w in wa.values()))
-        nb = math.sqrt(sum(w * w for w in wb.values()))
-        return dot / (na * nb) if na and nb else 0.0
-
-    return score
-
-
 def make_tfidf_batch_scorer(aliases: list[str], ngram: int = 2):
     """Vectorized TF-IDF cosine over whole Arrow batches.
 
-    Same fit and same scores as :func:`make_tfidf_scorer` (parity is
-    pinned in tests), but the per-batch work that scales with the
-    MENTION side — the 100 TB side — is numpy, not a Python loop over
-    candidate pairs:
+    Same fit and same scores as a per-pair Python scorer (the parity
+    reference in tests/catalyst_reference.py), but the per-batch work
+    that scales with the MENTION side — the 100 TB side — is numpy, not
+    a Python loop over candidate pairs:
 
     - alias vectors (term-index array, tf·idf weight array, norm) are
       precomputed ONCE here, driver-side, under the same curated-dict
@@ -109,7 +73,9 @@ def make_tfidf_batch_scorer(aliases: list[str], ngram: int = 2):
       by the alias dictionary (contract-small), never by the mentions.
 
     Returns ``score_batch(obj: pd.Series, alias: pd.Series) ->
-    np.ndarray[float64]``.
+    np.ndarray[float64]``. A NULL obj or alias scores 0.0; a non-NULL
+    alias outside ``aliases`` raises ValueError, since its n-grams have
+    no IDF weight and it would score silently wrong.
     """
     import math
     from collections import Counter
@@ -147,14 +113,6 @@ def make_tfidf_batch_scorer(aliases: list[str], ngram: int = 2):
 
     alias_vecs = {a: _vec(a) for a in set(aliases)}
 
-    # parity fallback for aliases OUTSIDE the fitted corpus: their OOV
-    # n-grams are not in `vocab`, so the indexed dot would silently
-    # lose OOV-term agreement (obj 'abcd' vs unseen alias 'abcd' must
-    # score 1.0, as the loop scorer does). Unseen aliases are rare by
-    # contract (the fit covers the dict), so those rows take the exact
-    # per-pair path.
-    _loop_score = make_tfidf_scorer(aliases, ngram)
-
     def score_batch(obj, alias) -> "np.ndarray":
         import pandas as pd
 
@@ -180,13 +138,9 @@ def make_tfidf_batch_scorer(aliases: list[str], ngram: int = 2):
         for s, e in zip(bounds[:-1], bounds[1:]):
             rows = order[s:e]
             a = a_uniq[a_sorted[s]]
-            fitted = alias_vecs.get(a)
-            if fitted is None:
-                # out-of-corpus alias: exact per-pair parity path
-                for r in rows:
-                    out[r] = _loop_score(o_uniq[o_codes[r]], a)
-                continue
-            b_idx, b_val, b_norm = fitted
+            if a not in alias_vecs:
+                raise ValueError(f"alias {a!r} is not in the fitted alias corpus")
+            b_idx, b_val, b_norm = alias_vecs[a]
             if b_norm == 0.0 or b_idx.size == 0:
                 continue
             scratch[b_idx] = b_val
@@ -236,37 +190,26 @@ def link_entities(
     threshold: float = 0.5,
     ngram: int = 2,
     scorer: str = "jaccard",
-    max_tfidf_aliases: int = MAX_TFIDF_ALIASES,
     emb_col: str = "embedding",
 ) -> DataFrame:
     """mentions(mention_id, pred, obj) × alias_dict(alias, canonical_id,
     block_key) -> (mention_id, pred, obj, canonical_id, score).
 
     Unlinked mentions are kept with NULL canonical_id (left join), so the
-    caller can mint new vertex ids for them.
+    caller can mint new vertex ids for them. A NULL obj or alias scores
+    0.0 on the n-gram scorers.
 
     ``scorer``: 'jaccard' (char-n-gram set Jaccard, pure Catalyst — the
     default for short surfaces) or 'tfidf' (char-n-gram TF-IDF cosine
     via an Arrow-batched UDF, north_star's weighting for longer surface
     forms — rare-n-gram agreement counts more than boilerplate). The
-    tfidf path collects the distinct aliases to the driver to fit the
-    IDF table and fails fast with a ValueError past
-    ``max_tfidf_aliases``. The guard is a single LIMIT cap+1 collect
-    (one scan, one action) — driver memory on the failure path is
-    bounded by cap+1 rows, the same order the SUCCESS path holds at a
-    full dictionary, never by the oversized dict's true size. An alias
-    set past the cap isn't a curated dictionary; use
-    ``scorer='tfidf_distributed'`` (identical scores, Spark-side fit,
-    no cap) or ``scorer='jaccard'`` there instead.
-
-    'tfidf_distributed' computes the SAME smooth-idf cosine with the
-    IDF fit as a Spark aggregation — no driver collect, no closure, no
-    Python anywhere. Cost shape: one linear explode+groupBy over the
-    mention side (map-side combinable) plus broadcast idf/alias
-    tables; pick it when the alias dictionary outgrows the driver-fit
-    contract or when a pure-Catalyst plan is preferred over the Arrow
-    UDF. Parity with 'tfidf' is pytest-pinned and both paths run
-    against the same DuckDB oracle gate.
+    tfidf path collects the distinct non-NULL aliases to the driver to
+    fit the IDF table and raises ValueError past ``MAX_TFIDF_ALIASES``.
+    The guard is a single LIMIT cap+1 collect (one scan, one action) —
+    driver memory on the failure path is bounded by cap+1 rows, the
+    same order the success path holds at a full dictionary, never by
+    the oversized dict's true size. An alias set past the cap isn't a
+    curated dictionary; use ``scorer='jaccard'`` there.
 
     'embedding' (the third north_star scorer) scores candidates by the
     cosine of ``emb_col`` arrays both frames must carry (mention-context
@@ -282,21 +225,21 @@ def link_entities(
         )
     elif scorer == "tfidf":
         # single action: LIMIT cap+1 + collect is both the fit input and
-        # the guard (one scan of the alias side per job — the old shape
-        # burned a separate count() action before collecting)
+        # the guard. A NULL alias is no document of the IDF corpus; the
+        # batch scorer gives its candidates 0.0.
         rows = (
             alias_dict.select("alias")
+            .where(F.col("alias").isNotNull())
             .distinct()
-            .limit(max_tfidf_aliases + 1)
+            .limit(MAX_TFIDF_ALIASES + 1)
             .collect()
         )
-        if len(rows) > max_tfidf_aliases:
+        if len(rows) > MAX_TFIDF_ALIASES:
             raise ValueError(
-                f"alias dictionary has over {max_tfidf_aliases} distinct "
-                "aliases, past the tfidf driver-side fitting cap; this "
-                "is beyond the small-curated-dict contract — use "
-                "scorer='jaccard' (fully distributed) or raise "
-                "max_tfidf_aliases explicitly"
+                f"alias dictionary has over {MAX_TFIDF_ALIASES} distinct "
+                "aliases, past the tfidf driver-side fitting cap of a "
+                "small curated dictionary; use scorer='jaccard' (fully "
+                "distributed)"
             )
         score_fn = make_tfidf_batch_scorer([r.alias for r in rows], ngram)
 
@@ -308,123 +251,6 @@ def link_entities(
             return pd.Series(score_fn(obj, alias), dtype="float64")
 
         score_col = tfidf_udf(F.col("obj"), F.col("alias"))
-    elif scorer == "tfidf_distributed":
-        # the SAME smooth-idf cosine as scorer='tfidf', but the fit is a
-        # Spark aggregation instead of a driver-side collect: no
-        # max_tfidf_aliases cap, no closure shipping — the dict's only
-        # remaining bound is the broadcast of the enriched alias table
-        # (drop to a shuffle join on block_key past that). Shape: one
-        # linear explode+groupBy over the mention side (map-side
-        # combinable), broadcast idf/alias tables, per-candidate dot
-        # over the carried weight maps — no Python anywhere.
-        # distinct aliases materialize ONCE (lazy checkpoint) — ndocs
-        # and the df explode both consume this aggregation, and this is
-        # the path that exists for dicts too large to re-scan casually
-        dd = alias_dict.select("alias").distinct().localCheckpoint(eager=False)
-        ndocs = dd.agg(F.count("*").cast("double").alias("_n"))
-        dterms = dd.select(
-            "alias",
-            F.explode(char_ngrams(F.col("alias"), ngram)).alias("t"),
-        )
-        idf = (
-            dterms.groupBy("t").agg(F.count("*").alias("_df"))
-            .crossJoin(F.broadcast(ndocs))
-            .select(
-                "t",
-                (F.log((1.0 + F.col("_n")) / (1.0 + F.col("_df"))) + 1.0)
-                .alias("_w"),
-            )
-        )
-        a_terms = (
-            alias_dict
-            # explode_outer mirrors the mention side: an alias SHORTER
-            # than the n-gram size has zero terms, and a plain explode
-            # would drop it from the rebuilt dict — and so from the
-            # candidate join — entirely, where the 'tfidf'/'jaccard'
-            # paths keep it as a 0.0-scored candidate (NULL canonical_id
-            # at threshold > 0, linked at threshold <= 0). The NULL-t
-            # sentinel row survives as an empty weight map with norm 0.
-            .withColumn(
-                "t", F.explode_outer(char_ngrams_multiset(F.col("alias"), ngram))
-            )
-            .groupBy("alias", "canonical_id", "block_key", "t")
-            .agg(F.count("*").alias("_tf"))
-            # left only for the NULL-t sentinel; non-null alias terms
-            # are in the idf corpus by construction
-            .join(F.broadcast(idf), on="t", how="left")
-            .withColumn(
-                "_w", F.when(F.col("t").isNotNull(), F.col("_tf") * F.col("_w"))
-            )
-        )
-        alias_dict = a_terms.groupBy("alias", "canonical_id", "block_key").agg(
-            F.map_from_entries(
-                F.collect_list(
-                    F.when(F.col("t").isNotNull(), F.struct("t", "_w"))
-                )
-            ).alias("_wmap"),
-            F.sqrt(
-                F.coalesce(F.sum(F.col("_w") * F.col("_w")), F.lit(0.0))
-            ).alias("_nb"),
-        )
-        # the mention frame is REBUILT from the explode+groupBy itself —
-        # pred/obj/block_key ride along as grouping keys, so there is ONE
-        # scan of the mention source and ONE shuffle (the aggregation,
-        # map-side combinable), never a second mention-scale join back.
-        # explode_outer keeps sub-n-gram objs alive (t = NULL sentinel ->
-        # empty weight map, norm 0, score 0.0 — loop-path parity), and
-        # the full-key grouping also scores duplicate (mention_id, obj)
-        # input rows independently instead of merging their n-grams.
-        m_terms = (
-            # dedupe mention ROWS before exploding: duplicate input rows
-            # must not double the term frequencies (tf counts per-obj
-            # n-gram occurrences, so the dedupe has to happen above the
-            # explode, not on the exploded rows)
-            m.select("mention_id", "pred", "obj", "block_key")
-            .distinct()
-            .select(
-                "mention_id", "pred", "obj", "block_key",
-                F.explode_outer(
-                    char_ngrams_multiset(F.col("obj"), ngram)
-                ).alias("t"),
-            )
-            .groupBy("mention_id", "pred", "obj", "block_key", "t")
-            .agg(F.count("*").alias("_tf"))
-            .join(F.broadcast(idf), on="t", how="left")
-            .crossJoin(F.broadcast(ndocs))
-            .withColumn(
-                "_w",
-                F.when(
-                    F.col("t").isNotNull(),
-                    F.col("_tf")
-                    * F.coalesce(
-                        F.col("_w"), F.log(F.lit(1.0) + F.col("_n")) + 1.0
-                    ),
-                ),
-            )
-        )
-        m = m_terms.groupBy("mention_id", "pred", "obj", "block_key").agg(
-            F.map_from_entries(
-                F.collect_list(
-                    F.when(F.col("t").isNotNull(), F.struct("t", "_w"))
-                )
-            ).alias("_omap"),
-            F.sqrt(
-                F.coalesce(F.sum(F.col("_w") * F.col("_w")), F.lit(0.0))
-            ).alias("_na"),
-        )
-        dot = F.aggregate(
-            F.map_entries(F.col("_omap")),
-            F.lit(0.0),
-            lambda acc, e: acc
-            + e["value"]
-            * F.coalesce(
-                F.try_element_at(F.col("_wmap"), e["key"]), F.lit(0.0)
-            ),
-        )
-        score_col = F.when(
-            (F.col("_na") > 0) & (F.col("_nb") > 0),
-            dot / (F.col("_na") * F.col("_nb")),
-        ).otherwise(F.lit(0.0))
     elif scorer == "embedding":
         from .similarity import cosine
 

@@ -255,11 +255,23 @@ def hyperplane_lsh_buckets(
     0.25s on the sf0.1 corpus bucketing (noop sink, min-of-4).
     ``False`` keeps the pure-lazy expression (no probe action).
     """
-    dim_probe = None
-    if probe_dim:
-        row = vectors.select(F.size(F.col(vec_col)).alias("d")).limit(1).collect()
-        if row and row[0]["d"] is not None and row[0]["d"] > 0:
-            dim_probe = int(row[0]["d"])
+    dim = _probe_width(vectors, vec_col) if probe_dim else None
+    return _lsh_buckets(vectors, dim, n_planes, id_col, vec_col, keep, seed)
+
+
+def _probe_width(vectors: DataFrame, vec_col: str) -> int | None:
+    """Width of the first row's vector (one ``limit(1)`` action), or
+    None when it is NULL or empty."""
+    row = vectors.select(F.size(F.col(vec_col)).alias("d")).limit(1).collect()
+    if row and row[0]["d"] is not None and row[0]["d"] > 0:
+        return int(row[0]["d"])
+    return None
+
+
+def _lsh_buckets(vectors, dim_probe, n_planes, id_col, vec_col, keep, seed=42):
+    """``hyperplane_lsh_buckets`` with the probed width given: literal
+    plane weights for the first ``dim_probe`` elements, or the pure
+    expression when it is None. Any width gives the same buckets."""
 
     def md5_weight(p, i):
         # the exact Catalyst family: first 8 md5-hex chars as long,
@@ -577,16 +589,15 @@ def ann_topk(
     pass — the scale path when brute force is too wide.
     ``max_hamming=0`` is the classic single-bucket probe.
 
-    Eager actions: one ``collect`` of the (small by contract) query set
-    with its probe codes, after ``hyperplane_lsh_buckets``' width probe
-    on each side. Each corpus row is scored against the queries probing
-    its bucket (``_search``); a (qid, nid) pair that repeats through a
-    duplicated id keeps its max sim."""
-    c = hyperplane_lsh_buckets(
-        corpus, n_planes, id_col=id_col, vec_col=vec_col, keep=(vec_col,)
-    )
-    q = hyperplane_lsh_buckets(
-        queries, n_planes, id_col=id_col, vec_col=vec_col, keep=(vec_col,)
+    Eager actions: one width probe of the corpus, whose width both sides
+    bucket with, and one ``collect`` of the (small by contract) query
+    set with its probe codes. Each corpus row is scored against the
+    queries probing its bucket (``_search``); a (qid, nid) pair that
+    repeats through a duplicated id keeps its max sim."""
+    dim = _probe_width(corpus, vec_col)
+    c = _lsh_buckets(corpus, dim, n_planes, id_col, vec_col, (vec_col,))
+    q = _lsh_buckets(
+        queries, dim, n_planes, id_col, vec_col, (vec_col,)
     ).select("vec_id", vec_col, _probe_buckets(F.col("bucket"), n_planes, max_hamming))
     return _search(c, q.collect(), k, "vec_id", vec_col, group_col="bucket",
                    merge=True)

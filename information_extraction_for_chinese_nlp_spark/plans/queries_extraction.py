@@ -849,13 +849,12 @@ def _kg_fused_sql() -> str:
     """
 
 
-@register_extra("kg_fused_edges", _kg_fused_sql())
+@register("kg_fused_edges", _kg_fused_sql())
 def kg_fused_edges(spark, sf_dir):
     """The composed ``plans.graph.build_kg`` job end-to-end: extraction
     edges -> normalize/link/canonicalize -> noisy-or fusion over the
     CANONICAL entity ids (surface variants collapse BEFORE their
-    mentions combine as evidence). Extra tier: the primary window is at
-    the driver's 50-gate cap — rotation candidate for round 8."""
+    mentions combine as evidence)."""
     from ..plans.graph import build_kg
 
     edges = triples_pipeline(spark, sf_dir)
@@ -1145,17 +1144,4 @@ def entity_link_tfidf(spark, sf_dir):
     return link_entities(
         _link_mentions(spark, sf_dir), _link_alias_df(spark),
         threshold=0.3, scorer="tfidf",
-    )
-
-
-@register("entity_link_tfidf_distributed", _TFIDF_ORACLE_SQL)
-def entity_link_tfidf_distributed(spark, sf_dir):
-    """The fully-distributed TF-IDF scorer (Spark-side IDF fit, no
-    driver collect, no alias cap) against the SAME oracle as the
-    UDF-path gate — the two paths must be score-identical."""
-    from ..operators.linking import link_entities
-
-    return link_entities(
-        _link_mentions(spark, sf_dir), _link_alias_df(spark),
-        threshold=0.3, scorer="tfidf_distributed",
     )

@@ -1,5 +1,6 @@
-"""Relational (pure Catalyst) formulations the library does not ship,
-kept as the parity references its production paths are tested against.
+"""Formulations the library does not ship, kept as the parity
+references its production paths are tested against. All but the last
+are relational (pure Catalyst).
 
 - MinHash and SimHash: the library computes signatures and fingerprints
   in one Arrow ``mapInPandas`` per partition. These token-explode +
@@ -15,6 +16,9 @@ kept as the parity references its production paths are tested against.
   on the driver from the collected queries.
 - The KG linker's pred-blocked all-pairs join: recall 1.0 but quadratic
   per predicate (test_graph); the library links through MinHash bands.
+- Char-n-gram TF-IDF cosine, one Python call per (obj, alias) pair
+  (test_graph); ``link_entities(scorer="tfidf")`` scores whole Arrow
+  batches with ``linking.make_tfidf_batch_scorer``.
 """
 
 from __future__ import annotations
@@ -25,6 +29,7 @@ from pyspark.sql.window import Window
 
 from information_extraction_for_chinese_nlp_spark.operators.dedup import tokens
 from information_extraction_for_chinese_nlp_spark.operators.linking import (
+    _ngrams_py,
     char_ngrams,
     jaccard,
 )
@@ -233,3 +238,40 @@ def raw_match_pairs_exact(normed: DataFrame, threshold: float = 0.6) -> DataFram
             F.col("a.entity_key").alias("src"), F.col("b.entity_key").alias("dst")
         )
     )
+
+
+def make_tfidf_scorer(aliases: list[str], ngram: int = 2):
+    """Char-n-gram TF-IDF cosine, IDF fitted on the alias corpus
+    (sklearn-style smooth idf: ln((1+N)/(1+df)) + 1; terms unseen in
+    the corpus get df=0 weight). The alias dictionary is small and
+    curated by contract, so fitting happens driver-side at plan time —
+    the scorer closure ships to workers with the UDF.
+
+    This is the reference per-pair implementation, kept as the parity
+    oracle for :func:`make_tfidf_batch_scorer` (the vectorized path
+    ``link_entities`` actually runs) — see
+    tests/test_graph.py::test_tfidf_batch_matches_loop."""
+    import math
+    from collections import Counter
+
+    n_docs = len(aliases)
+    df: Counter = Counter()
+    for a in aliases:
+        df.update(set(_ngrams_py(a, ngram)))
+    default_idf = math.log(1.0 + n_docs) + 1.0
+    idf = {t: math.log((1.0 + n_docs) / (1.0 + c)) + 1.0 for t, c in df.items()}
+
+    def weights(s: str) -> dict:
+        counts = Counter(_ngrams_py(s, ngram))
+        return {t: n * idf.get(t, default_idf) for t, n in counts.items()}
+
+    def score(obj, alias) -> float:
+        if obj is None or alias is None:
+            return 0.0
+        wa, wb = weights(obj), weights(alias)
+        dot = sum(w * wb[t] for t, w in wa.items() if t in wb)
+        na = math.sqrt(sum(w * w for w in wa.values()))
+        nb = math.sqrt(sum(w * w for w in wb.values()))
+        return dot / (na * nb) if na and nb else 0.0
+
+    return score

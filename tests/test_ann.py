@@ -346,6 +346,25 @@ def test_hyperplane_literal_weights_match_expression(spark):
     assert lit_b == expr_b, (lit_b, expr_b)
 
 
+def test_ann_topk_plan_build_runs_two_jobs(spark, count_jobs):
+    """Building the ann_topk plan runs one width probe of the corpus
+    (the query side buckets with the corpus's width) and the query
+    collect: at most 2 Spark jobs before any action on the result."""
+    rng = np.random.RandomState(11)
+    vecs = rng.randn(2000, 16)
+    corpus = spark.createDataFrame(
+        [(i, vecs[i].tolist()) for i in range(2000)],
+        "vec_id long, embedding array<double>",
+    )
+    queries = corpus.filter(F.col("vec_id") < 20)
+    built, n_jobs = count_jobs(
+        lambda: ann_topk(corpus, queries, k=3, n_planes=6, max_hamming=1)
+    )
+    assert n_jobs <= 2, n_jobs
+    # every query finds its corpus neighbors (self rows never match)
+    assert {r.qid for r in built.collect()} == set(range(20))
+
+
 # Degenerate-input contract shared by every top-k search. Corpus: a
 # NULL and an all-zero embedding (never returned, as query or neighbor),
 # id 1 carried by two near-identical vectors (query 1 has two self rows

@@ -1,6 +1,7 @@
 """Graph materialization: value canonicalization, similarity merge,
 vertex/edge consistency."""
 
+import pytest
 from pyspark.sql import functions as F
 
 from information_extraction_for_chinese_nlp_spark.plans.graph import (
@@ -146,13 +147,13 @@ def test_banded_max_bucket_caps_degenerate_clusters(spark):
     assert capped < uncapped
 
 
-def test_tfidf_alias_dict_guard(spark):
+def test_tfidf_alias_dict_guard(spark, monkeypatch):
     """scorer='tfidf' collects the alias dictionary driver-side to fit
-    IDF — valid only under the small-curated-dict contract. Past the cap
-    it must fail fast (count-checked before collecting), steering the
-    caller to the distributed jaccard scorer."""
-    import pytest
-
+    IDF — valid only under the small-curated-dict contract. Past
+    MAX_TFIDF_ALIASES it must fail fast: the fit's LIMIT cap+1 collect
+    is also the guard, so the driver never holds more than cap+1
+    aliases."""
+    from information_extraction_for_chinese_nlp_spark.operators import linking
     from information_extraction_for_chinese_nlp_spark.operators.linking import (
         link_entities,
     )
@@ -165,10 +166,12 @@ def test_tfidf_alias_dict_guard(spark):
         "concat('c', id) AS canonical_id",
         "concat('醫療費用#', id) AS block_key",
     )
+    monkeypatch.setattr(linking, "MAX_TFIDF_ALIASES", 5)
     with pytest.raises(ValueError, match="tfidf driver-side fitting cap"):
-        link_entities(mentions, aliases, scorer="tfidf", max_tfidf_aliases=5)
+        link_entities(mentions, aliases, scorer="tfidf")
     # under the cap the same dict links fine
-    out = link_entities(mentions, aliases, scorer="tfidf", max_tfidf_aliases=50)
+    monkeypatch.setattr(linking, "MAX_TFIDF_ALIASES", 50)
+    out = link_entities(mentions, aliases, scorer="tfidf")
     assert out.count() == 1
 
 
@@ -202,17 +205,83 @@ def test_embedding_scorer_links_by_cosine(spark):
         link_entities(mentions.drop("embedding"), aliases, scorer="embedding")
 
 
+# Degenerate-input contract shared by every link_entities scorer. The
+# fixture keeps every score at 1.0 or 0.0 on all three scorers (exact
+# surfaces, identical or orthogonal embeddings), so one expected row set
+# holds for each: a NULL alias in m1's block is a 0.0 candidate, a NULL
+# obj and a sub-n-gram obj score 0.0, a NULL mention_id is its own
+# group, and duplicate (mention_id, obj) rows collapse into one row.
+_LINK_CONTRACT_ALIASES = [
+    ("98,532元", "E1", "醫療費用#98532", [1.0, 0.0]),
+    (None, "E0", "醫療費用#98532", [0.0, 1.0]),
+    ("1,680元", "E2", "醫療費用#1680", [0.0, 1.0]),
+]
+_LINK_CONTRACT_MENTIONS = [
+    ("m1", "醫療費用", "98,532元", [1.0, 0.0]),
+    ("m2", "醫療費用", "1,680元", [0.0, 1.0]),
+    ("m2", "醫療費用", "1,680元", [0.0, 1.0]),
+    ("m3", "醫療費用", None, [1.0, 0.0]),
+    (None, "醫療費用", "98,532元", [1.0, 0.0]),
+    ("m4", "醫療費用", "x", [1.0, 0.0]),
+]
+
+
+@pytest.mark.parametrize("scorer", ["jaccard", "tfidf", "embedding"])
+def test_link_entities_degenerate_input_contract(spark, scorer):
+    from information_extraction_for_chinese_nlp_spark.operators.linking import (
+        block_key_for_mention,
+        link_entities,
+    )
+
+    mentions = spark.createDataFrame(
+        _LINK_CONTRACT_MENTIONS,
+        "mention_id string, pred string, obj string, embedding array<double>",
+    )
+    bk_x = mentions.filter(F.col("obj") == "x").select(
+        block_key_for_mention(F.col("pred"), F.col("obj")).alias("bk")
+    ).first().bk
+    schema = ("alias string, canonical_id string, block_key string, "
+              "embedding array<double>")
+    # a single-char alias (zero bigrams) is the only candidate of "x"
+    aliases = spark.createDataFrame(
+        _LINK_CONTRACT_ALIASES + [("y", "E9", bk_x, [0.0, 1.0])], schema
+    )
+
+    def run(alias_df):
+        return sorted(
+            ((r.mention_id or "", r.obj or "", r.canonical_id, r.score)
+             for r in link_entities(
+                 mentions, alias_df, threshold=0.5, scorer=scorer).collect()),
+        )
+
+    assert run(aliases) == [
+        ("", "98,532元", "E1", 1.0),
+        ("m1", "98,532元", "E1", 1.0),
+        ("m2", "1,680元", "E2", 1.0),
+        ("m3", "", None, 0.0),
+        ("m4", "x", None, 0.0),
+    ], scorer
+    # an empty dictionary keeps every mention, unlinked
+    assert run(spark.createDataFrame([], schema)) == [
+        ("", "98,532元", None, 0.0),
+        ("m1", "98,532元", None, 0.0),
+        ("m2", "1,680元", None, 0.0),
+        ("m3", "", None, 0.0),
+        ("m4", "x", None, 0.0),
+    ], scorer
+
+
 def test_tfidf_batch_matches_loop():
     """The vectorized batch TF-IDF scorer (what link_entities runs) must
     reproduce the per-pair reference scorer on a mention-heavy batch:
-    repeated surfaces, OOV n-grams, Nulls, single-char objs (no bigrams),
-    aliases outside the fitted corpus."""
+    repeated surfaces, OOV n-grams, Nulls, single-char objs (no bigrams).
+    An alias outside the fitted corpus raises instead of scoring."""
     import numpy as np
     import pandas as pd
+    from catalyst_reference import make_tfidf_scorer
 
     from information_extraction_for_chinese_nlp_spark.operators.linking import (
         make_tfidf_batch_scorer,
-        make_tfidf_scorer,
     )
 
     aliases = ["98,532元", "1,680元", "45,000元", "醫療費用給付", "保險金"]
@@ -220,11 +289,8 @@ def test_tfidf_batch_matches_loop():
     batch = make_tfidf_batch_scorer(aliases)
 
     rng = np.random.default_rng(7)
-    # "zz-oov-zz" as BOTH obj and alias pins the out-of-corpus parity
-    # fallback: identical surfaces sharing only OOV n-grams must score
-    # 1.0 on both paths (the indexed dot alone would lose them)
     objs = ["98,532元", "98532元", "醫療費", "x", "保險金額", "zz-oov-zz", None]
-    als = aliases + ["unseen-alias", "zz-oov-zz", None]
+    als = aliases + [None]
     obj_s = pd.Series([objs[i] for i in rng.integers(0, len(objs), 500)])
     alias_s = pd.Series([als[i] for i in rng.integers(0, len(als), 500)])
 
@@ -234,6 +300,13 @@ def test_tfidf_batch_matches_loop():
     )
     np.testing.assert_allclose(got, want, rtol=0, atol=1e-9)
     assert got.max() > 0.9  # exact surface matches present
+
+    # "zz-oov-zz" as BOTH obj and alias: its n-grams have no IDF weight,
+    # so an unfitted alias must raise, never score silently
+    for unseen in ("unseen-alias", "zz-oov-zz"):
+        with pytest.raises(ValueError, match=unseen):
+            batch(pd.Series(["zz-oov-zz", "98,532元"]),
+                  pd.Series([unseen, aliases[0]]))
 
 
 def test_tfidf_batch_throughput_scales_with_uniques():
@@ -263,12 +336,14 @@ def test_tfidf_batch_throughput_scales_with_uniques():
     assert (got > 0).any() and (got <= 1.0 + 1e-12).all()
 
 
-def test_tfidf_distributed_matches_udf_path(spark):
-    """scorer='tfidf_distributed' (Spark-side IDF fit, no driver
-    collect, no alias cap) must reproduce scorer='tfidf' on partial
-    (non-exact) matches, multi-alias blocks, OOV n-grams, and sub-ngram
-    surfaces."""
+def test_tfidf_matches_per_pair_reference(spark):
+    """link_entities(scorer='tfidf') must reproduce the per-pair
+    reference scorer's per-mention argmax on partial (non-exact)
+    matches, multi-alias blocks, OOV n-grams, and sub-ngram surfaces."""
+    from catalyst_reference import make_tfidf_scorer
+
     from information_extraction_for_chinese_nlp_spark.operators.linking import (
+        block_key_for_mention,
         link_entities,
     )
 
@@ -286,24 +361,31 @@ def test_tfidf_distributed_matches_udf_path(spark):
     )
     a = {r.mention_id: r for r in link_entities(
         mentions, aliases, threshold=0.1, scorer="tfidf").collect()}
-    b = {r.mention_id: r for r in link_entities(
-        mentions, aliases, threshold=0.1, scorer="tfidf_distributed").collect()}
-    assert a.keys() == b.keys()
-    for k in a:
-        assert a[k].canonical_id == b[k].canonical_id, k
-        assert abs((a[k].score or 0.0) - (b[k].score or 0.0)) < 1e-6, k
+    cands = aliases.collect()
+    ref = make_tfidf_scorer([c.alias for c in cands])
+    blocks = mentions.select(
+        "mention_id", "obj",
+        block_key_for_mention(F.col("pred"), F.col("obj")).alias("bk"),
+    ).collect()
+    assert a.keys() == {m.mention_id for m in blocks}
+    for m in blocks:
+        score, cid = max(
+            [(ref(m.obj, c.alias), c.canonical_id)
+             for c in cands if c.block_key == m.bk] or [(0.0, None)]
+        )
+        k = m.mention_id
+        assert a[k].canonical_id == (cid if score >= 0.1 else None), k
+        assert abs(a[k].score - score) < 1e-6, k
     # partial matches present and identical (the interesting leg)
     partial = [a[k].score for k in a if a[k].score not in (0.0, 1.0)]
     assert partial, "fixture produced no partial scores"
 
 
-def test_tfidf_distributed_sub_ngram_alias_survives(spark):
-    """An alias SHORTER than the n-gram size has zero terms; the first
-    distributed-scorer shape dropped it from the rebuilt dict (inner
-    explode) so it vanished from the candidate join entirely, while
-    'tfidf'/'jaccard' kept it as a 0.0-scored candidate — divergent at
-    threshold<=0 (linked vs NULL canonical_id). All three scorers must
-    agree on both sides of the threshold."""
+def test_sub_ngram_alias_stays_a_candidate(spark):
+    """An alias SHORTER than the n-gram size has zero terms, but it is
+    still its block's candidate: scored 0.0, linked at threshold<=0 and
+    NULL canonical_id above it. Both n-gram scorers must agree on both
+    sides of the threshold."""
     from pyspark.sql import functions as F
 
     from information_extraction_for_chinese_nlp_spark.operators.linking import (
@@ -323,7 +405,7 @@ def test_tfidf_distributed_sub_ngram_alias_survives(spark):
         [("y", "E9", bk)], "alias string, canonical_id string, block_key string"
     )
     for thr, want_id in ((0.0, "E9"), (0.5, None)):
-        for sc in ("tfidf", "tfidf_distributed", "jaccard"):
+        for sc in ("tfidf", "jaccard"):
             r = link_entities(
                 mentions, aliases, threshold=thr, scorer=sc
             ).collect()[0]
@@ -355,11 +437,10 @@ def test_char_ngrams_short_string_is_empty(spark):
     assert row.j == 0.0  # union empty -> 0, matching the oracle CASE
 
 
-def test_tfidf_distributed_distinct_objs_same_mention_id(spark):
+def test_tfidf_distinct_objs_same_mention_id(spark):
     """One mention_id with TWO distinct objs must score each obj against
-    its own candidates independently — the first distributed-scorer
-    shape merged their n-grams into one weight vector (caught in the r5
-    review) and corrupted both cosines silently."""
+    its own candidates independently — merging their n-grams into one
+    weight vector would corrupt both cosines silently."""
     from information_extraction_for_chinese_nlp_spark.operators.linking import (
         link_entities,
     )
@@ -373,15 +454,14 @@ def test_tfidf_distributed_distinct_objs_same_mention_id(spark):
         [("98,532元", "E1", "醫療費用#98532"), ("1,680元", "E2", "醫療費用#1680")],
         "alias string, canonical_id string, block_key string",
     )
-    for sc in ("tfidf", "tfidf_distributed"):
-        rows = {(r.mention_id, r.obj): r for r in link_entities(
-            mentions, aliases, threshold=0.3, scorer=sc).collect()}
-        assert rows[("m1", "98,532元")].canonical_id == "E1", sc
-        assert rows[("m1", "98,532元")].score == 1.0, sc
-        assert rows[("m1", "1,680元")].canonical_id == "E2", sc
-        assert rows[("m1", "1,680元")].score == 1.0, sc
-        assert rows[("m2", "x")].canonical_id is None, sc
-        assert rows[("m2", "x")].score == 0.0, sc
+    rows = {(r.mention_id, r.obj): r for r in link_entities(
+        mentions, aliases, threshold=0.3, scorer="tfidf").collect()}
+    assert rows[("m1", "98,532元")].canonical_id == "E1"
+    assert rows[("m1", "98,532元")].score == 1.0
+    assert rows[("m1", "1,680元")].canonical_id == "E2"
+    assert rows[("m1", "1,680元")].score == 1.0
+    assert rows[("m2", "x")].canonical_id is None
+    assert rows[("m2", "x")].score == 0.0
 
 
 def test_build_kg_fuses_across_canonical_surfaces(spark):
