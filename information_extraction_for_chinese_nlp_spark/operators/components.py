@@ -18,25 +18,23 @@ row count on that same job. The count picks one of two legs:
   in O(graph diameter) rounds (O(log diameter) with ``pointer_jump``).
   Lineage is truncated each round so the plan doesn't grow unboundedly
   (SURVEY.md §4 item 3) — ``localCheckpoint`` by default, reliable
-  ``checkpoint()`` with ``durable=True`` for fault-tolerant cluster
-  runs.
+  ``checkpoint()`` into the caller's checkpoint dir with
+  ``durable=True`` for fault-tolerant cluster runs.
 
 Both legs label a component by its minimum node id and emit the same
-``(node, component)`` rows.
+``(node, component)`` rows. Neither leg writes a session conf or any
+SparkContext state: the result is a function of the inputs alone, and
+the loop runs under whatever partitioning and AQE settings the session
+has.
 """
 
 from __future__ import annotations
 
-import contextlib
-import shutil
-import tempfile
 import warnings
 
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-
-from ..session import scoped_conf
 
 # Symmetric edge rows (twice the undirected edges) at or under which a
 # graph is labeled on the driver; merge_components' contraction probe
@@ -50,6 +48,26 @@ from ..session import scoped_conf
 # stays distributed.
 _LOCAL_CC_LIMIT = 200_000
 
+# Node count at or under which the distributed leg's per-round label
+# join carries an ``F.broadcast`` hint on the LABEL side: the edge table
+# is then never exchanged (the round's only shuffle is the map-combined
+# min aggregation, O(|V|) rows, not O(|E|)). This is the dense-graph
+# win: a near-dup pair graph of 584k edges over 2.7k nodes spent most of
+# its 4.4s re-exchanging sym every round for a label table that fits in
+# one broadcast (r8 q8_dataprep audit: 4.0 -> 3.1s min-of-4, identical
+# labels). The limit is deliberately LOW: every round pays a fresh
+# driver collect + broadcast of the label table, and the r8 A/B
+# measured the flip side — hinting a 500k-node chain graph REGRESSED
+# q10-shape CC 6.1 -> 9.9s — so the hint is only right when the label
+# table is small in absolute terms, not merely broadcastable. Past the
+# limit the join plans unhinted (unbounded in |V|). The decision is
+# explicit, from the node count the label-materialization job observes:
+# the planner cannot make it, because a checkpoint's statistics are its
+# origin plan's size estimate, not its materialized size (over a
+# 1,000-row range input, the 100-node label table reports the same
+# 12,000 bytes as the 200-row edge table it came from).
+_BROADCAST_LABEL_LIMIT = 100_000
+
 
 def connected_components(
     edges: DataFrame,
@@ -58,9 +76,6 @@ def connected_components(
     max_iter: int = 25,
     durable: bool = False,
     pointer_jump: bool = False,
-    aqe_min_partition_size: str | None = "1m",
-    loop_rows_per_partition: int | None = 128 * 1024,
-    broadcast_label_limit: int = 100_000,
 ) -> DataFrame:
     """edges(src, dst) undirected -> (node, component) with component =
     min node id of the component (lexicographic for strings). Rows with
@@ -69,259 +84,150 @@ def connected_components(
 
     The symmetric edge count picks the leg (module docstring): at or
     under ``_LOCAL_CC_LIMIT`` rows the driver leg labels the graph
-    exactly and every option below except ``durable`` is moot. The
-    remaining options shape only the distributed leg. ``max_iter``
-    bounds its rounds; if they run out while labels still change, the
-    unconverged labels are returned with a ``RuntimeWarning`` naming
-    the rounds run and the last round's changed count.
+    exactly and ``max_iter``/``pointer_jump`` are moot. ``max_iter``
+    bounds the distributed leg's rounds; if they run out while labels
+    still change, the unconverged labels are returned with a
+    ``RuntimeWarning`` naming the rounds run and the last round's
+    changed count. The loop runs under the session's own shuffle
+    partitions and AQE settings, as every other operator does.
 
     ``durable=False`` truncates lineage with ``localCheckpoint`` —
     fastest, but the blocks live on executors and die with them.
-    ``durable=True`` uses reliable ``checkpoint()`` (persisted to the
-    configured checkpoint dir — HDFS/object store on a real cluster),
-    so a long-running canonicalization survives executor loss; prefer it
-    for cluster jobs where a lost executor would otherwise restart the
-    whole iteration history.
-
-    ``aqe_min_partition_size``: the session-wide AQE coalesce floor
-    (``session.py`` pins ``minPartitionSize=64k`` for the CPU-dense
-    Python-stage family) is exactly wrong for this loop — iterations
-    are shuffle-light and scheduling-bound, so byte-thin rounds want
-    FEWER coalesced partitions, not more (VERDICT r7 finding 1: the
-    floor cost full CC +11-16%). Every action of the iteration runs
-    inside this function, so the floor is set/restored around the loop
-    (default: Spark's own 1m default; ``None`` = inherit the session
-    value). At real cluster scale per-round shuffles are orders past
-    either floor, so the override only matters where it helps.
-
-    ``loop_rows_per_partition``: the loop's shuffle-partition count is
-    DERIVED from the materialized symmetric edge table —
-    ``ceil(|sym| / loop_rows_per_partition)``, clamped to the session
-    ``spark.sql.shuffle.partitions`` — instead of inheriting a session
-    constant sized for corpus-scale stages (guide §2: derive
-    partitioning from input size, never a local[N] constant). Iterative
-    CC rounds are scheduling-bound: at 500k nodes / 884k sym rows the
-    r8 sweep measured 32 session partitions = 9.8s, AQE-1m-floor =
-    6.4s, 8 derived partitions = 4.5s (min-of-3 each), with a shallow
-    optimum at ~1e5 rows/task; on big graphs the clamp saturates to the
-    session value, so the rule only ever REMOVES scheduling overhead.
-    The row count rides the edge-materialization job as an
-    ``Observation`` metric (no extra action). ``None`` disables the
-    derivation.
-
-    ``broadcast_label_limit``: while the node count stays at or under
-    this many rows, each round's label join carries an ``F.broadcast``
-    hint on the LABEL side — the edge table is then never exchanged
-    (the round's only shuffle is the map-combined min aggregation,
-    O(|V|) rows, not O(|E|)). This is the dense-graph win: a near-dup
-    pair graph of 584k edges over 2.7k nodes spent most of its 4.4s
-    re-exchanging sym every round for a label table that fits in one
-    broadcast (r8 q8_dataprep audit: 4.0 -> 3.1s min-of-4, identical
-    labels). The default is deliberately LOW (100k rows): every round
-    pays a fresh driver collect + broadcast of the label table, and the
-    r8 A/B measured the flip side — hinting a 500k-node chain graph
-    REGRESSED q10-shape CC 6.1 -> 9.9s — so the hint is only right when
-    the label table is small in absolute terms, not merely
-    broadcastable. Past the limit the join plans unhinted exactly as
-    before (unbounded in |V|). The node count rides the label-
-    materialization job as an ``Observation`` metric (no extra action).
+    ``durable=True`` uses reliable ``checkpoint()`` into the checkpoint
+    dir the caller set on the SparkContext (shared storage on a real
+    cluster), so a long-running canonicalization survives executor
+    loss. It raises ``ValueError`` when no checkpoint dir is set, on
+    every master: the function never picks or sets one itself, and the
+    files it writes there are the caller's to keep or remove.
+    On ``local[N]`` the executors are the driver process, so durable
+    adds no fault tolerance over the default.
     """
-    cleanup_dir: str | None = None
-    if durable:
-        sc = edges.sparkSession.sparkContext
-        # Ownership tracking: getCheckpointDir() keeps returning OUR
-        # auto-created (and afterwards deleted) dir on later calls, so
-        # "is it unset?" alone would make run 2+ skip the mkdtemp branch
-        # and checkpoint into a recreated dir nobody cleans — exactly the
-        # unbounded-/tmp growth this branch exists to prevent. A dir we
-        # created (recorded on the SparkContext in its RESOLVED form,
-        # scheme included) counts as unset. One durable run per
-        # SparkContext at a time: concurrent runs would share the global
-        # checkpoint dir and run 1's cleanup would delete run 2's live
-        # checkpoint files.
-        current = sc.getCheckpointDir()
-        auto_owned = getattr(sc, "_cc_auto_checkpoint_resolved", None)
-        if current is None or current == auto_owned:
-            if not sc.master.startswith("local"):
-                # a driver-local tempdir is NOT shared storage: executors
-                # would checkpoint to their own /tmp and cross-node reads
-                # (or node loss) fail — the opposite of what durable=True
-                # promises. Fail loudly instead of silently degrading.
-                raise ValueError(
-                    "durable=True on a cluster requires "
-                    "sparkContext.setCheckpointDir(<shared fs path>) first"
-                )
-            # Per-run unique subdir (NOT a fixed shared path): repeated
-            # runs must not accumulate unbounded checkpoint RDD files in
-            # /tmp. setCheckpointDir is global SparkContext state — we
-            # only overwrite it when unset or when it points at a dir WE
-            # created, and we delete our own subdir after labeling
-            # (see finally below).
-            cleanup_dir = tempfile.mkdtemp(prefix="spark-cc-checkpoint-")
-            sc.setCheckpointDir(cleanup_dir)
-            sc._cc_auto_checkpoint_resolved = sc.getCheckpointDir()
+    spark = edges.sparkSession
+    if durable and spark.sparkContext.getCheckpointDir() is None:
+        raise ValueError(
+            "durable=True requires a checkpoint dir on the SparkContext "
+            "(a shared fs path on a cluster); set one first"
+        )
 
     def cut(df: DataFrame) -> DataFrame:
         return df.checkpoint() if durable else df.localCheckpoint()
 
-    spark = edges.sparkSession
-    # ExitStack (closed in the finally): the distributed leg's conf
-    # scopes restore on every path
-    scope = contextlib.ExitStack()
-    try:
-        # row counts for the leg choice, the partition derivation and
-        # the broadcast decision ride the cut jobs as Observation
-        # metrics — zero extra actions (a separate count per decision
-        # measurably taxed tiny-graph callers like build_graph's entity
-        # CC, r8)
-        sym_obs = Observation()
-        # one read of `edges`: every row emits both directions, so the
-        # upstream pair pipeline (MinHash buckets in dedup_pipeline, the
-        # banded linker in build_graph) runs once — a union of two
-        # selects plans that whole subtree twice
-        both = F.explode(F.array(
-            F.struct(F.col(src).alias("a"), F.col(dst).alias("b")),
-            F.struct(F.col(dst).alias("a"), F.col(src).alias("b")),
-        ))
-        sym = cut(
-            edges.select(both.alias("_e"))
-            .select("_e.a", "_e.b")
-            .filter(F.col("a") != F.col("b"))
-            .distinct()
-            .observe(sym_obs, F.count(F.lit(1)).alias("n"))
+    # row counts for the leg choice and the broadcast decision ride the
+    # cut jobs as Observation metrics — zero extra actions (a separate
+    # count per decision measurably taxed tiny-graph callers like
+    # build_graph's entity CC, r8)
+    sym_obs = Observation()
+    # one read of `edges`: every row emits both directions, so the
+    # upstream pair pipeline (MinHash buckets in dedup_pipeline, the
+    # banded linker in build_graph) runs once — a union of two selects
+    # plans that whole subtree twice
+    both = F.explode(F.array(
+        F.struct(F.col(src).alias("a"), F.col(dst).alias("b")),
+        F.struct(F.col(dst).alias("a"), F.col(src).alias("b")),
+    ))
+    sym = cut(
+        edges.select(both.alias("_e"))
+        .select("_e.a", "_e.b")
+        .filter(F.col("a") != F.col("b"))
+        .distinct()
+        .observe(sym_obs, F.count(F.lit(1)).alias("n"))
+    )
+
+    if sym_obs.get["n"] <= _LOCAL_CC_LIMIT:
+        # driver leg: the a < b half of the symmetric table is the
+        # undirected edge set; one collect off the checkpoint blocks and
+        # a union-find replace every per-round job
+        return _driver_labels(
+            spark,
+            sym.filter(F.col("a") < F.col("b")).collect(),
+            sym.schema["a"].dataType,
         )
-        n_sym = sym_obs.get["n"]
 
-        if n_sym <= _LOCAL_CC_LIMIT:
-            # driver leg: the a < b half of the symmetric table is the
-            # undirected edge set; one collect off the checkpoint blocks
-            # and a union-find replace every per-round job
-            labels = _driver_labels(
-                spark,
-                sym.filter(F.col("a") < F.col("b")).collect(),
-                sym.schema["a"].dataType,
-            )
-            if cleanup_dir is not None:
-                # the driver-built frame never reads the checkpoint files
-                shutil.rmtree(cleanup_dir, ignore_errors=True)
-            return labels
+    lab_obs = Observation()
+    labels = cut(
+        sym.select(F.col("a").alias("node"))
+        .distinct()
+        .withColumn("component", F.col("node"))
+        .observe(lab_obs, F.count(F.lit(1)).alias("n"))
+    )
+    # the node set is loop-invariant, so one metric decides the hint for
+    # every round (see _BROADCAST_LABEL_LIMIT)
+    bcast_labels = lab_obs.get["n"] <= _BROADCAST_LABEL_LIMIT
 
-        if aqe_min_partition_size is not None:
-            scope.enter_context(scoped_conf(spark, {
-                "spark.sql.adaptive.coalescePartitions.minPartitionSize":
-                    aqe_min_partition_size,
-            }))
-        if loop_rows_per_partition is not None:
-            session_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
-            loop_parts = max(
-                1,
-                min(session_parts, -(-n_sym // loop_rows_per_partition)),
-            )
-            if loop_parts < session_parts:
-                scope.enter_context(scoped_conf(spark, {
-                    "spark.sql.shuffle.partitions": str(loop_parts),
-                }))
+    def hint(df: DataFrame) -> DataFrame:
+        return F.broadcast(df) if bcast_labels else df
 
-        lab_obs = Observation()
-        labels = cut(
-            sym.select(F.col("a").alias("node"))
-            .distinct()
-            .withColumn("component", F.col("node"))
-            .observe(lab_obs, F.count(F.lit(1)).alias("n"))
+    changed = 0
+    for _round in range(max_iter):
+        # neighbor labels: for edge (a,b), b hears a's component
+        msgs = sym.join(hint(labels), sym["a"] == labels["node"]).select(
+            F.col("b").alias("node"),
+            F.col("component"),
+            F.lit(False).alias("_old"),
         )
-        # the node set is loop-invariant, so one metric decides the
-        # hint for every round (see broadcast_label_limit above)
-        bcast_labels = lab_obs.get["n"] <= broadcast_label_limit
-
-        def hint(df: DataFrame) -> DataFrame:
-            return F.broadcast(df) if bcast_labels else df
-
-        changed = 0
-        for _round in range(max_iter):
-            # neighbor labels: for edge (a,b), b hears a's component
-            msgs = sym.join(hint(labels), sym["a"] == labels["node"]).select(
-                F.col("b").alias("node"),
-                F.col("component"),
-                F.lit(False).alias("_old"),
+        # the node's previous label rides through the SAME shuffle as
+        # the min-aggregation (`_prev` = the one tagged-old row per
+        # node), so the convergence probe below is a filter over the
+        # materialized blocks instead of a per-round new-vs-old labels
+        # JOIN (r7: that join was ~2s/round of q10's wall at 500k nodes).
+        propagated = (
+            labels.select("node", "component", F.lit(True).alias("_old"))
+            .union(msgs)
+            .groupBy("node")
+            .agg(
+                F.min("component").alias("component"),
+                F.min(F.when(F.col("_old"), F.col("component"))).alias(
+                    "_prev"
+                ),
             )
-            # the node's previous label rides through the SAME shuffle
-            # as the min-aggregation (`_prev` = the one tagged-old row
-            # per node), so the convergence probe below is a filter
-            # over the materialized blocks instead of a per-round
-            # new-vs-old labels JOIN (r7: that join was ~2s/round of
-            # q10's wall at 500k nodes).
-            propagated = (
-                labels.select("node", "component", F.lit(True).alias("_old"))
-                .union(msgs)
-                .groupBy("node")
-                .agg(
-                    F.min("component").alias("component"),
-                    F.min(F.when(F.col("_old"), F.col("component"))).alias(
-                        "_prev"
-                    ),
-                )
+        )
+        # pointer jumping (OPT-IN): a node's label is itself a node
+        # whose own label may be smaller — follow one hop
+        # (label-of-label), so labels travel ~2^k hops after k rounds
+        # instead of k, turning O(diameter) rounds into O(log diameter)
+        # on DEEP graphs (measured ~20% wall win on the 500k-node chain
+        # bench fixture, q10_cc_full). Default OFF: graphs that reach
+        # this leg are past _LOCAL_CC_LIMIT, and for a shallow one
+        # (entity-match cliques) the extra full-label-set join per round
+        # is overhead. Turn it on when the edge set can chain
+        # (path-shaped graphs, transitive near-dup runs).
+        if pointer_jump:
+            hop = propagated.select(
+                F.col("node").alias("_c"), F.col("component").alias("_cc")
             )
-            # pointer jumping (OPT-IN): a node's label is itself a node
-            # whose own label may be smaller — follow one hop
-            # (label-of-label), so labels travel ~2^k hops after k
-            # rounds instead of k, turning O(diameter) rounds into
-            # O(log diameter) on DEEP graphs (measured ~20% wall win on
-            # the 500k-node chain bench fixture, q10_cc_full). Default
-            # OFF: graphs that reach this leg are past _LOCAL_CC_LIMIT,
-            # and for a shallow one (entity-match cliques) the extra
-            # full-label-set join per round is overhead. Turn it on
-            # when the edge set can chain (path-shaped graphs,
-            # transitive near-dup runs).
-            if pointer_jump:
-                hop = propagated.select(
-                    F.col("node").alias("_c"), F.col("component").alias("_cc")
-                )
-                propagated = propagated.join(
-                    hint(hop), propagated["component"] == hop["_c"], "left"
-                ).select(
-                    "node",
-                    F.coalesce("_cc", "component").alias("component"),
-                    "_prev",
-                )
-            # convergence probe as an Observation metric on the SAME job
-            # that materializes the round's checkpoint — the pre-r8
-            # shape paid a separate (cheap but scheduler-round-trip)
-            # count job per round over the materialized blocks
-            obs = Observation()
-            new_labels = cut(
-                propagated.observe(
-                    obs,
-                    F.sum(
-                        F.when(F.col("component") != F.col("_prev"), 1)
-                    ).alias("_changed"),
-                )
+            propagated = propagated.join(
+                hint(hop), propagated["component"] == hop["_c"], "left"
+            ).select(
+                "node",
+                F.coalesce("_cc", "component").alias("component"),
+                "_prev",
             )
-            changed = obs.get["_changed"] or 0
-            labels = new_labels.drop("_prev")
-            if changed == 0:
-                break
-        if changed:
-            warnings.warn(
-                f"connected_components: {max_iter} rounds ran and {changed} "
-                "labels still changed in the last one; the labels are not "
-                "converged (raise max_iter or set pointer_jump=True)",
-                RuntimeWarning,
-                stacklevel=2,
+        # convergence probe as an Observation metric on the SAME job
+        # that materializes the round's checkpoint — the pre-r8 shape
+        # paid a separate (cheap but scheduler-round-trip) count job per
+        # round over the materialized blocks
+        obs = Observation()
+        new_labels = cut(
+            propagated.observe(
+                obs,
+                F.sum(
+                    F.when(F.col("component") != F.col("_prev"), 1)
+                ).alias("_changed"),
             )
-        if cleanup_dir is not None:
-            # detach the result from the reliable checkpoint files (the
-            # localCheckpoint materializes its blocks executor-side) so
-            # this run's checkpoint dir can be removed without breaking
-            # later reads of the returned frame.
-            labels = labels.localCheckpoint()
-            shutil.rmtree(cleanup_dir, ignore_errors=True)
-        return labels
-    except BaseException:
-        if cleanup_dir is not None:
-            shutil.rmtree(cleanup_dir, ignore_errors=True)
-        raise
-    finally:
-        scope.close()
+        )
+        changed = obs.get["_changed"] or 0
+        labels = new_labels.drop("_prev")
+        if changed == 0:
+            break
+    if changed:
+        warnings.warn(
+            f"connected_components: {max_iter} rounds ran and {changed} "
+            "labels still changed in the last one; the labels are not "
+            "converged (raise max_iter or set pointer_jump=True)",
+            RuntimeWarning,
+            stacklevel=2,
+        )
+    return labels
 
 
 def _local_components(edge_rows) -> list:

@@ -761,6 +761,12 @@ _INROW_HOT_LIMIT = 64
 # is an intra-box copy; on a cluster it re-shuffles the corpus-sized
 # exploded side over the network, which dwarfs the broadcast.
 # `python bench.py --line-dedup-oversized` times both plans.
+# The hint cannot be left to AQE: the checkpointed hot set's statistics
+# are the origin plan's size estimate, which scales with the input, not
+# with the hot set (the 2-line hot set of
+# test_line_dedup_relational_unbounded_hot_set reports 6.2 EiB and
+# plans a SortMergeJoin unhinted), so without the hint every
+# relational-leg run would sort-merge the exploded corpus.
 _BROADCAST_HOT_LIMIT = 4_000_000
 
 

@@ -5,46 +5,22 @@ local[N]: AQE on (runtime coalesce + skew-join splitting), Arrow enabled
 for every pandas UDF boundary, shuffle partitions sized by the
 environment, and broadcast threshold left to Spark (we additionally hint
 explicitly where a side is known-small).
+
+``get_spark`` is the only place this package sets a conf. Operators
+never write session confs or SparkContext state (checkpoint dir
+included): they shape their own plans with frame-local hints, and a
+caller that wants reliable checkpoints sets the checkpoint dir itself.
 """
 
 from __future__ import annotations
 
 import os
-from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
 
 def default_parallelism() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-
-
-@contextmanager
-def scoped_conf(spark: SparkSession, settings: dict[str, str]):
-    """Temporarily override session confs for a driver-side loop whose
-    actions all run inside the ``with`` block, restoring (or unsetting)
-    the previous values on exit.
-
-    Session confs are SESSION-global, so the override leaks into any
-    query another thread starts inside the window — the same caveat the
-    session-wide AQE floor already carries. Use for iterative operators
-    (CC, PageRank) whose per-round shuffles want different AQE
-    coalescing than the Python-stage-bound extraction family; the
-    returned frames must be materialized (checkpointed) inside the
-    scope or they will execute under the restored confs."""
-    conf = spark.conf
-    prev: dict[str, str | None] = {}
-    for k, v in settings.items():
-        prev[k] = conf.get(k, None)
-        conf.set(k, v)
-    try:
-        yield
-    finally:
-        for k, old in prev.items():
-            if old is None:
-                conf.unset(k)
-            else:
-                conf.set(k, old)
 
 
 def get_spark(
@@ -76,11 +52,17 @@ def get_spark(
         # the fused extraction stage ran on 3 of 32 partitions. Paired
         # interleaved A/B (r7, min-of-4/cell, sf0.1): 64k floor wins the
         # Python-stage-bound keys big (q2c 5.22->2.09s, q4c 4.90->1.93s,
-        # q1 1.68->1.38s, q8 10.02->8.54s); the one payer is iterative
+        # q1 1.68->1.38s, q8 10.02->8.54s). The r7 payer was iterative
         # full CC (q10 10.39->11.56s, shuffle-light tiny iterations x
-        # more tasks). An explicit repartition(32) matched the q1 gain
-        # but costs an extra Exchange at scale. Coalescing can only
-        # shrink below shuffle.partitions, so the worst case stays
+        # more tasks); its distributed loop runs under this floor too,
+        # because a loop-only 1m floor with 7 size-derived partitions
+        # bought nothing at local[4], 8 session partitions: q10_cc_full
+        # min 9.70 / median 10.82s with them vs 9.16 / 10.39s without
+        # (8 alternating pairs, IQR 2.7s with them, identical labels;
+        # BASELINE.md "No shared Spark state"). An explicit
+        # repartition(32) matched the q1 gain but costs an extra
+        # Exchange at scale. Coalescing can only shrink below
+        # shuffle.partitions, so the worst case stays
         # bounded at `shuffle_partitions` tasks — and at real 100 TB
         # partition sizes the floor is never the binding constraint.
         .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")

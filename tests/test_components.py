@@ -1,8 +1,9 @@
 """Connected components: the driver leg (union-find over the collected
 symmetric edge table) and the distributed leg (iterative min-label
-propagation) must be behavior-identical; durable (reliable checkpoint)
-vs local-block lineage truncation too; incremental merge must equal a
-full recompute."""
+propagation) must be behavior-identical; durable (reliable checkpoint
+into the caller's dir) vs local-block lineage truncation too; neither
+writes shared Spark state; incremental merge must equal a full
+recompute."""
 
 import random
 import warnings
@@ -52,7 +53,8 @@ EDGES = [
 ]
 
 
-def test_durable_checkpoint_matches_local(spark, monkeypatch):
+def test_durable_checkpoint_matches_local(spark, monkeypatch, tmp_path):
+    spark.sparkContext.setCheckpointDir(str(tmp_path))
     edges = spark.createDataFrame(EDGES, "src string, dst string")
     per_leg = []
     for leg in CC_LEGS:
@@ -71,34 +73,72 @@ def test_durable_checkpoint_matches_local(spark, monkeypatch):
     }
 
 
-def test_durable_auto_checkpoint_cleaned_on_every_run(spark, monkeypatch):
-    """Run 2+ must also get a fresh auto-created checkpoint dir and clean
-    it: getCheckpointDir() keeps returning run 1's (deleted) dir, so
-    without ownership tracking later runs would checkpoint into a
-    recreated dir nobody removes. Both legs checkpoint the symmetric
-    edge table there, so both must remove it."""
-    import os
+def test_durable_without_checkpoint_dir_raises(spark, monkeypatch):
+    """durable=True never picks a checkpoint dir itself: with none set
+    it raises on every master, before any job runs."""
+    from pyspark import SparkContext
 
-    sc = spark.sparkContext
-    current = sc.getCheckpointDir()
-    owned = getattr(sc, "_cc_auto_checkpoint_resolved", None)
-    if current is not None and current != owned:
-        pytest.skip("session has a user-set checkpoint dir; auto branch off")
-
+    monkeypatch.setattr(SparkContext, "getCheckpointDir", lambda self: None)
     edges = spark.createDataFrame(EDGES, "src string, dst string")
     for leg in CC_LEGS:
         _on_leg(monkeypatch, leg)
-        r1 = _labels(connected_components(edges, durable=True))
-        d1 = sc._cc_auto_checkpoint_resolved
-        r2 = _labels(connected_components(edges, durable=True))
-        d2 = sc._cc_auto_checkpoint_resolved
-        assert d1 != d2, f"{leg}: run 2 reused run 1's deleted checkpoint dir"
-        for d in (d1, d2):
-            path = d.split(":", 1)[1] if d.startswith("file:") else d
-            # setCheckpointDir creates a UUID subdir under our tempdir;
-            # the cleanup removes the whole tempdir
-            assert not os.path.exists(os.path.dirname(path)), (leg, d)
-        assert r1 == r2, leg
+        with pytest.raises(ValueError, match="checkpoint dir"):
+            connected_components(edges, durable=True)
+
+
+def test_no_shared_state_mutated(spark, monkeypatch, tmp_path):
+    """connected_components (both legs, pointer_jump on and off, durable
+    against a dir the caller set), merge_components (both folds) and the
+    two callers that run CC, dedup_pipeline and build_kg, finish with
+    every session-conf write and every checkpoint-dir write raising:
+    their results depend on their inputs alone."""
+    from pyspark import SparkContext
+    from pyspark.sql.conf import RuntimeConfig
+
+    from information_extraction_for_chinese_nlp_spark.operators.dedup import (
+        dedup_pipeline,
+    )
+    from information_extraction_for_chinese_nlp_spark.plans.graph import build_kg
+
+    spark.sparkContext.setCheckpointDir(str(tmp_path))
+    assert isinstance(spark.conf, RuntimeConfig)
+
+    def forbidden(*args, **kwargs):
+        raise AssertionError(f"shared Spark state written: {args[1:]}")
+
+    for cls, name in ((RuntimeConfig, "set"), (RuntimeConfig, "unset"),
+                      (SparkContext, "setCheckpointDir")):
+        monkeypatch.setattr(cls, name, forbidden)
+
+    edges = spark.createDataFrame(EDGES, "src string, dst string")
+    new = spark.createDataFrame(
+        [("c", "d"), ("z", "q")], "src string, dst string")
+    docs = spark.createDataFrame(
+        [(i, "same same same text again") for i in range(4)]
+        + [(10, "alpha beta gamma delta epsilon zeta"),
+           (11, "alpha beta gamma delta epsilon eta")],
+        "doc_id long, text string",
+    )
+    kg_edges = spark.createDataFrame(
+        [("c1", "醫療費用", "98,532元", 0.5, "d1", 0, 7),
+         ("c1", "醫療費用", "98532元", 0.5, "d2", 0, 6)],
+        "subj string, pred string, obj string, prob double, "
+        "doc_id string, start int, end int",
+    )
+    for leg in CC_LEGS:
+        _on_leg(monkeypatch, leg)
+        prev = connected_components(edges)
+        want = _labels(prev)
+        for kwargs in ({"pointer_jump": True}, {"durable": True}):
+            got = connected_components(edges, **kwargs)
+            assert _labels(got) == want, (leg, kwargs)
+        full = _labels(connected_components(edges.union(new)))
+        assert _labels(merge_components(prev, new)) == full, leg
+    # the callers, on the leg that used to scope session confs
+    kept = dedup_pipeline(docs, n_bands=2, rows_per_band=2)
+    assert {0, 10} <= {r.doc_id for r in kept.collect()}
+    vertices, fused = build_kg(kg_edges)
+    assert vertices.count() == 1 and fused.count() == 1
 
 
 def test_merge_components_equals_full_recompute(spark, monkeypatch):
@@ -329,7 +369,7 @@ pytestmark = pytest.mark.slow
 
 
 def test_broadcast_label_hint_parity(spark, monkeypatch):
-    """Under broadcast_label_limit the distributed leg's per-round label
+    """Under _BROADCAST_LABEL_LIMIT the distributed leg's per-round label
     join carries a broadcast hint (edge table never exchanged). Hinted
     and unhinted labelings must be identical, pointer_jump on and off,
     and equal to the driver leg's."""
@@ -342,6 +382,7 @@ def test_broadcast_label_hint_parity(spark, monkeypatch):
     _on_leg(monkeypatch, "distributed")
     for pj in (False, True):
         hinted = _labels(connected_components(edges, pointer_jump=pj))
-        plain = _labels(connected_components(
-            edges, pointer_jump=pj, broadcast_label_limit=0))
+        with monkeypatch.context() as m:
+            m.setattr(cc_mod, "_BROADCAST_LABEL_LIMIT", 0)
+            plain = _labels(connected_components(edges, pointer_jump=pj))
         assert hinted == plain == driver, pj
