@@ -23,9 +23,9 @@ row count on that same job. The count picks one of two legs:
 
 Both legs label a component by its minimum node id and emit the same
 ``(node, component)`` rows. Neither leg writes a session conf or any
-SparkContext state: the result is a function of the inputs alone, and
-the loop runs under whatever partitioning and AQE settings the session
-has.
+SparkContext state: the result is a function of the inputs alone. The
+loop sizes its own shuffles from the symmetric edge count with
+frame-local ``repartition`` calls (``_LOOP_ROWS_PER_PARTITION``).
 """
 
 from __future__ import annotations
@@ -68,6 +68,19 @@ _LOCAL_CC_LIMIT = 200_000
 # 12,000 bytes as the 200-row edge table it came from).
 _BROADCAST_LABEL_LIMIT = 100_000
 
+# Symmetric edge rows per partition of the distributed leg's unhinted
+# rounds: their shuffles run on ceil(|sym| / this) partitions, clamped
+# to the session's shuffle.partitions, set frame-locally with
+# ``repartition`` (never a session conf; AQE does not coalesce a
+# fixed-count shuffle). The rounds are scheduling-bound: q10_cc_full
+# (885k rows, so 7 partitions) at local[32] with 32 session partitions
+# ran 16.18s median on the session's 32 vs 11.05s on the derived 7
+# (alternating pairs on 4 cores; at local[4] the two were even;
+# BASELINE.md "No shared Spark state at 32 shuffle partitions"). The
+# r8 sweep put the optimum near 1e5 rows per task. On big graphs the
+# clamp saturates to the session value.
+_LOOP_ROWS_PER_PARTITION = 128 * 1024
+
 
 def connected_components(
     edges: DataFrame,
@@ -88,8 +101,7 @@ def connected_components(
     bounds the distributed leg's rounds; if they run out while labels
     still change, the unconverged labels are returned with a
     ``RuntimeWarning`` naming the rounds run and the last round's
-    changed count. The loop runs under the session's own shuffle
-    partitions and AQE settings, as every other operator does.
+    changed count.
 
     ``durable=False`` truncates lineage with ``localCheckpoint`` —
     fastest, but the blocks live on executors and die with them.
@@ -153,14 +165,26 @@ def connected_components(
     # the node set is loop-invariant, so one metric decides the hint for
     # every round (see _BROADCAST_LABEL_LIMIT)
     bcast_labels = lab_obs.get["n"] <= _BROADCAST_LABEL_LIMIT
+    loop_parts = max(1, min(
+        int(spark.conf.get("spark.sql.shuffle.partitions")),
+        -(-sym_obs.get["n"] // _LOOP_ROWS_PER_PARTITION),
+    ))
 
     def hint(df: DataFrame) -> DataFrame:
         return F.broadcast(df) if bcast_labels else df
 
+    def spread(df: DataFrame, key: str) -> DataFrame:
+        # an unhinted round's shuffle on key, with the loop's derived
+        # partition count (see _LOOP_ROWS_PER_PARTITION); a hinted
+        # round shuffles only the map-combined O(|V|) aggregation
+        return df if bcast_labels else df.repartition(loop_parts, key)
+
     changed = 0
     for _round in range(max_iter):
         # neighbor labels: for edge (a,b), b hears a's component
-        msgs = sym.join(hint(labels), sym["a"] == labels["node"]).select(
+        msgs = spread(sym, "a").join(
+            hint(spread(labels, "node")), sym["a"] == labels["node"]
+        ).select(
             F.col("b").alias("node"),
             F.col("component"),
             F.lit(False).alias("_old"),
@@ -171,8 +195,9 @@ def connected_components(
         # materialized blocks instead of a per-round new-vs-old labels
         # JOIN (r7: that join was ~2s/round of q10's wall at 500k nodes).
         propagated = (
-            labels.select("node", "component", F.lit(True).alias("_old"))
-            .union(msgs)
+            spread(labels.select(
+                "node", "component", F.lit(True).alias("_old")
+            ).union(msgs), "node")
             .groupBy("node")
             .agg(
                 F.min("component").alias("component"),
@@ -195,8 +220,10 @@ def connected_components(
             hop = propagated.select(
                 F.col("node").alias("_c"), F.col("component").alias("_cc")
             )
-            propagated = propagated.join(
-                hint(hop), propagated["component"] == hop["_c"], "left"
+            propagated = spread(propagated, "component").join(
+                hint(spread(hop, "_c")),
+                propagated["component"] == hop["_c"],
+                "left",
             ).select(
                 "node",
                 F.coalesce("_cc", "component").alias("component"),

@@ -8,8 +8,9 @@ explicitly where a side is known-small).
 
 ``get_spark`` is the only place this package sets a conf. Operators
 never write session confs or SparkContext state (checkpoint dir
-included): they shape their own plans with frame-local hints, and a
-caller that wants reliable checkpoints sets the checkpoint dir itself.
+included): they shape their own plans with frame-local hints and
+repartitions, and a caller that wants reliable checkpoints sets the
+checkpoint dir itself.
 """
 
 from __future__ import annotations
@@ -54,12 +55,10 @@ def get_spark(
         # Python-stage-bound keys big (q2c 5.22->2.09s, q4c 4.90->1.93s,
         # q1 1.68->1.38s, q8 10.02->8.54s). The r7 payer was iterative
         # full CC (q10 10.39->11.56s, shuffle-light tiny iterations x
-        # more tasks); its distributed loop runs under this floor too,
-        # because a loop-only 1m floor with 7 size-derived partitions
-        # bought nothing at local[4], 8 session partitions: q10_cc_full
-        # min 9.70 / median 10.82s with them vs 9.16 / 10.39s without
-        # (8 alternating pairs, IQR 2.7s with them, identical labels;
-        # BASELINE.md "No shared Spark state"). An explicit
+        # more tasks); its unhinted rounds shuffle on a fixed,
+        # edge-count-derived partition count that AQE does not coalesce
+        # (components._LOOP_ROWS_PER_PARTITION), so this floor does not
+        # reach them. An explicit
         # repartition(32) matched the q1 gain but costs an extra
         # Exchange at scale. Coalescing can only shrink below
         # shuffle.partitions, so the worst case stays

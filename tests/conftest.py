@@ -12,8 +12,12 @@ SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
 
 
 @pytest.fixture(scope="session")
-def spark():
+def spark(tmp_path_factory):
     s = get_spark("ie-kg-tests", master="local[4]", shuffle_partitions=8)
+    # the checkpoint dir is the caller's to set (connected_components'
+    # durable=True never sets one); set once here, so no test writes
+    # this SparkContext state and no result depends on test order
+    s.sparkContext.setCheckpointDir(str(tmp_path_factory.mktemp("checkpoints")))
     yield s
     s.stop()
 

@@ -53,8 +53,9 @@ EDGES = [
 ]
 
 
-def test_durable_checkpoint_matches_local(spark, monkeypatch, tmp_path):
-    spark.sparkContext.setCheckpointDir(str(tmp_path))
+def test_durable_checkpoint_matches_local(spark, monkeypatch):
+    # durable=True checkpoints into the dir the spark fixture set
+    assert spark.sparkContext.getCheckpointDir() is not None
     edges = spark.createDataFrame(EDGES, "src string, dst string")
     per_leg = []
     for leg in CC_LEGS:
@@ -86,7 +87,7 @@ def test_durable_without_checkpoint_dir_raises(spark, monkeypatch):
             connected_components(edges, durable=True)
 
 
-def test_no_shared_state_mutated(spark, monkeypatch, tmp_path):
+def test_no_shared_state_mutated(spark, monkeypatch):
     """connected_components (both legs, pointer_jump on and off, durable
     against a dir the caller set), merge_components (both folds) and the
     two callers that run CC, dedup_pipeline and build_kg, finish with
@@ -100,7 +101,7 @@ def test_no_shared_state_mutated(spark, monkeypatch, tmp_path):
     )
     from information_extraction_for_chinese_nlp_spark.plans.graph import build_kg
 
-    spark.sparkContext.setCheckpointDir(str(tmp_path))
+    assert spark.sparkContext.getCheckpointDir() is not None
     assert isinstance(spark.conf, RuntimeConfig)
 
     def forbidden(*args, **kwargs):
@@ -366,6 +367,27 @@ def test_cc_reads_edges_once(spark, monkeypatch):
 
 # e2e / streaming / property-heavy: excluded from the fast inner-loop tier
 pytestmark = pytest.mark.slow
+
+
+def test_loop_partitions_derived_from_edge_count(spark, monkeypatch):
+    """An unhinted distributed round shuffles on ceil(|sym| /
+    _LOOP_ROWS_PER_PARTITION) partitions, clamped to the session's
+    shuffle.partitions, set on the frames alone: the session conf is
+    unchanged and the labels equal the driver leg's."""
+    edges = spark.createDataFrame(EDGES, "src string, dst string")
+    _on_leg(monkeypatch, "driver")
+    driver = _labels(connected_components(edges))
+    _on_leg(monkeypatch, "distributed")
+    monkeypatch.setattr(cc_mod, "_BROADCAST_LABEL_LIMIT", 0)
+    session_parts = spark.conf.get("spark.sql.shuffle.partitions")
+    n_sym = 2 * len(EDGES)
+    for rows, want in ((5, -(-n_sym // 5)), (1, int(session_parts))):
+        monkeypatch.setattr(cc_mod, "_LOOP_ROWS_PER_PARTITION", rows)
+        for pj in (False, True):
+            labels = connected_components(edges, pointer_jump=pj)
+            assert labels.rdd.getNumPartitions() == want, (rows, pj)
+            assert _labels(labels) == driver, (rows, pj)
+    assert spark.conf.get("spark.sql.shuffle.partitions") == session_parts
 
 
 def test_broadcast_label_hint_parity(spark, monkeypatch):
