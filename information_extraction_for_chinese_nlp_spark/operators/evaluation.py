@@ -13,6 +13,8 @@ from typing import Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..session import local_frame
+
 
 def eval_counts(
     pred: DataFrame,
@@ -103,8 +105,8 @@ def threshold_sweep(
     `strategy_threshold`.
     """
     spark = pred.sparkSession
-    grid = spark.createDataFrame(
-        [(float(t),) for t in thresholds], "threshold double"
+    grid = local_frame(
+        spark, [(float(t),) for t in thresholds], "threshold double"
     )
     # Join gold ONCE at 1× prediction volume and explode the grid AFTER:
     # exploding first would multiply the key-shuffle of the gold join by

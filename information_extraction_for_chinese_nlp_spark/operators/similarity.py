@@ -25,6 +25,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..functions.hashing import md5_long
+from ..session import local_frame
 
 
 def _dot(a, b):
@@ -531,7 +532,8 @@ def save_ivf_index(io, assigned: DataFrame, centroids: list,
     """
     spark = assigned.sparkSession
     io.write(assigned, f"{name}_assignments")
-    cent_df = spark.createDataFrame(
+    cent_df = local_frame(
+        spark,
         [(i, [float(x) for x in c]) for i, c in enumerate(centroids)],
         "cell int, embedding array<double>",
     )

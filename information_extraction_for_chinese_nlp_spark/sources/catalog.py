@@ -1,4 +1,4 @@
-"""Table IO: testdata loaders and an Iceberg-or-parquet writer facade.
+"""Table IO: source readers, sinks and an Iceberg-or-parquet writer facade.
 
 The design target is Iceberg (snapshot lineage, hidden partitioning);
 this sandbox has no Iceberg runtime jar, so ``TableIO`` falls back to
@@ -14,21 +14,6 @@ import uuid
 from typing import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
-
-TESTDATA_TABLES = [
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings",
-]
-
-
-def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
-
-
-def register_views(spark: SparkSession, sf_dir: str,
-                   tables: Sequence[str] = TESTDATA_TABLES) -> None:
-    for t in tables:
-        load_table(spark, sf_dir, t).createOrReplaceTempView(t)
 
 
 def read_text_lines(spark: SparkSession, path: str) -> DataFrame:
@@ -203,7 +188,7 @@ class TableIO:
     # Error classes that mean "this table was never written". Anything
     # else (e.g. column resolution on a schema-damaged watermark table)
     # must PROPAGATE: misreading it as 'never written' would make
-    # watermarks() return empty and _prune_orphan_snapshots then drop
+    # watermarks() return empty and ResumableRunner.run then prune
     # every acked snapshot — silently discarding completed work.
     _MISSING_TABLE_CLASSES = (
         "TABLE_OR_VIEW_NOT_FOUND",

@@ -408,3 +408,79 @@ def test_broadcast_label_hint_parity(spark, monkeypatch):
             m.setattr(cc_mod, "_BROADCAST_LABEL_LIMIT", 0)
             plain = _labels(connected_components(edges, pointer_jump=pj))
         assert hinted == plain == driver, pj
+
+
+def _optimized_plan(df) -> str:
+    return df._jdf.queryExecution().optimizedPlan().toString()
+
+
+def _assert_local_relation(df):
+    plan = _optimized_plan(df)
+    assert plan.startswith("LocalRelation") and "LogicalRDD" not in plan, plan
+
+
+_LONG_ID = "長" * 300
+# string ids with CJK text and long ids, bigint ids at both ends of the
+# range, and no edges at all
+LABEL_CASES = {
+    "cjk_strings": ("string", [
+        ("醫療費用", "九萬八千元"), ("九萬八千元", "98,532元"),
+        ("慰撫金", "精神慰撫金額"), (_LONG_ID, _LONG_ID + "元"),
+        (_LONG_ID + "元", "醫療費用"), ("薪資", "薪資"),
+    ]),
+    "bigint": ("long", [
+        (2**63 - 1, 2**62), (-(2**63), 2**62), (7, 8), (8, 9), (5, 5),
+    ]),
+    "empty": ("string", []),
+}
+
+
+@pytest.mark.parametrize("case", sorted(LABEL_CASES))
+def test_driver_leg_labels_are_a_local_relation(spark, monkeypatch, case):
+    """The driver leg's labels are built from an Arrow table: the
+    optimized plan is a LocalRelation (a pickled LogicalRDD would start
+    Python workers in every job that reads the labels), and the rows
+    equal _local_components on the same edges, id values unchanged."""
+    from information_extraction_for_chinese_nlp_spark.session import local_frame
+
+    id_type, rows = LABEL_CASES[case]
+    edges = local_frame(spark, rows, f"src {id_type}, dst {id_type}")
+    _on_leg(monkeypatch, "driver")
+    labels = connected_components(edges)
+    _assert_local_relation(labels)
+    assert _labels(labels) == sorted(cc_mod._local_components(rows))
+    assert [f.dataType for f in labels.schema] == [edges.schema["src"].dataType] * 2
+
+
+@pytest.mark.parametrize("case", sorted(LABEL_CASES))
+def test_merge_relabel_map_is_a_local_relation(spark, monkeypatch, case):
+    """merge_components' driver fold broadcasts a relabel map built from
+    an Arrow table: a LocalRelation equal to _local_components of the
+    probed contraction edges; over local-frame inputs no LogicalRDD
+    appears anywhere in the merged plan, and the merge equals a full
+    recompute."""
+    from information_extraction_for_chinese_nlp_spark.session import local_frame
+
+    id_type, rows = LABEL_CASES[case]
+    schema = f"src {id_type}, dst {id_type}"
+    old, new = rows[: len(rows) // 2], rows[len(rows) // 2:]
+    old_df, new_df = local_frame(spark, old, schema), local_frame(spark, new, schema)
+    maps = []
+    real = cc_mod._driver_labels
+
+    def spy(spark_, edge_rows, *args):
+        out = real(spark_, edge_rows, *args)
+        maps.append((edge_rows, out))
+        return out
+
+    monkeypatch.setattr(cc_mod, "_driver_labels", spy)
+    prev = connected_components(old_df)
+    maps.clear()
+    merged = merge_components(prev, new_df)
+    assert len(maps) == 1
+    probe, relabel = maps[0]
+    _assert_local_relation(relabel)
+    assert relabel.columns == ["_key", "_new"]
+    assert _labels(relabel) == sorted(cc_mod._local_components(probe))
+    assert "LogicalRDD" not in _optimized_plan(merged)
+    assert _labels(merged) == _labels(connected_components(old_df.union(new_df)))

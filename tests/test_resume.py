@@ -189,5 +189,110 @@ def test_reset_after_external_overwrite(spark, tmp_path):
     assert out.count() == 40
     assert out.select("conv_id").distinct().count() == 40
 
+
+class StopBeforeAck(RuntimeError):
+    pass
+
+
+def _stopped_warehouse(spark, path, data, stop_at_ack=2):
+    """An 8-bucket run stopped inside the crash window of its
+    ``stop_at_ack``-th batch: that batch's output snapshot is appended,
+    its ack never written (how kgbench's kg_resume stops its run)."""
+
+    class StoppingTableIO(TableIO):
+        acks = 0
+
+        def write(self, df, table, mode="overwrite", **kw):
+            if table.endswith("__wm") and mode == "append":
+                self.acks += 1
+                if self.acks == stop_at_ack:
+                    raise StopBeforeAck()
+            return super().write(df, table, mode=mode, **kw)
+
+    runner = ResumableRunner(spark, StoppingTableIO(spark, path), "out", n_buckets=8)
+    with pytest.raises(StopBeforeAck):
+        runner.run(data, lambda df: df, buckets_per_batch=4)
+    return TableIO(spark, path)
+
+
+def _keyed_rows(spark, n=80):
+    from pyspark.sql import functions as F
+
+    return spark.range(n).select(
+        F.concat(F.lit("c"), "id").alias("conv_id"), F.col("id").alias("v")
+    )
+
+
+def _optimized_plan(df) -> str:
+    return df._jdf.queryExecution().optimizedPlan().toString()
+
+
+def test_watermark_ack_is_a_local_relation(spark, tmp_path, monkeypatch):
+    """The ack frame every batch appends plans as a LocalRelation: a
+    pickled LogicalRDD would start Python workers in the ack's write
+    job. The acked rows round-trip exactly."""
+    acks = []
+    write = TableIO.write
+
+    def spy(self, df, table, mode="overwrite", **kw):
+        if table.endswith("__wm"):
+            acks.append(df)
+        return write(self, df, table, mode=mode, **kw)
+
+    monkeypatch.setattr(TableIO, "write", spy)
+    io = TableIO(spark, str(tmp_path / "wh"))
+    runner = ResumableRunner(spark, io, "out", n_buckets=4)
+    runner.run(_keyed_rows(spark), lambda df: df, buckets_per_batch=2)
+    wm = runner.watermarks().collect()
+    assert sorted(r.bucket for r in wm) == list(range(4))
+    assert sum(r.snapshot_rows for r in {r.snapshot_id: r for r in wm}.values()) == 80
+    # reset()'s empty overwrite and a never-written table's empty
+    # watermarks are local frames as well
+    runner.reset()
+    frames = acks + [ResumableRunner(spark, io, "never_written").watermarks()]
+    assert len(frames) == 4  # 2 acks, 1 reset, 1 empty read
+    for df in frames:
+        plan = _optimized_plan(df)
+        assert "LocalRelation" in plan and "LogicalRDD" not in plan, plan
+
+
+# Spark jobs of ResumableRunner.run, measured with get_spark's defaults
+# (AQE on) on local[4]. One-batch resume: the watermark scan (its
+# footer-reading schema job + the collect), the output snapshot write,
+# the snapshot row count (schema job + the count's two AQE stages) and
+# the ack write. A watermark read per question (prune, done buckets)
+# made these 11 and 6.
+_RESUME_ONE_BATCH_JOBS = 7
+_RUN_ALL_DONE_JOBS = 2
+
+
+def test_resume_one_batch_job_count(spark, tmp_path, count_jobs):
+    """Resuming a stopped 8-bucket run (one batch of 4 buckets left, its
+    orphan snapshot pruned) runs a pinned number of Spark jobs."""
+    data = _keyed_rows(spark)
+    io = _stopped_warehouse(spark, str(tmp_path / "wh"), data)
+    runner = ResumableRunner(spark, io, "out", n_buckets=8)
+    written, n_jobs = count_jobs(
+        lambda: runner.run(data, lambda df: df, buckets_per_batch=4))
+    assert runner.done_buckets() == set(range(8))
+    assert io.read("out").count() == 80 and 0 < written < 80
+    assert n_jobs <= _RESUME_ONE_BATCH_JOBS, n_jobs
+
+
+def test_run_on_done_warehouse_scans_watermarks_once(spark, tmp_path, count_jobs):
+    """On a warehouse where every bucket is done, run is one watermark
+    scan: its schema (footer) job plus the collect that yields both the
+    acked snapshot ids and the done buckets."""
+    data = _keyed_rows(spark)
+    io = TableIO(spark, str(tmp_path / "wh"))
+    ResumableRunner(spark, io, "out", n_buckets=8).run(
+        data, lambda df: df, buckets_per_batch=4)
+    snaps = io.snapshots("out")
+    written, n_jobs = count_jobs(
+        lambda: ResumableRunner(spark, io, "out", n_buckets=8).run(
+            data, lambda df: df, buckets_per_batch=4))
+    assert written == 0 and io.snapshots("out") == snaps
+    assert n_jobs <= _RUN_ALL_DONE_JOBS, n_jobs
+
 # e2e / streaming / property-heavy: excluded from the fast inner-loop tier
 pytestmark = pytest.mark.slow
